@@ -1441,8 +1441,8 @@ def q_host_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/C4-style repetition + shape gates per document — word-count
     bounds, mean-word-length band, distinct-word fraction, modal-bigram
-    fraction, alphabetic-word fraction, combined pass verdict. Pure
-    Catalyst (bigram mode via sorted-array fold, no shuffle)."""
+    fraction, alphabetic-word fraction, combined pass verdict. One
+    Arrow-batched Python kernel (hash-counted bigram mode), no shuffle."""
     from commoncrawl_fetcher_lite_spark.operators.text import gopher_quality
 
     g = gopher_quality(_t(spark, sf_dir, "documents"))
@@ -1766,7 +1766,8 @@ def entry(spark: SparkSession) -> DataFrame:
 def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher repetition filters per document: modal n-gram occurrence
     share (n=2,3,4) + duplicated n-gram occurrence share (n=5,10) +
-    combined rep_pass verdict — map-only sorted-array folds, no shuffle."""
+    combined rep_pass verdict — one map-only Arrow-batched Python kernel
+    (hash-counted n-grams), no shuffle."""
     from commoncrawl_fetcher_lite_spark.operators.text import repetition_signals
 
     r = repetition_signals(_t(spark, sf_dir, "documents"))

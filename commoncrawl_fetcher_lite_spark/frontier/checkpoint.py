@@ -46,6 +46,7 @@ each written delta/base) in the manifest.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
@@ -362,12 +363,15 @@ class SnapshotStore:
                     os.path.join(self._table_dir(snap, name), "upsert"),
                 )
             )
-        paths = [p for _, _, p in writes]
-        if len(set(paths)) != len(paths):
-            # e.g. the same table passed to both appends= and mor= would
-            # target one "add" dir from two writers — wrong sequentially
-            # (second write clobbers the first) and a race concurrently
-            raise ValueError("commit: duplicate write path in one commit")
+        paths = [os.path.normpath(p) for _, _, p in writes]
+        for a, b in itertools.combinations(paths, 2):
+            # equal or nested paths, e.g. the same table passed to both
+            # appends= and mor= (one "add" dir, two writers), or tables=
+            # {t} plus a delta on t (snap=N/t and snap=N/t/add): wrong
+            # sequentially (the base overwrite deletes the delta) and a
+            # race on the write pool
+            if os.path.commonpath([a, b]) in (a, b):
+                raise ValueError(f"commit: overlapping write paths {a} and {b}")
         if len(writes) > 1:
             from concurrent.futures import ThreadPoolExecutor
 

@@ -1,6 +1,10 @@
 """Text analysis operators: language-ID heuristic, quality scoring, token
-counting, document fingerprinting. All pure Catalyst expressions so they
-run inside whole-stage codegen over 100 TB text scans.
+counting, document fingerprinting. Pure Catalyst expressions, so they run
+inside whole-stage codegen over 100 TB text scans — except the Gopher
+gates (gopher_quality, gopher_gate, repetition_signals). Their n-gram
+counts need chains of higher-order functions, which Spark cannot compile
+and interprets row by row; they run as Arrow-batched Python kernels
+instead (measured, see the Gopher section).
 
 Model-scorer seam (VERDICT r4 #4): production pipelines key corpus
 decisions off fastText/KenLM-class model scores, not marker heuristics.
@@ -16,8 +20,12 @@ the pure-Catalyst heuristic.
 
 from __future__ import annotations
 
+import functools
+import re
+from collections import Counter
 from typing import Callable, Iterator
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -53,10 +61,7 @@ def tokens_nonempty(text_col: str | Column) -> Column:
     SLOWER than the filter (the \\s+$ alternation rescans the whole
     string). Identical values to filter(tokens(t), x != '') on every
     input — property-tested including blank/whitespace-only strings.
-    Honest perf note (BENCH/BASELINE.md r6 probe): on the gopher GATE
-    kernel this is perf-neutral at the min (1.81 vs 1.84 s / 100k docs —
-    the bigram sort/run machinery dominates that kernel, not the token
-    copy); the saved allocation only matters to token-only consumers."""
+    The Gopher kernels' _split_tokens is the same rule in Python."""
     from commoncrawl_fetcher_lite_spark.functions.letbind import let
 
     c = F.col(text_col) if isinstance(text_col, str) else text_col
@@ -440,6 +445,133 @@ def corpus_stats(
     )
 
 
+# ------------------------------------------------------------ Gopher gates
+#
+# gopher_quality, gopher_gate and repetition_signals run as Arrow-batched
+# pure-Python kernels (one scalar arrow_udf per operator, struct out). The
+# Catalyst form they replace — sorted n-gram arrays folded to run lengths
+# by chains of higher-order functions — was CodegenFallback: Spark
+# interpreted it row by row, and it was the most expensive step of corpus
+# preparation. On 4,506 fetched docs (4-core box, local[3], median of 7
+# reps, two runs per side) the kernels measured gopher_quality
+# 0.68 → 0.52 s, repetition_signals 2.1 → 0.40 s and the two joined
+# 2.9 → 0.78 s, with identical values and schemas.
+
+# Java's \s, the class tokens_nonempty splits on, is [ \t\n\x0b\f\r];
+# str.split() also splits on the code points below, which Java keeps
+# inside a token.
+_PY_ONLY_SPACE = re.compile(
+    "[\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+).search
+_TOKEN = re.compile(r"[^ \t\n\x0b\f\r]+").findall
+# whole tokens with no [A-Za-z] character (the rlike("[A-Za-z]") test)
+_NON_ALPHA_TOKEN = re.compile(
+    r"(?<![^ \t\n\x0b\f\r])[^ \t\n\x0b\f\rA-Za-z]+(?![^ \t\n\x0b\f\r])"
+).findall
+
+
+def _split_tokens(text: str) -> list[str]:
+    """tokens_nonempty's tokens: split on Java's \\s, empty tokens dropped.
+    str.split() is the fast path for text without Python-only whitespace."""
+    return _TOKEN(text) if _PY_ONLY_SPACE(text) else text.split()
+
+
+def _ngram_repeats(toks: list[str], ns) -> dict[int, tuple[int, int, int]]:
+    """Per n: (modal n-gram count, occurrences of n-grams seen twice or
+    more, n-gram total), counted with a hash counter. Once every m-gram is
+    distinct, so is every longer n-gram (its m-prefix is), and the count
+    is skipped."""
+    out = {}
+    distinct_from = None
+    for n in sorted(set(ns)):
+        total = max(len(toks) - n + 1, 0)
+        if distinct_from is not None:
+            out[n] = (min(total, 1), 0, total)
+            continue
+        counts = list(Counter(zip(*(toks[i:] for i in range(n)))).values())
+        singles = counts.count(1)
+        if singles == len(counts):
+            distinct_from = n
+        out[n] = (max(counts, default=0), total - singles, total)
+    return out
+
+
+def _arrow_kernel(fields: list[T.StructField], row: Callable) -> Callable:
+    """Scalar Arrow UDF: a text column in, struct<fields> out, `row(text)`
+    giving each row's field tuple."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    arrow_fields = [pa.field(f.name, to_arrow_type(f.dataType)) for f in fields]
+
+    @F.arrow_udf(T.StructType(fields))
+    def kernel(texts: pa.Array) -> pa.Array:
+        cols = list(zip(*map(row, texts.to_pylist()))) or [()] * len(fields)
+        return pa.StructArray.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow_fields)],
+            fields=arrow_fields,
+        )
+
+    return kernel
+
+
+def _apply_kernel(docs: DataFrame, kernel, text_col: str, id_col: str) -> DataFrame:
+    from commoncrawl_fetcher_lite_spark.functions.letbind import spread_for_compute
+
+    # spread first: a small-file scan arrives as 1-2 partitions and would
+    # run the kernel on 1-2 cores
+    return (
+        spread_for_compute(docs)
+        .select(id_col, kernel(F.col(text_col)).alias("_k"))
+        .select(id_col, "_k.*")
+    )
+
+
+_GOPHER_FIELDS = [
+    T.StructField("n_words", T.IntegerType()),
+    T.StructField("mean_word_len", T.DoubleType()),
+    T.StructField("distinct_frac", T.DoubleType()),
+    T.StructField("top2gram_frac", T.DoubleType()),
+    T.StructField("alpha_word_frac", T.DoubleType()),
+    T.StructField("gopher_pass", T.BooleanType()),
+]
+
+
+def _gopher_row(
+    text: str | None,
+    min_words: int,
+    max_words: int,
+    min_mean_word_len: float,
+    max_mean_word_len: float,
+    min_distinct_frac: float,
+    max_top2gram_frac: float,
+    min_alpha_word_frac: float,
+) -> tuple:
+    toks = [] if text is None else _split_tokens(text)
+    n = len(toks)
+    mean = distinct = top2 = alpha = 0.0
+    if n:
+        mean = sum(map(len, toks)) / n
+        distinct = len(set(toks)) / n
+        alpha = (n - len(_NON_ALPHA_TOKEN(text))) / n
+    if n >= 2:
+        top2 = max(Counter(zip(toks, toks[1:])).values()) / (n - 1)
+    shape = (
+        min_mean_word_len <= mean <= max_mean_word_len
+        and distinct >= min_distinct_frac
+        and top2 <= max_top2gram_frac
+        and alpha >= min_alpha_word_frac
+    )
+    if text is None:
+        # SQL three-valued logic: the word count of NULL text is NULL, so
+        # the verdict is NULL unless another test already fails
+        return None, mean, distinct, top2, alpha, (None if shape else False)
+    return n, mean, distinct, top2, alpha, shape and min_words <= n <= max_words
+
+
+def _gopher_kernel(**thresholds) -> Callable:
+    return _arrow_kernel(_GOPHER_FIELDS, functools.partial(_gopher_row, **thresholds))
+
+
 def gopher_quality(
     docs: DataFrame,
     text_col: str = "text",
@@ -456,161 +588,26 @@ def gopher_quality(
     thresholds where they transfer; the repetition rule here is the
     bigram variant): per document — word count bounds, mean word length
     band, distinct-word fraction, most-common-bigram fraction, and the
-    fraction of words containing an alphabetic character — plus the
-    combined `gopher_pass` verdict.
+    fraction of words containing an [A-Za-z] character — plus the
+    combined `gopher_pass` verdict. Words are tokens_nonempty's tokens.
 
-    Everything is ONE let-bound token array evaluated once per row, pure
-    Catalyst (the bigram mode is computed by sorting the bigram array and
-    folding the longest equal-run with F.aggregate — no explode, no
-    groupBy, no shuffle: at 100 TB this stays a map-only scan stage).
+    One Arrow-batched kernel pass per row (see the section comment): no
+    explode, no groupBy, no shuffle, a map-only stage at any scale.
     top2gram_frac is the modal bigram's share of bigram OCCURRENCES
     (best/(n-1)), not Gopher's character-coverage share — documented
     divergence, identical gating intent, SQL-expressible for the oracle.
+    NULL text gives NULL n_words, 0.0 fractions and a false verdict.
     """
-    from commoncrawl_fetcher_lite_spark.functions.letbind import let
-
-    t = F.col(text_col)
-    _feats = _gopher_feats_fn(
-        min_words,
-        max_words,
-        min_mean_word_len,
-        max_mean_word_len,
-        min_distinct_frac,
-        max_top2gram_frac,
-        min_alpha_word_frac,
+    kernel = _gopher_kernel(
+        min_words=min_words,
+        max_words=max_words,
+        min_mean_word_len=min_mean_word_len,
+        max_mean_word_len=max_mean_word_len,
+        min_distinct_frac=min_distinct_frac,
+        max_top2gram_frac=max_top2gram_frac,
+        min_alpha_word_frac=min_alpha_word_frac,
     )
-    from commoncrawl_fetcher_lite_spark.functions.letbind import (
-        spread_for_compute,
-    )
-
-    toks_expr = tokens_nonempty(t)
-    # spread before the per-row gate machinery (r7): sf-scale documents
-    # scans arrive as 1-2 partitions — measured 3.4 s → 0.5 s at sf1.0
-    return spread_for_compute(docs).select(
-        id_col, F.inline(F.array(let(toks_expr, _feats)))
-    )
-
-
-def _modal_run_stats(grams_expr: Column, body) -> Column:
-    """Equal-run statistics over a SORTED gram array via run-length
-    arithmetic, shared by gopher's modal-bigram feature and
-    repetition_signals: run starts = positions where the sorted list
-    changes, run lengths = adjacent-start differences. Calls
-    `body(best, dup)` with the modal run length and the count of
-    occurrences inside runs of length >= 2. Every intermediate
-    (grams, starts, runs) is let-bound so it evaluates exactly once per
-    row — the struct-accumulator F.aggregate fold this replaces measured
-    ~5-6× slower (interpreted per-element struct rebuilds, re-run per
-    downstream reference).
-
-    The i-1 lookup is guarded with greatest(): Catalyst OR does not
-    short-circuit, and ANSI element_at(g, 0) throws — the i==1 disjunct
-    already decides that element, the guard only keeps the index legal."""
-    from commoncrawl_fetcher_lite_spark.functions.letbind import let
-
-    def _from_grams(g):
-        L = F.size(g)
-        starts_expr = F.when(
-            L > 0,
-            F.filter(
-                F.sequence(F.lit(1), L),
-                lambda i: (i == F.lit(1))
-                | (
-                    F.element_at(g, i)
-                    != F.element_at(g, F.greatest(i - 1, F.lit(1)))
-                ),
-            ),
-        ).otherwise(F.array().cast("array<int>"))
-
-        def _from_starts(st):
-            k = F.size(st)
-            ext = F.concat(st, F.array(L + 1))
-            runs_expr = F.zip_with(
-                F.slice(ext, 1, k), F.slice(ext, 2, k), lambda a, b: b - a
-            )
-
-            def _from_runs(r):
-                best = F.coalesce(F.array_max(r), F.lit(0))
-                dup = L - F.size(F.filter(r, lambda x: x == 1))
-                return body(best, dup)
-
-            return let(runs_expr, _from_runs)
-
-        return let(starts_expr, _from_starts)
-
-    return let(grams_expr, _from_grams)
-
-
-def _gopher_feats_fn(
-    min_words: int,
-    max_words: int,
-    min_mean_word_len: float,
-    max_mean_word_len: float,
-    min_distinct_frac: float,
-    max_top2gram_frac: float,
-    min_alpha_word_frac: float,
-):
-    """Shared Gopher feature-struct builder (gopher_quality emits the
-    whole struct; gopher_gate projects just the verdict). The modal
-    bigram count rides the shared _modal_run_stats machinery."""
-
-    def _feats(toks):
-        n = F.size(toks)
-        mean_len = F.when(
-            n > 0,
-            F.aggregate(
-                toks, F.lit(0), lambda acc, x: acc + F.length(x)
-            ).cast("double")
-            / n,
-        ).otherwise(F.lit(0.0))
-        distinct_frac = F.when(
-            n > 0, F.size(F.array_distinct(toks)).cast("double") / n
-        ).otherwise(F.lit(0.0))
-        alpha_frac = F.when(
-            n > 0,
-            F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]"))).cast(
-                "double"
-            )
-            / n,
-        ).otherwise(F.lit(0.0))
-        # bigrams: zip toks with its own tail; concat nulls out the
-        # padded last slot, filter drops it
-        grams_expr = F.array_sort(
-            F.filter(
-                F.zip_with(
-                    toks,
-                    F.slice(toks, 2, F.greatest(n - 1, F.lit(0))),
-                    lambda a, b: F.concat(a, F.lit(" "), b),
-                ),
-                lambda g: g.isNotNull(),
-            )
-        )
-
-        def _build(best, dup):
-            top2 = F.when(
-                n >= 2, best.cast("double") / (n - 1).cast("double")
-            ).otherwise(F.lit(0.0))
-            gate = (
-                (n >= min_words)
-                & (n <= max_words)
-                & (mean_len >= min_mean_word_len)
-                & (mean_len <= max_mean_word_len)
-                & (distinct_frac >= min_distinct_frac)
-                & (top2 <= max_top2gram_frac)
-                & (alpha_frac >= min_alpha_word_frac)
-            )
-            return F.struct(
-                n.alias("n_words"),
-                mean_len.alias("mean_word_len"),
-                distinct_frac.alias("distinct_frac"),
-                top2.alias("top2gram_frac"),
-                alpha_frac.alias("alpha_word_frac"),
-                gate.alias("gopher_pass"),
-            )
-
-        return _modal_run_stats(grams_expr, _build)
-
-    return _feats
+    return _apply_kernel(docs, kernel, text_col, id_col)
 
 
 def gopher_gate(
@@ -623,8 +620,8 @@ def gopher_gate(
     max_top2gram_frac: float = 0.20,
     min_alpha_word_frac: float = 0.80,
 ) -> Column:
-    """gopher_quality's pass verdict as a pure predicate Column for
-    `.where()` — the gate stays INSIDE the scan, zero shuffle.
+    """gopher_quality's pass verdict as a predicate Column for `.where()`
+    — the same kernel, evaluated inside the scan's stage, zero shuffle.
 
     Shape guidance (measured, BENCH/BASELINE.md corpus-prep section):
     for filter → map-only sinks (gate → write, gate → chunk) this
@@ -637,20 +634,28 @@ def gopher_gate(
     On a multi-node cluster the trade tilts back toward the predicate as
     network-shuffle cost rises against free-scaling recompute — both
     forms exist so the deployment can pick."""
-    from commoncrawl_fetcher_lite_spark.functions.letbind import let
-
     t = F.col(text_col) if isinstance(text_col, str) else text_col
-    _feats = _gopher_feats_fn(
-        min_words,
-        max_words,
-        min_mean_word_len,
-        max_mean_word_len,
-        min_distinct_frac,
-        max_top2gram_frac,
-        min_alpha_word_frac,
+    kernel = _gopher_kernel(
+        min_words=min_words,
+        max_words=max_words,
+        min_mean_word_len=min_mean_word_len,
+        max_mean_word_len=max_mean_word_len,
+        min_distinct_frac=min_distinct_frac,
+        max_top2gram_frac=max_top2gram_frac,
+        min_alpha_word_frac=min_alpha_word_frac,
     )
-    toks_expr = tokens_nonempty(t)
-    return let(toks_expr, lambda toks: _feats(toks)["gopher_pass"])
+    return kernel(t)["gopher_pass"]
+
+
+def _repetition_row(text: str | None, specs: list[tuple[str, int, float]]) -> tuple:
+    stats = _ngram_repeats(
+        [] if text is None else _split_tokens(text), [n for _, n, _ in specs]
+    )
+    fracs = []
+    for kind, n, _ in specs:
+        best, dup, total = stats[n]
+        fracs.append((best if kind == "top" else dup) / total if total else 0.0)
+    return (*fracs, all(f <= thr for f, (_, _, thr) in zip(fracs, specs)))
 
 
 def repetition_signals(
@@ -672,80 +677,25 @@ def repetition_signals(
     Fractions are over n-gram OCCURRENCES, not Gopher's character
     coverage — same documented divergence as gopher_quality's
     top2gram_frac: identical gating intent, and occurrence fractions are
-    SQL-expressible so the DuckDB oracle reproduces them exactly.
+    SQL-expressible so the DuckDB oracle reproduces them exactly. A text
+    with fewer than n tokens (or NULL text) has fraction 0.0 for that n.
 
-    Shape: ONE let-bound token array per row; each n gets one sorted
-    n-gram array reduced to run-length statistics with ARRAY arithmetic —
-    run starts = positions where the sorted list changes, run lengths =
-    adjacent-start differences, modal count = max run, duplicated
-    occurrences = total − count(runs of length 1). Every intermediate is
-    let-bound so it evaluates exactly once per row (a struct-accumulator
-    F.aggregate fold here measured ~5-6× slower at sf0.1: interpreted
-    per-element struct rebuilds, and every downstream reference re-ran
-    the whole fold). No explode, no groupBy, no shuffle: a map-only scan stage at
-    any scale.
+    Shape: one Arrow-batched kernel pass per row over tokens_nonempty's
+    tokens, one hash count of the n-grams per n (section comment). No
+    explode, no groupBy, no shuffle: a map-only stage at any scale.
     """
-    from commoncrawl_fetcher_lite_spark.functions.letbind import let
-
     if len(top_ns) != len(top_thresholds) or len(dup_ns) != len(dup_thresholds):
         raise ValueError("repetition_signals: ns/thresholds length mismatch")
-
-    def _run_stats(toks: Column, n: int) -> Column:
-        """struct(best, dup, total) over the doc's n-grams via the shared
-        _modal_run_stats run-length machinery."""
-        from commoncrawl_fetcher_lite_spark.operators.dedup import gram_chain
-
-        total = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-        # r7: chained-zip_with gram build (see dedup.gram_chain) — one
-        # concat per element instead of an n-element slice copy; coalesce
-        # keeps the old empty-array-on-null contract
-        grams_expr = F.array_sort(
-            F.coalesce(gram_chain(toks, n), F.array().cast("array<string>"))
-        )
-        return _modal_run_stats(
-            grams_expr,
-            lambda best, dup: F.struct(
-                best.alias("best"), dup.alias("dup"), total.alias("total")
-            ),
-        )
-
+    if min((*top_ns, *dup_ns), default=1) < 1:
+        raise ValueError("repetition_signals: n-gram sizes must be >= 1")
     specs = [("top", n, thr) for n, thr in zip(top_ns, top_thresholds)] + [
         ("dup", n, thr) for n, thr in zip(dup_ns, dup_thresholds)
     ]
-
-    def _feats(toks: Column) -> Column:
-        # bind every per-n stats struct before building the output, so no
-        # stats expression is ever evaluated more than once per row
-        def _build(i: int, bound: list[Column]) -> Column:
-            if i == len(specs):
-                cols = []
-                gates = F.lit(True)
-                for (kind, n, thr), s in zip(specs, bound):
-                    num = s["best"] if kind == "top" else s["dup"]
-                    frac = F.when(
-                        s["total"] > 0, num.cast("double") / s["total"]
-                    ).otherwise(F.lit(0.0))
-                    cols.append(frac.alias(f"{kind}_{n}gram_frac"))
-                    gates = gates & (frac <= F.lit(float(thr)))
-                return F.struct(*cols, gates.alias("rep_pass"))
-            _, n, _ = specs[i]
-            return let(
-                _run_stats(toks, n), lambda s: _build(i + 1, bound + [s])
-            )
-
-        return _build(0, [])
-
-    from commoncrawl_fetcher_lite_spark.functions.letbind import (
-        spread_for_compute,
-    )
-
-    toks_expr = tokens_nonempty(F.col(text_col))
-    # spread before the per-row run-length machinery (r7): measured
-    # 18.3 s → 2.1 s at sf1.0 — the scan arrived as 2 partitions and the
-    # whole map stage ran on 2 of 32 cores
-    return spread_for_compute(docs).select(
-        id_col, F.inline(F.array(let(toks_expr, _feats)))
-    )
+    fields = [
+        T.StructField(f"{kind}_{n}gram_frac", T.DoubleType()) for kind, n, _ in specs
+    ] + [T.StructField("rep_pass", T.BooleanType())]
+    kernel = _arrow_kernel(fields, functools.partial(_repetition_row, specs=specs))
+    return _apply_kernel(docs, kernel, text_col, id_col)
 
 
 def tfidf_topk(

@@ -8,7 +8,9 @@ seeds → scan cdx .gz → parse → select (compiled Column) → budget prefix 
 
 Everything before the fetch UDF is pure Catalyst: the selector predicate
 runs against the text scan, so at 100 TB only the selected minority ever
-reaches Python. Metrics are collected via observe() — the engine analog of
+reaches Python. The budgeted rows of both branches are materialized once
+(local checkpoint), so each branch's sink reads them without re-parsing
+the index. Metrics are collected via observe() — the engine analog of
 the reference's AtomicLong counters (CCIndexReaderCounter.java:22-25).
 """
 
@@ -67,6 +69,14 @@ def run_fetch(
         extract_truncated=cfg.extract_truncated,
         per_file_lines=per_file_lines,
     )
+    # both branches below read the budgeted rows, and callers write them
+    # one after the other (docs, then the truncated log): materialize the
+    # rows of either branch once, so the second write does not re-scan,
+    # re-parse, re-select and re-budget the index. Held like any local
+    # checkpoint, O(selected rows).
+    budgeted = budgeted.where(
+        F.col("is_trunc_log_branch") | F.col("is_extract_branch")
+    ).localCheckpoint()
 
     # truncated-log branch (CCFileExtractorRecordProcessor.java:101-110):
     # url + normalized mimes + warc coords. Mimes normalized as the

@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """A quarter of physical memory (MemTotal), at most 48g. In local mode
+    this one JVM heap holds every executor's data; a heap larger than the
+    box lets the JVM grow past free memory and get OOM-killed instead of
+    collecting."""
+    try:
+        total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):
+        return "48g"
+    return f"{min(48 * 1024, max(1024, total // 4 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "commoncrawl_fetcher_lite_spark",
     cores: int | None = None,
@@ -38,7 +50,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -273,10 +273,29 @@ def test_repetition_signals_hand_computed(spark):
             # all-distinct tokens: modal bigram 1/(n-1), zero dup
             (1, "q w e r t y u i o p"),
             (2, ""),  # empty: all fracs 0, passes
+            (3, None),  # NULL text: as empty
+            (4, " \t\n\x0b\f\r "),  # only separators: as empty
+            # each Java \s separates: x y x y x y, bigram "x y" 3 of 5
+            (5, "x\ty\nx\x0by\fx\ry"),
+            # \xa0, \u2003 and \x1c stay inside a token: 2 tokens, 1 bigram
+            (6, "a\xa0b c\u2003d\x1ce"),
+            # 4 tokens: fewer than 5 or 10, so no 5-/10-gram
+            (7, "a b c d"),
+            (8, "solo"),  # fewer tokens than every n
         ],
         "doc_id long, text string",
     )
     out = {r.doc_id: r for r in repetition_signals(docs).collect()}
+    fracs = [f"top_{n}gram_frac" for n in (2, 3, 4)] + [
+        f"dup_{n}gram_frac" for n in (5, 10)
+    ]
+    for i in (2, 3, 4, 8):
+        assert [out[i][c] for c in fracs] == [0.0] * 5 and out[i].rep_pass
+    assert out[5].top_2gram_frac == 3 / 5 and out[5].top_3gram_frac == 2 / 4
+    assert out[5].dup_5gram_frac == 0.0 and not out[5].rep_pass
+    assert out[6].top_2gram_frac == 1.0 and out[6].top_3gram_frac == 0.0
+    assert [out[7][c] for c in fracs] == [1 / 3, 1 / 2, 1.0, 0.0, 0.0]
+    assert not out[7].rep_pass
     assert abs(out[0].top_2gram_frac - 3 / 5) < 1e-9
     assert not out[0].rep_pass  # 0.6 > 0.20 threshold
     assert abs(out[1].top_2gram_frac - 1 / 9) < 1e-9
@@ -296,6 +315,15 @@ def test_repetition_signals_dup_fraction(spark):
     r = repetition_signals(docs).collect()[0]
     assert abs(r.dup_5gram_frac - 4 / 8) < 1e-9
     assert r.dup_10gram_frac == 0.0
+    # custom sizes, n = 1 included: the modal token x1 is 2 of 12
+    r = repetition_signals(
+        docs, top_ns=(1,), top_thresholds=(0.5,), dup_ns=(6, 7),
+        dup_thresholds=(0.9, 0.9),
+    ).collect()[0]
+    assert r.top_1gram_frac == 2 / 12 and r.dup_6gram_frac == 2 / 7
+    assert r.dup_7gram_frac == 0.0 and r.rep_pass
+    with pytest.raises(ValueError):
+        repetition_signals(docs, top_ns=(0,), top_thresholds=(0.5,))
 
 
 # ------------------------------------------------------------- chunking

@@ -527,6 +527,31 @@ def test_mor_and_upsert_resolution_semantics(spark, tmp_path):
     assert got == {"x": 5.0, "y": 2.0}
 
 
+def test_commit_rejects_overlapping_write_paths(spark, tmp_path):
+    """ADVICE r7: a full rewrite of t (snap=N/t) and a delta on t
+    (snap=N/t/add) would run on the write pool at once; equal paths (one
+    table as both append and merge-on-read add) likewise. Both are
+    rejected before anything is written."""
+    store = SnapshotStore(str(tmp_path / "st"), spark, compact_every=100)
+    df = spark.createDataFrame([(1, "a")], "k long, u string")
+    store.commit(tables={"t": df})
+    bad = [
+        {"tables": {"t": df}, "appends": {"t": df}},
+        {"tables": {"t": df}, "upserts": {"t": {"df": df, "key": ["k"]}}},
+        {
+            "appends": {"t": df},
+            "mor": {"t": {"add": df, "delete": None, "key": ["k"]}},
+        },
+    ]
+    for kw in bad:
+        with pytest.raises(ValueError, match="overlapping write paths"):
+            store.commit(**kw)
+        assert store.current_snapshot() == 0
+    # sibling tables whose names share a prefix do not overlap
+    store.commit(tables={"t": df, "t2": df}, appends={"tt": df})
+    assert store.current_snapshot() == 1
+
+
 def test_robots_allow_longest_match(spark):
     """RFC 9309 precedence: among matching prefixes the longest wins, ties
     go to Allow — the classic `Allow: /public` under `Disallow: /` admits

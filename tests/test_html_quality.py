@@ -72,6 +72,9 @@ def test_scrub_pii_boundaries(spark):
     assert got[6]["text"] == "mail admin@localhost stays (no TLD)"
 
 
+_GOPHER_FRACS = ("mean_word_len", "distinct_frac", "top2gram_frac", "alpha_word_frac")
+
+
 def test_gopher_quality_semantics(spark):
     from commoncrawl_fetcher_lite_spark.operators.text import gopher_quality
 
@@ -83,10 +86,31 @@ def test_gopher_quality_semantics(spark):
             (3, ""),  # empty -> all-zero features, fail
             (4, "12 34 " * 40),  # no alphabetic words
             (5, "tiny doc"),  # under min_words
+            # NULL text: n_words NULL (SQL size), fractions 0.0, fail
+            (6, None),
+            (7, " \t\n\x0b\f\r "),  # only separators: no words
+            (8, "a\tbb\nccc\x0bd\fe\rf"),  # each Java \s separates
+            # \xa0, \u2003 and \x1c are not Java \s: they stay in a token
+            (9, "a\xa0b c\u2003d e\x1cf"),
+            # alpha means [A-Za-z]: non-ASCII-only letters do not count
+            (10, "日本 ñé ça 12"),
+            (11, "solo"),  # one word: no bigram, top2gram_frac 0.0
         ],
         "doc_id long, text string",
     )
     got = {r["doc_id"]: r for r in gopher_quality(docs).collect()}
+    assert got[6]["n_words"] is None and got[6]["gopher_pass"] is False
+    assert [got[6][c] for c in _GOPHER_FRACS] == [0.0] * 4
+    assert got[7]["n_words"] == 0 and got[7]["gopher_pass"] is False
+    assert [got[7][c] for c in _GOPHER_FRACS] == [0.0] * 4
+    assert got[8]["n_words"] == 6 and got[8]["mean_word_len"] == 9 / 6
+    assert got[8]["top2gram_frac"] == 1 / 5
+    assert got[9]["n_words"] == 3 and got[9]["mean_word_len"] == 3.0
+    assert got[9]["distinct_frac"] == 1.0 and got[9]["alpha_word_frac"] == 1.0
+    assert got[10]["n_words"] == 4 and got[10]["alpha_word_frac"] == 1 / 4
+    assert got[10]["mean_word_len"] == 2.0
+    assert got[11]["n_words"] == 1 and got[11]["top2gram_frac"] == 0.0
+    assert got[11]["distinct_frac"] == 1.0 and got[11]["mean_word_len"] == 4.0
     assert got[1]["gopher_pass"] is True
     assert got[1]["n_words"] == 60 and got[1]["distinct_frac"] == 1.0
     assert got[2]["gopher_pass"] is False
@@ -97,28 +121,45 @@ def test_gopher_quality_semantics(spark):
     assert got[5]["gopher_pass"] is False
 
 
-def test_html_and_gopher_stay_jvm_side(spark):
-    """The extraction/quality scan path must stay whole-stage codegen:
-    no Python eval nodes, no shuffles — map-only over a 100 TB scan."""
+def test_html_jvm_side_and_gopher_one_arrow_stage(spark):
+    """The extraction/scrub scan path must stay whole-stage codegen: no
+    Python eval nodes, no shuffles — map-only over a 100 TB scan. The
+    Gopher gates run as one Arrow-batched kernel stage each, still with
+    no shuffle (gopher_quality as a frame, gopher_gate as a predicate)."""
     from commoncrawl_fetcher_lite_spark.operators.html import (
         extract_text,
         scrub_documents,
     )
-    from commoncrawl_fetcher_lite_spark.operators.text import gopher_quality
+    from commoncrawl_fetcher_lite_spark.operators.text import (
+        gopher_gate,
+        gopher_quality,
+        repetition_signals,
+    )
 
     docs = spark.createDataFrame(
         [(1, "<p>x</p>"), (2, "<p>y z</p>")], "doc_id long, html string"
     ).withColumn("text", F.col("html"))
-    for out in (
-        extract_text(docs),
-        scrub_documents(docs),
-        gopher_quality(docs),
-    ):
-        plan = out._sc._jvm.PythonSQLUtils.explainString(
+    def plan(out):
+        return out._sc._jvm.PythonSQLUtils.explainString(
             out._jdf.queryExecution(), "formatted"
         )
-        assert "Exchange" not in plan, plan
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+    for out in (extract_text(docs), scrub_documents(docs)):
+        p = plan(out)
+        assert "Exchange" not in p, p
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+    for out in (
+        gopher_quality(docs),
+        repetition_signals(docs),
+        docs.where(gopher_gate()),
+    ):
+        p = plan(out)
+        assert "Exchange" not in p, p
+        assert "BatchEvalPython" not in p
+        # one Arrow node (named in the plan overview and in the node
+        # details) evaluating one kernel call
+        assert p.count("ArrowEvalPython") == 2, p
+        assert "pythonUDF0" in p and "pythonUDF1" not in p, p
 
 
 def test_extract_links_resolution(spark):

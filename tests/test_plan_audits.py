@@ -307,6 +307,39 @@ def test_spread_for_compute_never_narrows(spark):
     assert spread_for_compute(narrow).rdd.getNumPartitions() == default
 
 
+def test_spread_for_compute_probe_starts_no_job(spark):
+    """VERDICT r7 #5: the width probe reads the planned physical plan.
+    `.rdd` on a shuffled frame would make AQE run every stage below it,
+    and the caller's query would then run them again."""
+    from commoncrawl_fetcher_lite_spark.functions.letbind import spread_for_compute
+
+    sc = spark.sparkContext
+    default = sc.defaultParallelism
+    base = spark.range(0, 1000, 1, 2)
+    small = spark.range(0, 10).withColumnRenamed("id", "k")
+    shuffled = base.groupBy((F.col("id") % 7).alias("k")).count()
+    frames = {
+        # planned hash partitioning (spark.sql.shuffle.partitions)
+        "aggregate": (shuffled, spark.conf.get("spark.sql.shuffle.partitions")),
+        "narrow shuffle": (base.repartition(1), 1),
+        # broadcast join streamed over a 2-partition scan, and a union
+        "broadcast join": (
+            base.withColumnRenamed("id", "k").join(F.broadcast(small), "k"), 2
+        ),
+        "union": (base.select("id").union(shuffled.select("k")), None),
+    }
+    for name, (df, width) in frames.items():
+        sc.setJobGroup(f"probe-{name}", name)
+        try:
+            out = spread_for_compute(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(f"probe-{name}") == [], name
+        spread = out is not df
+        if width is not None:
+            assert spread == (int(width) < default), name
+
+
 def test_host_state_bucketed_join_no_state_exchange(spark, tmp_path_factory):
     """VERDICT r5 #7: the token-refill join must not shuffle the host
     state every iteration. With the state's base as a bucketed table and

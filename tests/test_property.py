@@ -299,3 +299,35 @@ def test_tokens_nonempty_equals_filtered_tokens(spark, texts):
     ).collect()
     for r in rows:
         assert r.fast == r.ref
+
+
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    texts=st.lists(
+        st.text(
+            alphabet=st.sampled_from(
+                list("ab é \t\n\x0b\f\r\x1c\x85\xa0\u2003")
+            ),
+            max_size=40,
+        ),
+        min_size=1,
+        max_size=8,
+    )
+)
+def test_gopher_kernel_tokens_equal_tokens_nonempty(spark, texts):
+    """The Gopher kernels' Python tokenizer splits exactly where
+    tokens_nonempty does: on Java's \\s only, so whitespace that Python's
+    str.split() also splits on (\\x1c, \\x85, \\xa0, \\u2003) stays in a
+    token, and no empty token survives."""
+    from commoncrawl_fetcher_lite_spark.operators.text import (
+        _split_tokens,
+        tokens_nonempty,
+    )
+
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    got = [r.toks for r in df.select(tokens_nonempty("text").alias("toks")).collect()]
+    assert got == [_split_tokens(t) for t in texts]
