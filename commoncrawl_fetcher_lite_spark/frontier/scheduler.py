@@ -169,10 +169,12 @@ def run_iteration(
     # and those execute as SEPARATE jobs (the refill frame is
     # checkpointed below), so without this the whole candidate pipeline —
     # frontier merge-on-read resolve, robots rule fold, blocklist gate,
-    # seen anti-join — ran twice per iteration (measured: ~40% of a
-    # warm iteration at sf0.1). What is stored is O(candidates) skinny
-    # rows (url, host, priority, recrawl_score, url_hash); recomputing
-    # the regex fold + anti-join per consumer costs more at every scale.
+    # and the seen anti-join when compact_shuffles is off (the diet path
+    # anti-joins later, inside schedule_frontier_compact) — ran twice per
+    # iteration (measured: ~40% of a warm iteration at sf0.1). What is
+    # stored is O(candidates) skinny rows (url, host, priority,
+    # recrawl_score, url_hash); recomputing the regex fold (+ anti-join)
+    # per consumer costs more at every scale.
     candidates = candidates.localCheckpoint(eager=True)
 
     # token-bucket politeness (north star: "priority = recrawl score +

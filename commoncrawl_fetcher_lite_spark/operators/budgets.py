@@ -18,8 +18,10 @@ numThreads=1 canonical order — SURVEY §2.4):
 Scale design — no global sort, no giant window:
   * cum_read needs no window at all: blanks were dropped at scan, so the
     running read-count of a row is ``file_offset(seq) + line_no + 1`` where
-    file_offset is the cumulative line count of earlier files — a per-file
-    aggregate (≤ hundreds of rows) cumsum'd on the driver and broadcast.
+    file_offset is the cumulative line count of earlier files — the scan's
+    per-file counts (≤ hundreds of rows) cumsum'd on the driver. The read
+    stop is therefore known before the parse: ``stop_at_max_records``
+    applies it, to the lines (Fetch, CountMimes) or to parsed records.
   * cum_trunc / cum_extr are windows over the SELECTED subset only (a small
     fraction of the scan), two-level: per-file partial counts → driver
     cumsum → per-file window row_number, so the only shuffle is over
@@ -30,8 +32,6 @@ Scale design — no global sort, no giant window:
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -47,13 +47,34 @@ def canonical_pos(seq: Column, line_no: Column) -> Column:
     return (seq.cast("long") * F.lit(1 << _POS_SHIFT)) + line_no
 
 
-@dataclass(frozen=True)
-class BudgetResult:
-    """Rows surviving each branch after budget cutoff."""
+def stop_at_max_records(
+    df: DataFrame, per_file_lines: dict[int, int], max_records: int
+) -> DataFrame:
+    """The rows of `df` (index_file_seq + line_no over the non-blank line
+    stream) read before maxRecords trips; the tripping line is dropped.
 
-    extracted: DataFrame  # selected, extractable, before stop
-    truncated_logged: DataFrame  # selected, truncated, NOT extracted branch
-    stop_pos: int | None  # canonical position where the run stopped
+    cum_read(row) = (lines of earlier files) + line_no + 1 is pure
+    arithmetic on ``per_file_lines``, so the stop position is computed on
+    the driver and applied as one filter — to raw lines, before any parse.
+    """
+    if max_records >= LONG_MAX:
+        return df
+    stop = _read_stop(per_file_lines, max_records)
+    if stop is None:  # the run reads every line
+        return df
+    return df.where(canonical_pos(F.col("index_file_seq"), F.col("line_no")) < stop)
+
+
+def _read_stop(per_file_lines: dict[int, int], max_records: int) -> int | None:
+    """Canonical position of the line whose read trips maxRecords."""
+    if max_records <= 0:
+        return 0
+    read = 0
+    for seq in sorted(per_file_lines):
+        if read + per_file_lines[seq] >= max_records:
+            return (seq << _POS_SHIFT) + (max_records - read - 1)
+        read += per_file_lines[seq]
+    return None
 
 
 def apply_budgets(
@@ -65,19 +86,23 @@ def apply_budgets(
     extract_truncated: bool = False,
     per_file_lines: dict[int, int] | None = None,
 ) -> DataFrame:
-    """Annotate `records` (the parsed CDX table, which must still carry
-    index_file_seq + line_no over the full non-blank line stream) with
-    branch flags and drop everything at/after the first budget trip.
+    """Annotate `records` (parsed CDX rows carrying index_file_seq + line_no
+    numbered over the full non-blank line stream) with branch flags and drop
+    everything at/after the first budget trip.
 
     Returns the surviving rows with boolean columns `is_selected`,
     `is_truncated_rec`, `is_extract_branch`, `is_trunc_log_branch`.
 
     NOTE on cum_read: parse failures are dropped from `records` by parse_cdx
-    but still counted by the reference. line_no indexes the full non-blank
-    stream (assigned pre-parse), so per-row cum_read stays exact; per-file
-    totals are approximated by max(line_no)+1 unless the caller passes
-    ``per_file_lines`` (seq -> true non-blank line count from the scan
-    stage), which is exact even when a file's trailing lines were dropped.
+    but still counted by the reference. ``per_file_lines`` (seq -> true
+    non-blank line count, from ``sources.cdx.scan_cdx``) is the authoritative
+    file list: with it, read offsets are exact — a file whose trailing (or
+    every) line failed to parse still counts in full. Without it, per-file
+    totals are approximated by max(line_no)+1 over the files present in
+    `records`. A caller that has already applied maxRecords (the Fetch
+    stops its lines with ``stop_at_max_records`` before parsing) leaves
+    `max_records` unset; `records` may then be only the selected rows,
+    since the file-cap counts read nothing else.
     """
     is_trunc = F.coalesce(F.col("truncated"), F.lit("")) != ""  # isBlank analog
     df = records.withColumn("is_selected", selected)
@@ -92,96 +117,66 @@ def apply_budgets(
     )
     df = df.withColumn("pos", canonical_pos(F.col("index_file_seq"), F.col("line_no")))
 
-    no_budget = (
-        max_records >= LONG_MAX
-        and max_files_extracted >= LONG_MAX
-        and max_files_truncated >= LONG_MAX
-    )
-    if no_budget:
+    # read-trip first: running counts of the rows before it do not depend
+    # on the rows after it, so the file-cap trips below are found over the
+    # stopped frame
+    if max_records < LONG_MAX:
+        if per_file_lines is None:
+            per_file_lines = {
+                r["index_file_seq"]: r["n_lines"]
+                for r in df.groupBy("index_file_seq")
+                .agg((F.max("line_no") + 1).alias("n_lines"))
+                .collect()
+            }
+        df = stop_at_max_records(df, per_file_lines, max_records)
+
+    if max_files_truncated >= LONG_MAX and max_files_extracted >= LONG_MAX:
         return df
 
+    # trunc/extr trips need running counts — but only over the SELECTED
+    # subset (a small fraction of the scan): the full stream is never
+    # shuffled, only selected rows move in the per-file window.
     # --- per-file partials (tiny result: one row per index file) ---
-    per_file = (
+    per_file = sorted(
         df.groupBy("index_file_seq")
         .agg(
-            (F.max("line_no") + 1).alias("n_lines"),
             F.sum(F.when(F.col("is_selected") & is_trunc, 1).otherwise(0)).alias(
                 "n_trunc"
             ),
             F.sum(F.when(F.col("is_extract_branch"), 1).otherwise(0)).alias("n_extr"),
         )
-        .collect()
+        .collect(),
+        key=lambda r: r["index_file_seq"],
     )
-    per_file.sort(key=lambda r: r["index_file_seq"])
-    read_off: dict[int, int] = {}
-    trunc_off: dict[int, int] = {}
-    extr_off: dict[int, int] = {}
-    cr = ct = ce = 0
+    offsets = []
+    ct = ce = 0
     for r in per_file:
-        seq = r["index_file_seq"]
-        read_off[seq] = cr
-        trunc_off[seq] = ct
-        extr_off[seq] = ce
-        n_lines = r["n_lines"]
-        if per_file_lines is not None and seq in per_file_lines:
-            n_lines = per_file_lines[seq]
-        cr += n_lines
+        offsets.append((r["index_file_seq"], ct, ce))
         ct += r["n_trunc"]
         ce += r["n_extr"]
-
-    spark = records.sparkSession
-
-    # read-trip: cum_read = read_off(seq) + line_no + 1 is pure arithmetic,
-    # so the FIRST line where it reaches max_records is computed driver-side
-    # from the per-file offsets — no distributed work at all.
-    stop_candidates: list[int] = []
-    if max_records <= 0:
-        stop_candidates.append(0)
-    elif max_records < LONG_MAX:
-        seqs = sorted(read_off)
-        for idx, s in enumerate(seqs):
-            nxt = read_off[seqs[idx + 1]] if idx + 1 < len(seqs) else cr
-            if read_off[s] < max_records <= nxt:
-                trip_line = max_records - read_off[s] - 1
-                stop_candidates.append((s << _POS_SHIFT) + trip_line)
-                break
-        if not stop_candidates and cr >= max_records:
-            # boundary: trip lands exactly past the last counted line
-            stop_candidates.append(((seqs[-1] + 1) << _POS_SHIFT))
-
-    # trunc/extr trips need running counts — but only over the SELECTED
-    # subset (a small fraction of the scan): the full stream is never
-    # shuffled, only selected rows move in the per-file window.
-    need_window = max_files_truncated < LONG_MAX or max_files_extracted < LONG_MAX
-    if need_window:
-        off_df = F.broadcast(
-            spark.createDataFrame(
-                [(s, trunc_off[s], extr_off[s]) for s in trunc_off],
-                "index_file_seq int, trunc_off long, extr_off long",
-            )
+    off_df = F.broadcast(
+        records.sparkSession.createDataFrame(
+            offsets, "index_file_seq int, trunc_off long, extr_off long"
         )
-        sel = df.where(F.col("is_selected")).join(off_df, "index_file_seq")
-        w = Window.partitionBy("index_file_seq").orderBy("line_no")
-        sel = sel.withColumn(
-            "cum_trunc",
-            F.col("trunc_off")
-            + F.sum(F.when(is_trunc, 1).otherwise(0)).over(w),
-        ).withColumn(
-            "cum_extr",
-            F.col("extr_off")
-            + F.sum(F.when(F.col("is_extract_branch"), 1).otherwise(0)).over(w),
+    )
+    sel = df.where(F.col("is_selected")).join(off_df, "index_file_seq")
+    w = Window.partitionBy("index_file_seq").orderBy("line_no")
+    sel = sel.withColumn(
+        "cum_trunc",
+        F.col("trunc_off") + F.sum(F.when(is_trunc, 1).otherwise(0)).over(w),
+    ).withColumn(
+        "cum_extr",
+        F.col("extr_off")
+        + F.sum(F.when(F.col("is_extract_branch"), 1).otherwise(0)).over(w),
+    )
+    trip = F.lit(False)
+    if max_files_truncated < LONG_MAX:
+        trip = trip | (is_trunc & (F.col("cum_trunc") >= max_files_truncated))
+    if max_files_extracted < LONG_MAX:
+        trip = trip | (
+            F.col("is_extract_branch") & (F.col("cum_extr") >= max_files_extracted)
         )
-        trip = F.lit(False)
-        if max_files_truncated < LONG_MAX:
-            trip = trip | (is_trunc & (F.col("cum_trunc") >= max_files_truncated))
-        if max_files_extracted < LONG_MAX:
-            trip = trip | (
-                F.col("is_extract_branch") & (F.col("cum_extr") >= max_files_extracted)
-            )
-        stop_row = sel.where(trip).agg(F.min("pos").alias("stop")).collect()[0]
-        if stop_row["stop"] is not None:
-            stop_candidates.append(stop_row["stop"])
-
-    if stop_candidates:
-        df = df.where(F.col("pos") < F.lit(min(stop_candidates)))
+    stop = sel.where(trip).agg(F.min("pos").alias("stop")).collect()[0]["stop"]
+    if stop is not None:
+        df = df.where(F.col("pos") < F.lit(stop))
     return df

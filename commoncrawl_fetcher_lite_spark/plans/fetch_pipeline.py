@@ -1,17 +1,21 @@
 """The Fetch pipeline — engine equivalent of the reference's main entry
 (extractor/CCFileExtractor.java, SURVEY §3.1).
 
-seeds → scan cdx .gz → parse → select (compiled Column) → budget prefix →
+seeds → stats scan (per-file line counts) → scan cdx .gz, stop at
+  maxRecords → parse → select (compiled Column) → checkpoint → budget prefix →
   ├─ truncated branch → `truncated` log table
   └─ extract branch → (dryRun? log only : range-fetch + decode) →
        `extracted` table + `docs` (interleaved spans) table
 
-Everything before the fetch UDF is pure Catalyst: the selector predicate
-runs against the text scan, so at 100 TB only the selected minority ever
-reaches Python. The budgeted rows of both branches are materialized once
-(local checkpoint), so each branch's sink reads them without re-parsing
-the index. Metrics are collected via observe() — the engine analog of
-the reference's AtomicLong counters (CCIndexReaderCounter.java:22-25).
+The index is read twice and parsed once. The stats pass (sources.cdx.
+scan_cdx) yields the dense line numbers and each file's line count, which
+place the maxRecords stop before anything is parsed. The parse pass stops
+there, evaluates the selector and checkpoints only the selected rows;
+the file-cap budgets and both sinks read that checkpoint, not the index.
+Everything before the fetch UDF is pure Catalyst except the JSON-repair
+hop, so at 100 TB only the selected minority ever reaches the fetch.
+Metrics are collected via observe() — the engine analog of the
+reference's AtomicLong counters (CCIndexReaderCounter.java:22-25).
 """
 
 from __future__ import annotations
@@ -23,12 +27,15 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from commoncrawl_fetcher_lite_spark.config import ExtractorConfig
-from commoncrawl_fetcher_lite_spark.operators.budgets import apply_budgets
+from commoncrawl_fetcher_lite_spark.operators.budgets import (
+    apply_budgets,
+    stop_at_max_records,
+)
 from commoncrawl_fetcher_lite_spark.operators.selector import compile_selector
 from commoncrawl_fetcher_lite_spark.sources.cdx import (
     expand_index_paths,
     parse_cdx,
-    read_cdx_lines,
+    scan_cdx,
 )
 from commoncrawl_fetcher_lite_spark.sources.warc import extract_payloads
 
@@ -48,35 +55,28 @@ def run_fetch(
     path_resolver: Callable[[str], str] | None = None,
 ) -> FetchResult:
     paths = expand_index_paths(list(cfg.index_paths), cfg.max_index_files)
-    lines = read_cdx_lines(spark, paths)
-
-    # exact per-file non-blank line counts for budget offsets (cheap agg:
-    # one row per index file)
-    per_file_lines = {
-        r["index_file_seq"]: r["n"]
-        for r in lines.groupBy("index_file_seq").agg(F.count("*").alias("n")).collect()
-    } if _has_budget(cfg) else None
-
-    records = parse_cdx(lines)
+    # stats pass: one scan for the dense line numbers and the exact
+    # per-file line counts the maxRecords stop needs
+    scan = scan_cdx(spark, paths)
+    # the maxRecords stop is arithmetic on those counts: lines at or past
+    # it are never parsed
+    lines = stop_at_max_records(scan.lines, scan.per_file_lines, cfg.max_records)
+    # parse pass: the second and last scan. Only the selected rows are
+    # materialized (local checkpoint); the file-cap partials and windows,
+    # and both sinks, read them and not the index. The file caps are found
+    # over the checkpoint, so when they bind and maxRecords does not, it
+    # holds every selected row, not only those before the cap.
     sel = compile_selector(cfg.selector, seed=cfg.sample_seed)
+    selected = parse_cdx(lines).where(sel).localCheckpoint()
 
+    # maxRecords is not passed: it already stopped the lines above
     budgeted = apply_budgets(
-        records,
-        sel,
-        max_records=cfg.max_records,
+        selected,
+        F.lit(True),
         max_files_extracted=cfg.max_files_extracted,
         max_files_truncated=cfg.max_files_truncated,
         extract_truncated=cfg.extract_truncated,
-        per_file_lines=per_file_lines,
     )
-    # both branches below read the budgeted rows, and callers write them
-    # one after the other (docs, then the truncated log): materialize the
-    # rows of either branch once, so the second write does not re-scan,
-    # re-parse, re-select and re-budget the index. Held like any local
-    # checkpoint, O(selected rows).
-    budgeted = budgeted.where(
-        F.col("is_trunc_log_branch") | F.col("is_extract_branch")
-    ).localCheckpoint()
 
     # truncated-log branch (CCFileExtractorRecordProcessor.java:101-110):
     # url + normalized mimes + warc coords. Mimes normalized as the
@@ -174,12 +174,3 @@ def run_fetch(
     docs = extracted.select(F.col("url").alias("doc_id"), "spans")
     return FetchResult(extracted, truncated_logged, would_extract, docs, metrics)
 
-
-def _has_budget(cfg: ExtractorConfig) -> bool:
-    from commoncrawl_fetcher_lite_spark.config import LONG_MAX
-
-    return (
-        cfg.max_records < LONG_MAX
-        or cfg.max_files_extracted < LONG_MAX
-        or cfg.max_files_truncated < LONG_MAX
-    )

@@ -16,29 +16,30 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from commoncrawl_fetcher_lite_spark.config import ExtractorConfig
-from commoncrawl_fetcher_lite_spark.operators.budgets import apply_budgets
+from commoncrawl_fetcher_lite_spark.config import LONG_MAX, ExtractorConfig
+from commoncrawl_fetcher_lite_spark.operators.budgets import stop_at_max_records
 from commoncrawl_fetcher_lite_spark.operators.mimes import count_mimes
 from commoncrawl_fetcher_lite_spark.operators.selector import compile_selector
 from commoncrawl_fetcher_lite_spark.sources.cdx import (
     expand_index_paths,
     parse_cdx,
-    read_cdx_lines,
+    scan_cdx,
 )
 
 
 def run_count_mimes(spark: SparkSession, cfg: ExtractorConfig) -> DataFrame:
     """→ (mime, total, truncated, non_truncated) sorted desc by total."""
     paths = expand_index_paths(list(cfg.index_paths), cfg.max_index_files)
-    has_budget = cfg.max_records < (1 << 62)
-    # dense per-file line numbers cost a second gzip scan — only budgets
-    # need them; the pure aggregation path is a single scan.
-    records = parse_cdx(read_cdx_lines(spark, paths, dense_line_numbers=has_budget))
-    sel = compile_selector(cfg.selector, seed=cfg.sample_seed)
+    has_budget = cfg.max_records < LONG_MAX
+    # dense per-file line numbers cost a stats scan — only the maxRecords
+    # stop needs them (and its exact per-file counts); the pure aggregation
+    # path is a single scan.
+    scan = scan_cdx(spark, paths, dense_line_numbers=has_budget)
+    lines = scan.lines
     if has_budget:
-        records = apply_budgets(records, sel, max_records=cfg.max_records)
-        sel = F.col("is_selected")
-    return count_mimes(records, sel)
+        lines = stop_at_max_records(lines, scan.per_file_lines, cfg.max_records)
+    sel = compile_selector(cfg.selector, seed=cfg.sample_seed)
+    return count_mimes(parse_cdx(lines), sel)
 
 
 def write_reports(agg: DataFrame, out_dir: str) -> None:

@@ -16,12 +16,16 @@ Reference pipeline (citations into /root/reference):
 
 Scale design: one Spark task per gzip file (gzip is unsplittable — identical
 work granularity to the reference's worker-per-file, but across a cluster).
-Per-file line numbers are computed WITHOUT a global shuffle: each file lives
-in exactly one task, so ``monotonically_increasing_id`` is contiguous per
-file within its partition; ``line_no = mid - min(mid per file)`` needs only a
-tiny per-file aggregate (one row per file) broadcast back. Canonical crawl
-order := ascending (index_file_seq, line_no) — the reference's numThreads=1
-order (SURVEY §2.4).
+Per-file line numbers are computed WITHOUT a shuffle of the lines: each file
+lives in exactly one task, so ``monotonically_increasing_id`` is contiguous
+per file within its partition; ``line_no = mid - min(mid per file)`` needs
+only a tiny per-file aggregate (one row per file). ``scan_cdx`` runs that
+aggregate once, eagerly (the stats pass, which also yields the per-file line
+counts the budgets need), and joins it back as a broadcast local relation,
+so the Fetch reads every gzip twice in all: once for the stats, once for
+the parse.
+Canonical crawl order := ascending (index_file_seq, line_no) — the
+reference's numThreads=1 order (SURVEY §2.4).
 """
 
 from __future__ import annotations
@@ -30,6 +34,7 @@ import gzip
 import json
 import os
 import re
+from dataclasses import dataclass
 from typing import Iterable
 
 import pandas as pd
@@ -144,48 +149,78 @@ def index_paths_for_config(cfg) -> list[str]:
     return expand_index_paths(paths, cfg.max_index_files)
 
 
-def read_cdx_lines(
+@dataclass(frozen=True)
+class CdxScan:
+    """A lazy line frame plus the per-file stats its numbering came from."""
+
+    lines: DataFrame  # (index_file, index_file_seq, line_no, line)
+    # index_file_seq -> non-blank line count, for every listed file (0 for
+    # a file of blank lines only); None when line numbers are not dense
+    per_file_lines: dict[int, int] | None
+
+
+def scan_cdx(
     spark: SparkSession, index_paths: list[str], dense_line_numbers: bool = True
-) -> DataFrame:
-    """Scan index .gz files → (index_file, index_file_seq, line_no, line).
+) -> CdxScan:
+    """Scan index .gz files → lines numbered per file, plus per-file counts.
 
     line_no is 0-based over NON-BLANK lines per file (blanks dropped first,
-    so budgets see the same stream the reference counts). No global shuffle:
-    per-file min-id aggregate only.
+    so budgets see the same stream the reference counts). Numbering needs
+    no shuffle of the lines: a file is never split across tasks (gzip) and
+    is read sequentially, so ``monotonically_increasing_id`` is contiguous
+    per file, and ``line_no = mid - min(mid of the file)``. The per-file
+    (min(mid), count) aggregate is collected EAGERLY here, in one scan, and
+    joins back as a broadcast local relation (one row per file, carrying
+    both index_file_seq and min(mid)) — every later action on ``lines``
+    reads each gzip once. The counts it yields are ``per_file_lines``.
 
-    dense_line_numbers=False skips the per-file min(mid) pass — that pass is
-    a SECOND full gzip scan (gzip can't skip bytes), and dense numbering is
-    only needed for budget arithmetic and parity joins. With False, line_no
-    is monotonically_increasing_id: order-correct within each file (files
-    are never split across tasks; reads are sequential) but not dense —
-    fine for selection/aggregation pipelines like CountMimes.
+    dense_line_numbers=False skips that stats scan: line_no is then the raw
+    id, order-correct within each file but not dense — fine for selection
+    and aggregation without budgets (budget-free CountMimes scans once).
     """
-    seq_map = [(p, i) for i, p in enumerate(index_paths)]
-    seq_df = spark.createDataFrame(seq_map, "index_file string, index_file_seq int")
-
     df = (
         spark.read.text(index_paths)
         .select(
             F.col("value").alias("line"),
-            F.col("_metadata.file_path").alias("file_path"),
+            # spark returns file: URIs; normalize to the listed path
+            F.regexp_replace("_metadata.file_path", "^file:(//)?", "").alias(
+                "index_file"
+            ),
         )
         .where(F.trim(F.col("line")) != "")  # F10: blanks skipped pre-count
         .withColumn("mid", F.monotonically_increasing_id())
     )
+    per_file_lines = None
+    min_mid: dict[str, int] = {}
     if dense_line_numbers:
-        # rank lines within each file: files are never split across tasks
-        # (gzip), and reads are sequential, so mid is contiguous per file.
-        mins = df.groupBy("file_path").agg(F.min("mid").alias("min_mid"))
-        df = df.join(F.broadcast(mins), "file_path")
-        df = df.withColumn("line_no", (F.col("mid") - F.col("min_mid")).cast("long"))
-    else:
-        df = df.withColumn("line_no", F.col("mid"))
-    # normalize file path (spark returns file:// URIs) and attach seq
-    df = df.withColumn(
-        "index_file", F.regexp_replace("file_path", "^file:(//)?", "")
+        stats = (
+            df.groupBy("index_file")
+            .agg(F.min("mid").alias("min_mid"), F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        min_mid = {r["index_file"]: r["min_mid"] for r in stats}
+        n_lines = {r["index_file"]: r["n"] for r in stats}
+        per_file_lines = {i: n_lines.get(p, 0) for i, p in enumerate(index_paths)}
+    # one row per listed file: its seq and its numbering base (0 = raw ids)
+    files = spark.createDataFrame(
+        [(p, i, min_mid.get(p, 0)) for i, p in enumerate(index_paths)],
+        "index_file string, index_file_seq int, min_mid long",
     )
-    df = df.join(F.broadcast(seq_df), "index_file")
-    return df.select("index_file", "index_file_seq", "line_no", "line")
+    lines = df.join(F.broadcast(files), "index_file").select(
+        "index_file",
+        "index_file_seq",
+        (F.col("mid") - F.col("min_mid")).alias("line_no"),
+        "line",
+    )
+    return CdxScan(lines, per_file_lines)
+
+
+def read_cdx_lines(
+    spark: SparkSession, index_paths: list[str], dense_line_numbers: bool = True
+) -> DataFrame:
+    """Scan index .gz files → (index_file, index_file_seq, line_no, line);
+    ``scan_cdx`` without the per-file counts."""
+    return scan_cdx(spark, index_paths, dense_line_numbers).lines
 
 
 @pandas_udf(CDX_JSON_SCHEMA)

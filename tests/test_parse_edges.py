@@ -1,19 +1,25 @@
 """Parse/budget edge cases pinned against the oracle: malformed lines,
-trailing-line drops vs per-file counts, path validation."""
+trailing-line drops vs per-file counts, files that never parse, path
+validation."""
 
 from __future__ import annotations
 
 import gzip
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from commoncrawl_fetcher_lite_spark.config import ExtractorConfig
 from commoncrawl_fetcher_lite_spark.operators.budgets import apply_budgets
+from commoncrawl_fetcher_lite_spark.plans.fetch_pipeline import run_fetch
+from commoncrawl_fetcher_lite_spark.plans.mime_pipeline import run_count_mimes
 from commoncrawl_fetcher_lite_spark.sources.cdx import (
     expand_index_paths,
     parse_cdx,
     read_cdx_lines,
+    scan_cdx,
 )
 from tests import oracle
 
@@ -84,6 +90,68 @@ def test_budget_counts_dropped_lines(spark, edge_file):
     ores = oracle.process_stream([lines], selector=None, max_records=5)
     want = {ln for _, ln, _ in ores.extract_branch}
     assert got == want
+
+
+UNPARSEABLE = ["nospacesatall", "one space_only_here", "com,a)/y 2023 {broken"]
+
+
+def _write_files(tmp_path, files: list[list[str]]) -> list[str]:
+    paths = []
+    for k, lines in enumerate(files):
+        paths.append(str(tmp_path / f"cdx-{k:05d}.gz"))
+        _write_gz(paths[-1], lines)
+    return paths
+
+
+def test_budget_counts_file_that_never_parses(spark, tmp_path):
+    """A file whose every line fails to parse has no parsed record, but its
+    lines still count toward maxRecords: file 0 = 3 unparseable lines, so
+    max_records=5 processes file 1's line 0 only."""
+    files = [UNPARSEABLE, [GOOD.format(i=i) for i in range(6)]]
+    paths = _write_files(tmp_path, files)
+    ores = oracle.process_stream(files, selector=None, max_records=5)
+    want = {(s, ln) for s, ln, _ in ores.extract_branch}
+    assert want == {(1, 0)}
+
+    scan = scan_cdx(spark, paths)
+    assert scan.per_file_lines == {0: 3, 1: 6}
+    out = apply_budgets(
+        parse_cdx(scan.lines), F.lit(True), max_records=5,
+        per_file_lines=scan.per_file_lines,
+    )
+    assert {(r["index_file_seq"], r["line_no"]) for r in out.collect()} == want
+
+    res = run_fetch(
+        spark, ExtractorConfig(index_paths=tuple(paths), dry_run=True, max_records=5)
+    )
+    got = {
+        (r["index_file_seq"], r["line_no"])
+        for r in res.would_extract.select("index_file_seq", "line_no").collect()
+    }
+    assert got == want
+
+
+def test_count_mimes_budget_counts_trailing_unparseable_lines(spark, tmp_path):
+    """CountMimes with maxRecords: file 0 ends in 2 unparseable lines, which
+    count toward the budget, so max_records=6 stops before file 1."""
+    files = [
+        [GOOD.format(i=i) for i in range(3)] + UNPARSEABLE[:2],
+        [GOOD.format(i=i) for i in range(3, 7)],
+    ]
+    paths = _write_files(tmp_path, files)
+    cfg = ExtractorConfig(index_paths=tuple(paths), max_records=6)
+    got = {
+        r["mime"]: (r["total"], r["truncated"], r["non_truncated"])
+        for r in run_count_mimes(spark, cfg).collect()
+    }
+    ores = oracle.process_stream(files, selector=None, max_records=6)
+    assert not ores.trunc_logged
+    want = Counter(
+        oracle.normalize_mime(rec["mime-detected"])
+        for _, _, rec in ores.extract_branch
+    )
+    assert want == {"text/html": 3}
+    assert got == {m: (n, 0, n) for m, n in want.items()}
 
 
 def test_validate_literal_paths(tmp_path):

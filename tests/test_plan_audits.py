@@ -474,3 +474,43 @@ def test_incremental_neardup_corpus_side_is_semi_gated(spark):
     assert "LeftSemi" in plan
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
     assert "band_hash" in plan  # candidate join keyed on the band pair
+
+
+def test_fetch_reads_the_index_twice(spark, fixture_t1):
+    """run_fetch with a maxRecords budget reads every index gzip twice in
+    all: once for the per-file stats, once for the parse. Measured as the
+    stage input records its jobs add; a selector that matches nothing keeps
+    local-checkpoint block reads (which count as input records too) out of
+    the sum."""
+    import gzip
+
+    from commoncrawl_fetcher_lite_spark.config import ExtractorConfig
+    from commoncrawl_fetcher_lite_spark.plans.fetch_pipeline import run_fetch
+
+    sc = spark.sparkContext
+    jsc, jvm = sc._jsc.sc(), sc._jvm
+
+    def stages():
+        jsc.listenerBus().waitUntilEmpty()
+        seq = jsc.statusStore().stageList(
+            None, False, False, sc._gateway.new_array(jvm.double, 0),
+            jvm.java.util.ArrayList(),
+        )
+        return [seq.apply(i) for i in range(seq.size())]
+
+    raw_lines = 0
+    for p in fixture_t1.index_paths:
+        with gzip.open(p, "rb") as f:
+            data = f.read()
+        raw_lines += data.count(b"\n") + (not data.endswith(b"\n"))
+
+    cfg = ExtractorConfig(
+        index_paths=(fixture_t1.paths_gz,),
+        selector={"must": {"status": [{"match": "999"}]}},
+        max_records=500,
+    )
+    before = max((s.stageId() for s in stages()), default=-1)
+    res = run_fetch(spark, cfg, path_resolver=lambda f: f)
+    read = sum(s.inputRecords() for s in stages() if s.stageId() > before)
+    assert res.would_extract.count() == 0
+    assert read == 2 * raw_lines
