@@ -164,36 +164,6 @@ class FrontierConfig:
     default_tokens_per_sec: float = 1.0
     default_burst: int = 10
     default_max_per_batch: int = 100
-    bloom_expected_items: int = 10_000_000  # per partition block
-    bloom_fpp: float = 0.01
-    checkpoint_root: str = ""
-    # Shuffle-byte diet for the scheduling hot path (frontier/diet.py):
-    # anti-join + top-k windows on the 24 B skinny frame, late payload
-    # join. With the frontier's real shape (stored url_hash — bootstrap
-    # always writes it) the diet measured FASTEST at every parallelism
-    # level (1.9x exact at 2 cores, 1.45x at 8; 6 quiet pinned pairs,
-    # BENCH/BASELINE.md), and on a multi-node cluster the shuffle-byte
-    # cut only grows. It stays OPT-IN for one reason: its priority-tie
-    # break is (prio, url_hash) while the north rule's reference-matching
-    # crawl order is (prio, url asc) — identical batches whenever
-    # priorities are distinct (tested, incl. through the full snapshot
-    # loop), divergent only on exact priority ties. Other documented
-    # trade-offs: hash-only anti-join, host-hash windows, and token
-    # refill over PRE-seen-filter hosts (a benign host_state superset —
-    # an unscheduled refilled host converges to the same avail as a
-    # fresh one).
-    compact_shuffles: bool = False
-    # Bucketed host_state reads (frontier/bucketed.py): materialize the
-    # state's compacted BASE segment as a bucketed catalog table once per
-    # compaction generation and overlay the (O(batch)-sized) upsert delta
-    # as a broadcast — the refill join then plans zero Exchange above the
-    # state scan. At steady state host_state holds every host ever
-    # scheduled, so the per-iteration state shuffle this removes is the
-    # loop's second-largest after the seen anti-join (which the bucketed
-    # urlseen machinery already covers). OPT-IN because the rewrite
-    # needs a writable catalog + path (checkpoint root) and only pays
-    # once state ≫ batch.
-    bucketed_state: bool = False
     # Weight of the link-graph centrality prior: when a `host_rank`
     # snapshot table exists (frontier/hostrank.py host_pagerank over the
     # outlink graph), candidate priority becomes

@@ -30,13 +30,8 @@ sources/warc.py citations); only the physical plan differs.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from commoncrawl_fetcher_lite_spark.functions.joins import maybe_broadcast
 
 
 def pick_n_buckets(
@@ -86,95 +81,6 @@ def write_seen_bucketed(
         writer = writer.option("path", path)
     writer.saveAsTable(table)
     return table
-
-
-def ensure_state_bucketed(
-    spark: SparkSession,
-    base: DataFrame,
-    name: str,
-    base_seq: int,
-    path_root: str,
-    key: str = "host",
-    n_buckets: int | None = None,
-) -> str:
-    """Idempotently materialize an upsert table's BASE segment as a
-    bucketed catalog table, cached per compaction generation: the table
-    name carries `base_seq`, so the (state-sized) bucketed rewrite runs
-    exactly once per compaction and every iteration in between reuses
-    it — amortized O(state)/compact_every, while the per-iteration
-    commit stays O(batch). Older generations of the same table are
-    dropped. Returns the catalog table name."""
-    table = f"{name}_s{int(base_seq)}"
-    if spark.catalog.tableExists(table):
-        return table
-    for t in spark.catalog.listTables():
-        if t.name.startswith(f"{name}_s"):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-            # the table is EXTERNAL (written with an explicit path), so
-            # DROP TABLE removes only catalog metadata — without this
-            # every compaction generation would leave a full state-sized
-            # parquet dir on disk forever (ADVICE r6)
-            shutil.rmtree(os.path.join(path_root, t.name), ignore_errors=True)
-    if n_buckets is None:
-        n_buckets = pick_n_buckets(base.count())
-    write_seen_bucketed(
-        spark,
-        base,
-        table=table,
-        n_buckets=n_buckets,
-        path=os.path.join(path_root, table),
-        key=key,
-    )
-    return table
-
-
-def join_state_bucketed(
-    probe: DataFrame,
-    spark: SparkSession,
-    table: str,
-    key: str = "host",
-    delta: DataFrame | None = None,
-) -> DataFrame:
-    """LEFT-join `probe` (a batch's host frame — batch-sized by
-    construction) against a bucketed state table with ZERO Exchange
-    above the state scan: the bucketed side feeds its sort-merge tasks
-    directly, only the probe side shuffles into the bucket distribution
-    (plan-audited in tests/test_plan_audits.py). The optional `delta` —
-    the newest-wins merge of upsert segments written since the bucketed
-    base (SnapshotStore.read_upsert_split) — overlays as an explicit
-    broadcast: effective value = delta row if present else base row,
-    exactly the store's merge-on-read semantics. Output: probe columns
-    + the state's value columns.
-
-    This is the host_state analog of the bucketed URL-seen anti-join:
-    at crawl steady state the host-state table (every host ever
-    scheduled, ~10^8+) dwarfs each batch's host set, yet the round-5
-    refill join shuffled the state side every iteration. Production
-    mapping: Iceberg bucket(n, host) partition transform +
-    storage-partitioned joins."""
-    base = spark.table(table)
-    val_cols = [c for c in base.columns if c != key]
-    out = probe.join(base, key, "left")
-    if delta is not None:
-        # stats-gated, not forced (ADVICE r6): the delta is the merge of
-        # up to compact_every-1 batch-sized segments — usually tiny, but
-        # a forced broadcast of an O(batch x compact_every) frame can OOM
-        # at exactly the scale this accelerator targets. maybe_broadcast
-        # hints only when parquet stats prove it small; an oversized
-        # delta degrades to a shuffle join instead of an OOM.
-        d = maybe_broadcast(
-            delta.select(
-                key, *[F.col(c).alias(f"_d_{c}") for c in val_cols]
-            )
-        )
-        out = out.join(d, key, "left").select(
-            *probe.columns,
-            *[
-                F.coalesce(F.col(f"_d_{c}"), F.col(c)).alias(c)
-                for c in val_cols
-            ],
-        )
-    return out
 
 
 def filter_unseen_bucketed(

@@ -178,56 +178,6 @@ class SnapshotStore:
             )
         return rows.drop("_seq")
 
-    def read_upsert_split(
-        self, table: str, snap: int | None = None
-    ) -> tuple[DataFrame, DataFrame | None, int]:
-        """Split an upsert table's merge-on-read view into (base, delta,
-        base_seq): `base` is the oldest (usually compacted) segment read
-        raw, `delta` the newest-wins merge of every later segment (None
-        when the chain is a single segment). base ⊕ delta — delta row
-        wins per key — equals read(table).
-
-        Why: the bucketed-state accelerator (frontier/bucketed.py)
-        rewrites the BASE as a bucketed catalog table once per
-        compaction (base_seq keys the cache) and overlays the small
-        delta as a broadcast, so host-keyed state joins stop shuffling
-        the state side every iteration while the per-iteration commit
-        stays O(batch)."""
-        if snap is None:
-            snap = self.current_snapshot()
-        meta = self._meta(table, snap)
-        if meta is None or meta.get("mode", "base") == "base":
-            df = self.read(table, snap)
-            seq = (meta or {}).get("seq", snap)
-            return df, None, int(seq)
-        if meta["mode"] != "upsert":
-            raise ValueError(
-                f"read_upsert_split: {table!r} is mode {meta['mode']!r}"
-            )
-        segs = meta["segments"]
-        base = self.spark.read.parquet(segs[0]["path"])
-        if len(segs) == 1:
-            return base, None, int(segs[0]["seq"])
-        key = meta["key"]
-        delta = None
-        for s in segs[1:]:
-            part = self.spark.read.parquet(s["path"]).withColumn(
-                "_seq", F.lit(int(s["seq"]))
-            )
-            # schema evolution across delta segments: see _resolve
-            delta = (
-                part
-                if delta is None
-                else delta.unionByName(part, allowMissingColumns=True)
-            )
-        w = Window.partitionBy(*key).orderBy(F.desc("_seq"))
-        delta = (
-            delta.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "_seq")
-        )
-        return base, delta, int(segs[0]["seq"])
-
     def exists(self, table: str, snap: int | None = None) -> bool:
         if snap is None:
             snap = self.current_snapshot()

@@ -1,4 +1,12 @@
-"""Shuffle-byte diet for the frontier hot path (VERDICT r3 #1).
+"""Shuffle-byte diet: a standalone frontier scheduling operator (VERDICT
+r3 #1).
+
+The crawl loop (scheduler.run_iteration) does not call this module: it
+always runs the exact path, urlseen.filter_unseen + politeness.
+schedule_batch. schedule_frontier_compact is kept for the frozen
+`frontier_schedule_compact` bench leaf and the `frontier_schedule_diet`
+oracle row. Run inside the loop it measured no faster than the exact path
+on the crawl benchmark, and its tie order differs from the reference's.
 
 The exact pipeline (urlseen.filter_unseen + politeness.schedule_batch)
 shuffles FULL candidate rows — url (~40-80 B) + host (~20-40 B) + two
@@ -21,8 +29,7 @@ payload branch never shuffles at all; the payload branch does recompute
 canonicalize+hash for its rows — deliberate: per-row CPU scales with
 cores/executors, shuffle bytes on one box do not.
 
-Trade-offs vs the exact path (deliberate, documented — the exact
-operators stay the default and keep their oracle rows):
+Trade-offs vs the exact path (deliberate, documented):
 
   * the seen anti-join keys on url_hash ALONE (exact path: (url_hash,
     url)), so a 64-bit collision can drop a never-seen URL — ~3 expected

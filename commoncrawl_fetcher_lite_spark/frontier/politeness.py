@@ -208,7 +208,6 @@ def refill_tokens(
     max_per_batch: int,
     host_budget: DataFrame | None = None,
     robots: DataFrame | None = None,
-    state_join: "Callable[[DataFrame], DataFrame] | None" = None,
 ) -> DataFrame:
     """Token-bucket refill → (host, avail double, quota int).
 
@@ -223,13 +222,7 @@ def refill_tokens(
 
     `host_budget` rows (host, tokens_per_sec, burst, max_per_batch; '*'
     row = defaults) override the scalar defaults per host; robots
-    Crawl-delay caps the rate at 1/delay like host_quota.
-
-    `state_join`, when given, REPLACES the host_state join: it receives
-    the per-host probe frame and must return it left-joined with a
-    `tokens` column — the seam the bucketed-state accelerator plugs into
-    (frontier/bucketed.join_state_bucketed: zero Exchange above the
-    state scan). `host_state` is ignored in that case."""
+    Crawl-delay caps the rate at 1/delay like host_quota."""
     spark = hosts.sparkSession
     if host_state is None:
         host_state = spark.createDataFrame([], "host string, tokens double")
@@ -277,15 +270,9 @@ def refill_tokens(
     avail = F.least(brst + refill, F.coalesce(F.col("tokens"), brst) + refill)
     # host_state grows with every host ever scheduled (~10^7+ at CC scale):
     # a forced broadcast OOMs exactly at the 10^10-URL scale this module
-    # claims — gate on proven size instead (ADVICE r2); at steady state
-    # the bucketed state_join removes even the gated shuffle.
-    joined = (
-        state_join(out)
-        if state_join is not None
-        else out.join(maybe_broadcast(host_state), "host", "left")
-    )
+    # claims — gate on proven size instead (ADVICE r2)
     return (
-        joined
+        out.join(maybe_broadcast(host_state), "host", "left")
         .select(
             "host",
             avail.alias("avail"),

@@ -161,20 +161,17 @@ def run_iteration(
             .drop("rank")
         )
 
-    if not cfg.compact_shuffles:
-        candidates = filter_unseen(candidates, seen)
+    candidates = filter_unseen(candidates, seen)
 
     # materialize the filtered candidate frame ONCE (r7): it feeds BOTH
     # the token refill (its distinct hosts) and the scheduling windows,
     # and those execute as SEPARATE jobs (the refill frame is
     # checkpointed below), so without this the whole candidate pipeline —
-    # frontier merge-on-read resolve, robots rule fold, blocklist gate,
-    # and the seen anti-join when compact_shuffles is off (the diet path
-    # anti-joins later, inside schedule_frontier_compact) — ran twice per
-    # iteration (measured: ~40% of a warm iteration at sf0.1). What is
-    # stored is O(candidates) skinny rows (url, host, priority,
-    # recrawl_score, url_hash); recomputing the regex fold (+ anti-join)
-    # per consumer costs more at every scale.
+    # frontier merge-on-read resolve, robots rule fold, blocklist gate
+    # and seen anti-join — ran twice per iteration (measured: ~40% of a
+    # warm iteration at sf0.1). What is stored is O(candidates) skinny
+    # rows (url, host, priority, recrawl_score, url_hash); recomputing the
+    # regex fold + anti-join per consumer costs more at every scale.
     candidates = candidates.localCheckpoint(eager=True)
 
     # token-bucket politeness (north star: "priority = recrawl score +
@@ -184,38 +181,7 @@ def run_iteration(
     # batch sizes are debited and the new state commits with this
     # snapshot. A fresh host starts at tokens=burst, so iteration 1
     # reproduces the stateless quota min(max_per_batch, burst + rate*dt).
-    # (diet mode refills over PRE-seen-filter hosts — a benign superset:
-    # an unscheduled refilled host converges to a fresh host's avail.)
     prev_state = store.read("host_state") if store.exists("host_state") else None
-    state_join = None
-    if cfg.bucketed_state and prev_state is not None:
-        # bucketed-state accelerator: the compacted base becomes a
-        # bucketed catalog table (once per compaction generation —
-        # ensure_state_bucketed caches on base_seq), the O(batch) upsert
-        # delta overlays as a broadcast; the refill join then plans zero
-        # Exchange above the state scan (tests/test_plan_audits.py)
-        import functools
-        import os as _os
-
-        from commoncrawl_fetcher_lite_spark.frontier.bucketed import (
-            ensure_state_bucketed,
-            join_state_bucketed,
-        )
-
-        base, delta, base_seq = store.read_upsert_split("host_state")
-        table = ensure_state_bucketed(
-            store.spark,
-            base,
-            name="host_state_bucketed",
-            base_seq=base_seq,
-            path_root=_os.path.join(store.root, "_bucketed"),
-        )
-        state_join = functools.partial(
-            join_state_bucketed,
-            spark=store.spark,
-            table=table,
-            delta=delta,
-        )
     refilled = refill_tokens(
         prev_state,
         candidates.select("host"),
@@ -225,7 +191,6 @@ def run_iteration(
         cfg.default_max_per_batch,
         host_budget=host_budget,
         robots=robots,
-        state_join=state_join,
     ).localCheckpoint(eager=True)  # reused by the quota join AND the debit
     quotas = refilled.select("host", "quota")
 
@@ -265,20 +230,10 @@ def run_iteration(
     # materialize the scheduling plan ONCE: batch feeds the fetch, both
     # state updates, and the commit write — without this the anti-join +
     # double window re-executed 3-4x per iteration.
-    if cfg.compact_shuffles:
-        from commoncrawl_fetcher_lite_spark.frontier.diet import (
-            schedule_frontier_compact,
-        )
-
-        batch = schedule_frontier_compact(
-            candidates, seen, quotas, default_quota=0, n_salt=cfg.n_salt,
-            quota_cap=quota_cap,
-        ).localCheckpoint(eager=True)
-    else:
-        batch = schedule_batch(
-            candidates, quotas, default_quota=0, n_salt=cfg.n_salt,
-            quota_cap=quota_cap,
-        ).localCheckpoint(eager=True)
+    batch = schedule_batch(
+        candidates, quotas, default_quota=0, n_salt=cfg.n_salt,
+        quota_cap=quota_cap,
+    ).localCheckpoint(eager=True)
 
     # only hosts refilled this round get a new state row — untouched hosts'
     # rows carry via older upsert segments (their debt must not reset);

@@ -972,56 +972,140 @@ def test_backoff_lazy_decay_and_prune(spark, tmp_path):
     assert res3.n_scheduled == 8
 
 
-def test_bucketed_state_iterations_match_plain(spark, tmp_path):
-    """cfg.bucketed_state routes the refill join through the bucketed
-    catalog accelerator (base table per compaction generation + broadcast
-    delta overlay). Three iterations must schedule EXACTLY the same
-    batches as the plain path — the accelerator changes the plan, never
-    the semantics — and the catalog must hold one generation at a time."""
-    from commoncrawl_fetcher_lite_spark.config import FrontierConfig
-    from commoncrawl_fetcher_lite_spark.frontier import scheduler
-    from commoncrawl_fetcher_lite_spark.frontier.checkpoint import SnapshotStore
-
+def _per_host_seeds(spark, per_host, hosts=6):
     rows = [
         (f"https://h{h}.example.com/p{i:03d}", f"h{h}.example.com",
          float(i % 11), None, 0.0)
-        for h in range(6)
-        for i in range(30)
+        for h in range(hosts)
+        for i in range(per_host)
     ]
-    seeds = spark.createDataFrame(
+    return spark.createDataFrame(
         rows,
         "url string, host string, priority double, "
         "discovered_ts timestamp, recrawl_score double",
     )
-    batches = {}
-    for flag in (False, True):
-        store = SnapshotStore(
-            str(tmp_path / f"snap_{flag}"), spark, compact_every=2
-        )
-        scheduler.bootstrap(store, seeds)
-        cfg = FrontierConfig(
-            default_burst=4,
-            default_max_per_batch=6,
-            default_tokens_per_sec=3.0,
-            bucketed_state=flag,
-        )
-        got = []
-        for _ in range(3):
+
+
+def test_stores_in_one_session_are_isolated(spark, tmp_path):
+    """Two SnapshotStores in one session reach the same snapshot numbers;
+    the second must schedule exactly what it schedules alone. Store A
+    holds 1 URL per host, store B 30: with burst 4, rate 3/s, max 6 and
+    1 s batches, B's hosts get min(6, 4+3) = 6 slots, keep 1 token, then
+    get min(7, 1+3) = 4 — [36, 24]. Refilling B from A's host_state
+    (6 tokens left per host) would give [36, 36]."""
+    from commoncrawl_fetcher_lite_spark.frontier import scheduler
+
+    cfg = FrontierConfig(
+        default_burst=4, default_max_per_batch=6, default_tokens_per_sec=3.0
+    )
+    got = {}
+    for name, per_host in (("a", 1), ("b", 30)):
+        store = SnapshotStore(str(tmp_path / name), spark, compact_every=2)
+        scheduler.bootstrap(store, _per_host_seeds(spark, per_host))
+        got[name] = [
             scheduler.run_iteration(store, cfg, batch_seconds=1.0)
-            got.append(
-                tuple(sorted(r.url for r in store.read("batch").collect()))
-            )
-        batches[flag] = got
-    assert batches[True] == batches[False]
-    # one cached generation in the catalog
-    gens = [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith("host_state_bucketed_s")
+            for _ in range(2)
+        ]
+    batches = [
+        {r.url for r in store.read_at("batch", s).collect()} for s in (1, 2)
     ]
-    assert len(gens) == 1
-    for t in gens:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    assert [r.n_scheduled for r in got["a"]] == [6, 0]
+    assert [r.snapshot for r in got["a"]] == [r.snapshot for r in got["b"]]
+    assert [r.n_scheduled for r in got["b"]] == [36, 24]
+    # alone, B takes each host's URLs in (priority desc, url asc) order
+    order = {}
+    for row in _per_host_seeds(spark, 30).collect():
+        order.setdefault(row.host, []).append(row)
+    want = [set(), set()]
+    for rows in order.values():
+        rows.sort(key=lambda r: (-r.priority, r.url))
+        want[0] |= {r.url for r in rows[:6]}
+        want[1] |= {r.url for r in rows[6:10]}
+    assert batches == want
+
+
+def test_failed_commit_write_leaves_previous_snapshot(
+    spark, tmp_path, monkeypatch
+):
+    """One table write of the threaded commit fails while the others run:
+    the manifest stays at N-1, expire_snapshots sweeps the partial snap=N
+    directory, and re-running the iteration gives the same state as a
+    store that never failed."""
+    import os
+    import threading
+
+    from commoncrawl_fetcher_lite_spark.frontier import scheduler
+
+    cfg = FrontierConfig(
+        n_salt=2, default_burst=4, default_max_per_batch=6,
+        default_tokens_per_sec=3.0,
+    )
+    seeds = _per_host_seeds(spark, 30)
+    ref = SnapshotStore(str(tmp_path / "ref"), spark, compact_every=3)
+    scheduler.bootstrap(ref, seeds)
+    for _ in range(2):
+        scheduler.run_iteration(ref, cfg, batch_seconds=1.0)
+
+    root = str(tmp_path / "st")
+    store = SnapshotStore(root, spark, compact_every=3)
+    scheduler.bootstrap(store, seeds)
+    scheduler.run_iteration(store, cfg, batch_seconds=1.0)
+    assert store.current_snapshot() == 1
+
+    write = SnapshotStore._write
+    failing = os.path.join(root, "snap=2", "host_state", "upsert")
+    other_started = threading.Event()
+
+    def flaky_write(self, df, path):
+        if os.path.normpath(path) == failing:
+            # fail only once another pool write is under way
+            assert other_started.wait(120)
+            raise OSError("injected write failure")
+        if path.startswith(os.path.join(root, "snap=2")):
+            other_started.set()
+        return write(self, df, path)
+
+    monkeypatch.setattr(SnapshotStore, "_write", flaky_write)
+    with pytest.raises(OSError, match="injected"):
+        scheduler.run_iteration(store, cfg, batch_seconds=1.0)
+    monkeypatch.setattr(SnapshotStore, "_write", write)
+
+    assert store.manifest()["current"] == 1
+    partial = os.path.join(root, "snap=2")
+    assert os.path.isdir(partial)  # the other writes landed
+    assert not os.path.exists(failing)
+    store.expire_snapshots(keep_last=2)
+    assert not os.path.exists(partial)
+    assert store.current_snapshot() == 1
+
+    res = scheduler.run_iteration(store, cfg, batch_seconds=1.0)
+    assert res.snapshot == 2
+    for table in ("batch", "urlseen", "frontier", "host_state"):
+        want = {tuple(r) for r in ref.read(table).collect()}
+        got = {tuple(r) for r in store.read(table).collect()}
+        assert got == want, f"{table} differs after the re-run"
+
+
+def test_every_frontier_config_field_is_read():
+    """No dead knobs: every FrontierConfig field is read as `.<name>`
+    somewhere in the package outside config.py."""
+    import dataclasses
+    import pathlib
+    import re
+
+    import commoncrawl_fetcher_lite_spark as pkg
+
+    src = "\n".join(
+        p.read_text()
+        for p in pathlib.Path(pkg.__file__).parent.rglob("*.py")
+        if p.name != "config.py"
+    )
+    unread = [
+        f.name
+        for f in dataclasses.fields(FrontierConfig)
+        if not re.search(rf"\.{f.name}\b", src)
+    ]
+    assert unread == []
 
 
 def test_backoff_legacy_chain_gains_snap_set(spark, tmp_path):

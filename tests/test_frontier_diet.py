@@ -135,49 +135,6 @@ def test_diet_plan_shuffles_skinny(spark):
     )
 
 
-def test_diet_loop_equals_exact_loop(spark, tmp_path):
-    """compact_shuffles=True runs the REAL snapshot loop through the diet
-    path: scheduled batches and the urlseen/frontier state must match the
-    exact loop iteration-for-iteration (distinct priorities)."""
-    from commoncrawl_fetcher_lite_spark.config import FrontierConfig
-    from commoncrawl_fetcher_lite_spark.frontier.checkpoint import SnapshotStore
-    from commoncrawl_fetcher_lite_spark.frontier.scheduler import bootstrap, run
-
-    seeds = _seeds(spark, n=3000, hosts=20).select(
-        "url", "host", "priority",
-        F.lit(None).cast("timestamp").alias("discovered_ts"),
-        "recrawl_score",
-    )
-    base = dict(
-        n_salt=4,
-        default_tokens_per_sec=2.0,
-        default_burst=0,
-        default_max_per_batch=30,
-    )
-    stores = {}
-    for mode, compact in (("exact", False), ("diet", True)):
-        st = SnapshotStore(str(tmp_path / mode), spark, compact_every=3)
-        bootstrap(st, seeds)
-        res = run(
-            st,
-            FrontierConfig(compact_shuffles=compact, **base),
-            3,
-            batch_seconds=10.0,
-        )
-        stores[mode] = (st, res)
-
-    (se, re_), (sd, rd) = stores["exact"], stores["diet"]
-    assert [r.n_scheduled for r in re_] == [r.n_scheduled for r in rd]
-    for snap in range(1, len(re_) + 1):
-        be = {tuple(r) for r in se.read_at("batch", snap).collect()}
-        bd = {tuple(r) for r in sd.read_at("batch", snap).collect()}
-        assert be == bd, f"snapshot {snap} batch diverged"
-    for table in ("urlseen", "frontier"):
-        a = {tuple(r) for r in se.read(table).collect()}
-        b = {tuple(r) for r in sd.read(table).collect()}
-        assert a == b, f"{table} diverged under compact_shuffles"
-
-
 def test_diet_collision_fanout_and_dedupe(spark):
     """ADVICE r4: a 64-bit url_hash collision between two UNSEEN
     candidates fans the late payload join out (duplicate scheduled rows

@@ -340,66 +340,6 @@ def test_spread_for_compute_probe_starts_no_job(spark):
             assert spread == (int(width) < default), name
 
 
-def test_host_state_bucketed_join_no_state_exchange(spark, tmp_path_factory):
-    """VERDICT r5 #7: the token-refill join must not shuffle the host
-    state every iteration. With the state's base as a bucketed table and
-    the upsert delta overlaid as a broadcast, the plan shows a bucketed
-    scan (Bucketed: true — its output partitioning feeds the sort-merge
-    join directly, no Exchange above it); every Exchange belongs to the
-    batch-sized probe side. Values: delta wins over base, fresh hosts
-    fall back to burst."""
-    from commoncrawl_fetcher_lite_spark.frontier.bucketed import (
-        join_state_bucketed,
-        write_seen_bucketed,
-    )
-    from commoncrawl_fetcher_lite_spark.frontier.politeness import refill_tokens
-
-    d = str(tmp_path_factory.mktemp("hs_bucketed"))
-    state = spark.range(10_000).select(
-        F.concat(F.lit("h"), F.col("id")).alias("host"),
-        (F.col("id") % 7).cast("double").alias("tokens"),
-    )
-    write_seen_bucketed(
-        spark, state, table="t_hs_bucketed", n_buckets=8,
-        path=d + "/hs", key="host",
-    )
-    hosts = spark.range(300).select(
-        F.concat(F.lit("h"), F.col("id") * 40).alias("host")
-    )
-    delta = spark.createDataFrame(
-        [("h0", 100.0)], "host string, tokens double"
-    )
-    import functools
-
-    sj = functools.partial(
-        join_state_bucketed, spark=spark, table="t_hs_bucketed", delta=delta
-    )
-    orig = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        refilled = refill_tokens(
-            None, hosts, batch_seconds=10.0, tokens_per_sec=1.0,
-            burst=5, max_per_batch=50, state_join=sj,
-        )
-        plan = _plan(refilled)
-        assert "Bucketed: true" in plan, plan
-        assert "SortMergeJoin" in plan
-        # probe side: distinct agg + re-distribution into the bucket
-        # layout; the state side contributes none
-        assert plan.count(") Exchange") <= 2, plan
-        got = {r["host"]: r for r in refilled.collect()}
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", orig)
-        spark.sql("DROP TABLE IF EXISTS t_hs_bucketed")
-    # h0: delta override 100 -> avail min(5+10, 100+10) = 15
-    assert got["h0"]["avail"] == 15.0
-    # h40: base tokens 40%7=5 -> avail min(15, 5+10) = 15; h80: 80%7=3
-    # -> min(15, 13) = 13
-    assert got["h80"]["avail"] == 13.0
-    # h(300*40=12000 > 10k): fresh host -> burst fallback min(15, 5+10)
-    assert got["h11960"]["avail"] == 15.0
-
-
 def test_semdedup_pair_stage_ships_vectors_once(spark):
     """VERDICT r5 #5: the within-cell quadratic must not be a
     vector-carrying self-join. Plan shape of _cell_pairs: exactly ONE
