@@ -11,7 +11,11 @@
 # two runs alternates from seed to seed so machine drift cancels. Every
 # run's result line is printed as it finishes; the summary gives, per
 # metric, the median and quartiles of each side and the pairs the change
-# won (direction from BENCHMARK.json). TRACE=1 compares per-layer metrics.
+# won (direction from BENCHMARK.json). For each end-to-end metric it also
+# gives the change median's relative delta against the parent median and
+# flags WORSE>bound when the delta is worse than that metric's `bound` in
+# BENCHMARK.json (the no-regression rule). TRACE=1 compares per-layer
+# metrics.
 # Results are kept in $AB_OUT (default: a file in the temporary directory,
 # removed at exit).
 set -euo pipefail
@@ -61,6 +65,7 @@ import sys
 rows = [json.loads(l) for l in open(sys.argv[1]) if l.strip()]
 bench = json.load(open(sys.argv[2]))
 better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
+bound = {m["name"]: m["bound"] for m in bench["end_to_end"]}
 runs = {}  # (side, seed) -> result
 for r in rows:
     runs[(r["side"], r["seed"])] = r["result"]
@@ -77,7 +82,8 @@ def quartiles(xs):
 
 
 names = sorted({n for v in runs.values() if v for n in v.get("metrics", {})})
-print(f"{'metric':40} {'parent q1/med/q3':>28} {'change q1/med/q3':>28} won")
+print(f"{'metric':40} {'parent q1/med/q3':>28} {'change q1/med/q3':>28} won"
+      f"  delta (end-to-end)")
 for name in names:
     vals = {side: [] for side in ("parent", "change")}
     won = pairs = 0
@@ -98,5 +104,13 @@ for name in names:
         "/".join(f"{x:.4g}" for x in quartiles(vals[side]))
         for side in ("parent", "change")
     ]
-    print(f"{name:40} {cols[0]:>28} {cols[1]:>28} {won}/{pairs}")
+    verdict = ""
+    if name in bound:
+        pm, cm = statistics.median(vals["parent"]), statistics.median(vals["change"])
+        delta = (cm - pm) / pm if pm else 0.0
+        worse = -delta if better[name] == "higher" else delta
+        verdict = f"  {delta:+.1%}" + (
+            f" WORSE>bound {bound[name]:.0%}" if worse > bound[name] else ""
+        )
+    print(f"{name:40} {cols[0]:>28} {cols[1]:>28} {won}/{pairs}{verdict}")
 EOF

@@ -46,10 +46,12 @@ def main(argv: list[str]) -> int:
         return 0
 
     if cmd == "FetchIndices":
-        from commoncrawl_fetcher_lite_spark.sources.cdx import expand_index_paths
+        from commoncrawl_fetcher_lite_spark.sources.cdx import (
+            index_paths_for_config,
+        )
         from commoncrawl_fetcher_lite_spark.sources.mirror import mirror_indices
 
-        paths = expand_index_paths(list(cfg.index_paths), cfg.max_index_files)
+        paths = index_paths_for_config(cfg)
         dest = args[1] if len(args) > 1 else "mirrored-indexes"
         manifest = mirror_indices(spark, paths, dest)
         print(f"mirrored {sum(not m['skipped'] for m in manifest)} files "

@@ -101,15 +101,15 @@ class SnapshotStore:
             self.manifest()["snapshots"].get(str(snap), {}).get("tables", {})
         ).get(table)
 
-    def read(self, table: str, snap: int | None = None) -> DataFrame:
-        """Read via the MANIFEST path: carry-forward tables are recorded
+    def read(self, table: str) -> DataFrame:
+        """Read `table` at the current snapshot (read_at reads an older
+        one) via the MANIFEST path: carry-forward tables are recorded
         pointing at an older snapshot's data dir (manifest reuse), so
         resolving by directory convention would silently miss them — that
         bug dropped robots rules after the first iteration until the
         crawl-order oracle test caught it. Delta tables resolve to a
         union/merge view of their segments (merge-on-read)."""
-        if snap is None:
-            snap = self.current_snapshot()
+        snap = self.current_snapshot()
         meta = self._meta(table, snap)
         if meta is None:
             return self.spark.read.parquet(self._table_dir(snap, table))
@@ -178,9 +178,9 @@ class SnapshotStore:
             )
         return rows.drop("_seq")
 
-    def exists(self, table: str, snap: int | None = None) -> bool:
-        if snap is None:
-            snap = self.current_snapshot()
+    def exists(self, table: str) -> bool:
+        """Whether the current snapshot has `table`."""
+        snap = self.current_snapshot()
         if snap < 0:
             return False
         if self._meta(table, snap) is not None:

@@ -33,8 +33,8 @@ Trade-offs vs the exact path (deliberate, documented):
 
   * the seen anti-join keys on url_hash ALONE (exact path: (url_hash,
     url)), so a 64-bit collision can drop a never-seen URL — ~3 expected
-    false drops at 10^10 URLs (urlseen._seen_keys documents the same
-    weaker contract for hash-only callers).
+    false drops at 10^10 URLs (urlseen._seen_keys explains why the exact
+    path keys on both).
   * politeness windows partition by host_id = xxhash64(host): two hosts
     colliding share one quota window — P ≈ n_hosts²/2^65 ≈ 5e-6 at 10^7
     hosts.
@@ -45,11 +45,10 @@ Trade-offs vs the exact path (deliberate, documented):
     UNSEEN candidates (ADVICE r4): m colliding payload urls match each of
     the k scheduled skinny rows for that hash (m*k batch rows, duplicate
     host_ranks, quota exceeded) — same ~n²/2^65 probability class as the
-    false-drop above. dedupe_collisions=True repairs it post-join by
-    pairing the i-th smallest url with the i-th rank per hash group (one
-    batch-sized window exchange); off by default because that exchange —
-    tiny as it is — breaks the "quota-bounded frames only past the
-    windows" plan shape the audits pin.
+    false-drop above. It is left unrepaired: a repair needs a window
+    exchange over the batch, which breaks the "quota-bounded frames only
+    past the windows" plan shape the audits pin, and this operator
+    exists to show that shape (tested: test_diet_collision_fanout).
 
 With per-candidate distinct priorities the diet's output EQUALS the exact
 path's output, including host_rank (tested: test_frontier_diet.py).
@@ -74,10 +73,7 @@ def schedule_frontier_compact(
     host_quotas: DataFrame | None = None,
     default_quota: int = 100,
     n_salt: int = 16,
-    priority_col: Column | None = None,
     broadcast: bool | None = None,
-    dedupe_collisions: bool = False,
-    quota_cap: int | None = None,
 ) -> DataFrame:
     """Seen-filter + politeness top-k on the 24 B skinny frame; payload
     re-joined once after the final row_number filter.
@@ -91,11 +87,8 @@ def schedule_frontier_compact(
     if "url_hash" not in cand.columns:
         cand = with_url_hash(cand)
 
-    prio = (
-        priority_col
-        if priority_col is not None
-        else F.coalesce(F.col("priority"), F.lit(0.0))
-        + F.coalesce(F.col("recrawl_score"), F.lit(0.0))
+    prio = F.coalesce(F.col("priority"), F.lit(0.0)) + F.coalesce(
+        F.col("recrawl_score"), F.lit(0.0)
     )
     # the ONLY frame that crosses any exchange until the final payload join
     skinny = cand.select(
@@ -131,26 +124,18 @@ def schedule_frontier_compact(
     )
     # no explicit repartition (r7): the window's own exchange enables
     # WindowGroupLimit(Partial) below it — see politeness.schedule_batch
-    # quota_cap: literal upper bound on every quota → WindowGroupLimit
-    # (see politeness.schedule_batch); exact per-host filter still applies
-    def _rank_filter(rn: Column) -> Column:
-        exact = rn <= F.col("quota")
-        if quota_cap is not None:
-            return (rn <= F.lit(int(quota_cap))) & exact
-        return exact
-
     w_local = Window.partitionBy("host_id", "_salt").orderBy(
         F.desc("_prio"), F.asc("url_hash")
     )
     df = df.withColumn("_lrn", F.row_number().over(w_local)).where(
-        _rank_filter(F.col("_lrn"))
+        F.col("_lrn") <= F.col("quota")
     )
     w_host = Window.partitionBy("host_id").orderBy(
         F.desc("_prio"), F.asc("url_hash")
     )
     sched = (
         df.withColumn("_rn", F.row_number().over(w_host))
-        .where(_rank_filter(F.col("_rn")))
+        .where(F.col("_rn") <= F.col("quota"))
         .select(
             "url_hash",
             F.col("_rn").alias("host_rank"),
@@ -161,23 +146,6 @@ def schedule_frontier_compact(
     # late payload join: sched is quota-bounded → AQE broadcast; the
     # payload branch re-derives url_hash map-side (no exchange)
     payload = cand.select("url_hash", "url", "host")
-    out = payload.join(sched, "url_hash").select(
+    return payload.join(sched, "url_hash").select(
         "url_hash", "url", "host", "host_rank", "effective_priority"
     )
-    if dedupe_collisions:
-        # collision fanout repair (module docstring): m colliding payload
-        # urls × k scheduled skinny rows joined to m*k rows. Pair the i-th
-        # smallest url with the i-th best rank per hash group — identity
-        # for the 1×1 no-collision case, and under a collision every url
-        # is scheduled at most once with the quota respected. Both windows
-        # partition on url_hash → ONE batch-sized exchange, never the
-        # candidate set.
-        w_u = Window.partitionBy("url_hash").orderBy("url")
-        w_r = Window.partitionBy("url_hash").orderBy("host_rank")
-        out = (
-            out.withColumn("_ui", F.dense_rank().over(w_u))
-            .withColumn("_ri", F.dense_rank().over(w_r))
-            .where(F.col("_ui") == F.col("_ri"))
-            .drop("_ui", "_ri")
-        )
-    return out

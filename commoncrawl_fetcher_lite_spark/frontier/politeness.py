@@ -159,8 +159,10 @@ def host_quota(
     default_burst: int = 10,
     default_max_per_batch: int = 100,
     robots: DataFrame | None = None,
-) -> DataFrame:
-    """→ (host, quota int). host_budget may contain a '*' default row.
+) -> tuple[DataFrame, int]:
+    """→ ((host, quota int) frame, default quota int). host_budget may
+    contain a '*' default row; the default quota is what a host with no
+    row gets.
 
     When `robots` carries crawl_delay_s for a host, its effective token
     rate is capped at 1/crawl_delay (the robots.txt Crawl-delay contract
@@ -206,7 +208,6 @@ def refill_tokens(
     tokens_per_sec: float,
     burst: int,
     max_per_batch: int,
-    host_budget: DataFrame | None = None,
     robots: DataFrame | None = None,
 ) -> DataFrame:
     """Token-bucket refill → (host, avail double, quota int).
@@ -220,40 +221,14 @@ def refill_tokens(
     iteration's host_state — this is the north star's "host token-bucket
     state" carried across batches.
 
-    `host_budget` rows (host, tokens_per_sec, burst, max_per_batch; '*'
-    row = defaults) override the scalar defaults per host; robots
-    Crawl-delay caps the rate at 1/delay like host_quota."""
+    rate, burst and max_per_batch are the same for every host (the
+    crawl's FrontierConfig defaults), except that robots Crawl-delay caps
+    a host's rate at 1/delay like host_quota."""
     spark = hosts.sparkSession
     if host_state is None:
         host_state = spark.createDataFrame([], "host string, tokens double")
     out = hosts.select("host").distinct()
-    if host_budget is not None:
-        dflt = host_budget.where(F.col("host") == "*").collect()
-        if dflt:
-            tokens_per_sec = dflt[0]["tokens_per_sec"]
-            burst = dflt[0]["burst"]
-            max_per_batch = dflt[0]["max_per_batch"]
-        out = out.join(
-            maybe_broadcast(
-                host_budget.where(F.col("host") != "*").select(
-                    "host",
-                    F.col("tokens_per_sec").alias("_rate"),
-                    F.col("burst").alias("_burst"),
-                    F.col("max_per_batch").alias("_maxpb"),
-                )
-            ),
-            "host",
-            "left",
-        )
-    else:
-        out = out.withColumns(
-            {
-                "_rate": F.lit(None).cast("double"),
-                "_burst": F.lit(None).cast("int"),
-                "_maxpb": F.lit(None).cast("int"),
-            }
-        )
-    rate = F.coalesce(F.col("_rate"), F.lit(float(tokens_per_sec)))
+    rate = F.lit(float(tokens_per_sec))
     if robots is not None:
         out = out.join(
             maybe_broadcast(robots.select("host", "crawl_delay_s")),
@@ -264,8 +239,7 @@ def refill_tokens(
             F.col("crawl_delay_s").isNotNull() & (F.col("crawl_delay_s") > 0),
             F.least(rate, 1.0 / F.col("crawl_delay_s")),
         ).otherwise(rate)
-    brst = F.coalesce(F.col("_burst").cast("double"), F.lit(float(burst)))
-    maxpb = F.coalesce(F.col("_maxpb"), F.lit(int(max_per_batch)))
+    brst = F.lit(float(burst))
     refill = rate * F.lit(float(batch_seconds))
     avail = F.least(brst + refill, F.coalesce(F.col("tokens"), brst) + refill)
     # host_state grows with every host ever scheduled (~10^7+ at CC scale):
@@ -276,7 +250,9 @@ def refill_tokens(
         .select(
             "host",
             avail.alias("avail"),
-            F.least(maxpb, F.floor(avail).cast("int")).alias("quota"),
+            F.least(
+                F.lit(int(max_per_batch)), F.floor(avail).cast("int")
+            ).alias("quota"),
         )
     )
 
@@ -295,7 +271,6 @@ def schedule_batch(
     host_quotas: DataFrame,
     default_quota: int,
     n_salt: int = 16,
-    priority_col: Column | None = None,
     broadcast: bool | None = None,
     quota_cap: int | None = None,
 ) -> DataFrame:
@@ -306,11 +281,8 @@ def schedule_batch(
     (2) exact per-host rank over the ≤ n_salt*quota survivors. Result is
     identical to a single per-host window (same ordering key), but the heavy
     sort happens in parallel salt buckets."""
-    prio = (
-        priority_col
-        if priority_col is not None
-        else F.coalesce(F.col("priority"), F.lit(0.0))
-        + F.coalesce(F.col("recrawl_score"), F.lit(0.0))
+    prio = F.coalesce(F.col("priority"), F.lit(0.0)) + F.coalesce(
+        F.col("recrawl_score"), F.lit(0.0)
     )
     from commoncrawl_fetcher_lite_spark.functions.joins import (
         is_empty_local_relation,
@@ -373,26 +345,23 @@ def schedule_batch(
     return out
 
 
-def _validate_backoff_params(fail_threshold: float, max_backoff: float) -> None:
-    if not 0 < fail_threshold <= 1:
-        raise ValueError("update_backoff: fail_threshold must be in (0, 1]")
-    if max_backoff < 1:
-        raise ValueError("update_backoff: max_backoff must be >= 1")
+# per-host failure backoff: a batch whose per-host failure fraction reaches
+# FAIL_THRESHOLD doubles the host's quota divisor, capped at MAX_BACKOFF
+FAIL_THRESHOLD = 0.5
+MAX_BACKOFF = 64.0
 
 
-def _batch_failure_counts(
-    fetch_results: DataFrame, host_col: str, success_col: str
-) -> DataFrame:
+def _batch_failure_counts(fetch_results: DataFrame) -> DataFrame:
     """(host, n_fetched, n_failed) over one batch's fetch results — one
     groupBy(host) with map-side combine, so the exchange carries
     |hosts touched| rows regardless of batch size. A NULL success value
     counts as a FAILURE (conservative: an attempt whose outcome the
     fetcher couldn't report must not make a sick host look healthy by
     diluting its failure fraction)."""
-    return fetch_results.groupBy(host_col).agg(
+    return fetch_results.groupBy("host").agg(
         F.count(F.lit(1)).alias("n_fetched"),
         F.sum(
-            (~F.coalesce(F.col(success_col), F.lit(False))).cast("int")
+            (~F.coalesce(F.col("success"), F.lit(False))).cast("int")
         ).alias("n_failed"),
     )
 
@@ -400,7 +369,6 @@ def _batch_failure_counts(
 def effective_backoff(
     state: DataFrame | None,
     at_snap: int,
-    host_col: str = "host",
 ) -> DataFrame | None:
     """Resolve the lazily-decayed backoff state to (host, backoff_mult)
     as of snapshot `at_snap`.
@@ -435,7 +403,7 @@ def effective_backoff(
         F.lit(1.0),
     )
     return (
-        state.select(host_col, eff.alias("backoff_mult"))
+        state.select("host", eff.alias("backoff_mult"))
         .where(F.col("backoff_mult") > 1.0)
     )
 
@@ -444,14 +412,10 @@ def backoff_delta(
     prev_state: DataFrame | None,
     fetch_results: DataFrame,
     new_snap: int,
-    fail_threshold: float = 0.5,
-    max_backoff: float = 64.0,
-    host_col: str = "host",
-    success_col: str = "success",
 ) -> DataFrame:
     """The O(batch) state commit for per-host failure backoff: rows
     (host, backoff_mult, snap_set=new_snap) for ONLY the hosts whose
-    batch failure fraction reached `fail_threshold` this iteration.
+    batch failure fraction reached FAIL_THRESHOLD this iteration.
 
     Why tripped-only is lossless: under lazy decay (effective_backoff)
     a healthy-touched host's halving is IDENTICAL to an untouched
@@ -466,16 +430,14 @@ def backoff_delta(
     multiplier is resolved at `new_snap − 1` (the snapshot this
     iteration reads) before doubling. NULL success counts as failure —
     see _batch_failure_counts."""
-    _validate_backoff_params(fail_threshold, max_backoff)
-    batch = _batch_failure_counts(fetch_results, host_col, success_col)
-    prev = effective_backoff(prev_state, at_snap=int(new_snap) - 1,
-                             host_col=host_col)
+    batch = _batch_failure_counts(fetch_results)
+    prev = effective_backoff(prev_state, at_snap=int(new_snap) - 1)
     if prev is not None:
         batch = batch.join(
             maybe_broadcast(
                 prev.withColumnRenamed("backoff_mult", "_prev")
             ),
-            host_col,
+            "host",
             "left",
         )
     else:
@@ -483,13 +445,13 @@ def backoff_delta(
     p = F.coalesce(F.col("_prev"), F.lit(1.0))
     tripped = (
         F.col("n_failed").cast("double") / F.col("n_fetched")
-        >= F.lit(float(fail_threshold))
+        >= F.lit(FAIL_THRESHOLD)
     )
     return (
         batch.where(tripped)
         .select(
-            host_col,
-            F.least(p * 2, F.lit(float(max_backoff))).alias("backoff_mult"),
+            "host",
+            F.least(p * 2, F.lit(MAX_BACKOFF)).alias("backoff_mult"),
             F.lit(int(new_snap)).alias("snap_set"),
         )
     )
@@ -510,10 +472,6 @@ def backoff_prune_predicate(at_snap: int) -> str:
 def update_backoff(
     prev_state: DataFrame | None,
     fetch_results: DataFrame,
-    fail_threshold: float = 0.5,
-    max_backoff: float = 64.0,
-    host_col: str = "host",
-    success_col: str = "success",
 ) -> DataFrame:
     """Per-host failure backoff, EAGER analytic view — the distributed
     analog of the reference's per-thread 503 ladder
@@ -522,8 +480,8 @@ def update_backoff(
     shrink that host's next-iteration budget).
 
     Multiplicative increase / decrease: a batch whose per-host failure
-    fraction reaches `fail_threshold` DOUBLES the host's backoff
-    multiplier (capped at max_backoff); a healthy batch — or a batch
+    fraction reaches FAIL_THRESHOLD DOUBLES the host's backoff
+    multiplier (capped at MAX_BACKOFF); a healthy batch — or a batch
     where the host wasn't fetched at all — HALVES it (floored at 1, so
     recovered hosts return to full rate; time heals). A NULL success
     value counts as a failure (see _batch_failure_counts). Output:
@@ -537,28 +495,25 @@ def update_backoff(
     `backoff_delta` (tripped hosts only) and resolves reads through
     `effective_backoff`'s lazy decay — identical semantics, O(batch)
     I/O."""
-    _validate_backoff_params(fail_threshold, max_backoff)
     spark = fetch_results.sparkSession
     if prev_state is None:
-        prev_state = spark.createDataFrame(
-            [], f"{host_col} string, backoff_mult double"
-        )
-    batch = _batch_failure_counts(fetch_results, host_col, success_col)
+        prev_state = spark.createDataFrame([], "host string, backoff_mult double")
+    batch = _batch_failure_counts(fetch_results)
     prev = maybe_broadcast(
-        prev_state.select(host_col, F.col("backoff_mult").alias("_prev"))
+        prev_state.select("host", F.col("backoff_mult").alias("_prev"))
     )
-    joined = batch.join(prev, host_col, "outer")
+    joined = batch.join(prev, "host", "outer")
     p = F.coalesce(F.col("_prev"), F.lit(1.0))
     n = F.coalesce(F.col("n_fetched"), F.lit(0))
     nf = F.coalesce(F.col("n_failed"), F.lit(0))
     tripped = (n > 0) & (
-        nf.cast("double") / n >= F.lit(float(fail_threshold))
+        nf.cast("double") / n >= F.lit(FAIL_THRESHOLD)
     )
-    mult = F.when(tripped, F.least(p * 2, F.lit(float(max_backoff)))).otherwise(
+    mult = F.when(tripped, F.least(p * 2, F.lit(MAX_BACKOFF))).otherwise(
         F.greatest(p / 2, F.lit(1.0))
     )
     return joined.select(
-        host_col,
+        "host",
         mult.alias("backoff_mult"),
         n.alias("n_fetched"),
         nf.alias("n_failed"),

@@ -3,12 +3,19 @@
 Each iteration (SURVEY §2.12 — iterative batch over snapshot-committed
 state, not streaming state):
 
-    frontier ──(robots filter)──(URL-seen anti-join)──(politeness window)──▶ batch
-    batch ──(fetch+extract mapInPandas)──▶ docs, extracted
+    frontier ──(robots filter)──(blocklist gate)──(host_rank boost)
+             ──(URL-seen anti-join)──▶ candidates
+    candidates ──(token refill ÷ backoff → quotas)──(politeness window)
+             ──▶ batch
+    batch ──(fetch_fn: fetch+extract)──▶ fetched (redirects, links, success)
     state updates: urlseen += batch urls, frontier -= batch (+ redirects
-    discovered), host_state tokens debited
+    and links discovered), host_state tokens debited, host_backoff
+    doubled for hosts whose fetches failed
     all outputs committed as ONE snapshot → crash-resume re-runs the
     iteration deterministically from the previous snapshot.
+
+The robots, blocklist and host_rank stages run when bootstrap committed
+that policy table; the store carries it forward unchanged.
 
 State commits are INCREMENTAL (round-3 fix for the 100 TB ceiling): each
 snapshot writes only O(batch) rows — urlseen appends the batch (exact:
@@ -100,7 +107,6 @@ def run_iteration(
     store: SnapshotStore,
     cfg: FrontierConfig,
     batch_seconds: float = 60.0,
-    host_budget: DataFrame | None = None,
     fetch_fn: Callable[[DataFrame], DataFrame] | None = None,
 ) -> IterationResult:
     """One frontier iteration reading ONLY the current snapshot, committing
@@ -189,7 +195,6 @@ def run_iteration(
         cfg.default_tokens_per_sec,
         cfg.default_burst,
         cfg.default_max_per_batch,
-        host_budget=host_budget,
         robots=robots,
     ).localCheckpoint(eager=True)  # reused by the quota join AND the debit
     quotas = refilled.select("host", "quota")

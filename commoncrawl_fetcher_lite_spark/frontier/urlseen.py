@@ -1,31 +1,28 @@
-"""URL-seen set: partitioned Bloom prefilter + exact anti-join.
-
-North-rule scale target is a 10^10-entry seen set. Design:
-
-  * exact truth: `urlseen` table (url_hash bigint, url string), hash-
-    partitioned by url_hash. At 10^10 rows × ~90 B this is ~1 TB of parquet
-    — fine for a cluster, queried only via hash-bucketed anti-join.
-  * fast path: Bloom bitmap(s) built DISTRIBUTEDLY — each partition ORs its
-    rows into a local numpy bitmap inside `mapInPandas` (Arrow-batched, no
-    per-row Python), the driver ORs the per-partition bitmaps (m/8 bytes
-    each). At 10^10 scale the single bitmap becomes per-block bitmaps keyed
-    by pmod(url_hash, n_blocks) — same code per block, bitmaps stay
-    ~1-2 GiB/block and live in an Iceberg `urlseen_filter` table.
-  * probing: broadcast bitmap + vectorized numpy bit-test in a pandas UDF;
-    definite-negatives skip the exact anti-join, filter-positives (~fpp)
-    take it. bloom+exact ≡ exact (tested) — the Bloom is only a gate.
-
-Hashing: k positions via Kirsch-Mitzenmacher double hashing over the 64-bit
-url_hash (h1 = url_hash, h2 = splitmix64(url_hash)), so build and probe
-share one cheap, portable scheme; url_hash itself is Spark's xxhash64 of
-the canonicalized URL (JVM-side).
+"""URL-seen set: one exact anti-join, plus a blocked Bloom scale-path operator.
 
 This reproduces the emitter's onExists=skip dedup (ExtractorConfig.java:276)
 relationally — and makes it exact, where the reference's per-key skip is
 racy across workers.
 
-Spark's own bloom_filter_agg/might_contain are not SQL-registered in this
-build (internal, runtime-filter only), hence the numpy path.
+  * exact truth: the `urlseen` table (url_hash bigint, url string), the
+    seen set the crawl loop appends each batch to. filter_unseen is the
+    loop's only seen test: a left-anti join on (url_hash, url). url_hash
+    (Spark's xxhash64 of the canonicalized URL, JVM-side) is the
+    co-partitioning key; url makes the match exact under 64-bit
+    collisions (~2.7 expected at 10^10 URLs).
+  * blocked Bloom (build_bloom_blocks / filter_unseen_blocked): a
+    standalone operator for a 10^10-entry seen set, kept for the
+    `urlseen_blocked` bench leaf and its oracle row; the loop does not
+    call it. Per-block bitmaps keyed by pmod(url_hash, n_blocks) are
+    built and probed inside Arrow batches (no per-row Python, no driver
+    OR); definite negatives skip the exact anti-join, filter-positives
+    (~fpp) take it, so bloom+exact ≡ exact (tested).
+
+Bloom hashing: k positions via Kirsch-Mitzenmacher double hashing over the
+64-bit url_hash (h1 = url_hash, h2 = splitmix64(url_hash)), so build and
+probe share one cheap, portable scheme. Spark's own bloom_filter_agg /
+might_contain are not SQL-registered in this build (internal, runtime-
+filter only), hence the numpy path.
 """
 
 from __future__ import annotations
@@ -41,18 +38,20 @@ from pyspark.sql import types as T
 
 from commoncrawl_fetcher_lite_spark.functions.urls import url_hash
 
+_KEY = ["url_hash", "url"]  # the seen set's exact membership key
 
-def with_url_hash(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Adds url_hash as a GENERATED attribute (inline over a one-element
-    struct array). Generator nodes are not projection-collapsed, so
-    downstream consumers (Bloom-probe pandas UDF, join keys, multiple
-    references) see a computed attribute instead of re-inlining the whole
-    let-bound canonicalize+hash tree — which is both a repeat-work trap and
-    unevaluable inside a PythonUDF argument (ExtractPythonUDFs cannot hoist
-    nested lambda expressions)."""
+
+def with_url_hash(df: DataFrame) -> DataFrame:
+    """Adds url_hash of the `url` column as a GENERATED attribute (inline
+    over a one-element struct array). Generator nodes are not projection-
+    collapsed, so downstream consumers (join keys, the Bloom block id,
+    multiple references) see a computed attribute instead of re-inlining
+    the whole let-bound canonicalize+hash tree — which is both a
+    repeat-work trap and unevaluable inside a PythonUDF argument
+    (ExtractPythonUDFs cannot hoist nested lambda expressions)."""
     return df.select(
         "*",
-        F.inline(F.array(F.struct(url_hash(F.col(url_col)).alias("url_hash")))),
+        F.inline(F.array(F.struct(url_hash(F.col("url")).alias("url_hash")))),
     )
 
 
@@ -83,88 +82,25 @@ def _positions(hashes: np.ndarray, m: int, k: int) -> np.ndarray:
     return ((h1[:, None] + j[None, :] * h2[:, None]) % np.uint64(m)).astype(np.int64)
 
 
-def build_bloom(seen: DataFrame, expected: int = 1_000_000, fpp: float = 0.01) -> bytes:
-    """Distributed Bloom build: per-partition numpy bitmaps OR-reduced on
-    the driver. Returns m_bits/k header + bitmap bytes."""
-    m, k = bloom_params(expected, fpp)
-    n_words = m // 64
-
-    def build_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bitmap = np.zeros(n_words, dtype=np.uint64)
-        any_rows = False
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            any_rows = True
-            pos = _positions(pdf["url_hash"].to_numpy(np.int64), m, k).ravel()
-            np.bitwise_or.at(
-                bitmap, pos // 64, np.uint64(1) << (pos % 64).astype(np.uint64)
-            )
-        if any_rows:
-            yield pd.DataFrame({"bm": [bitmap.tobytes()]})
-
-    parts = seen.select("url_hash").mapInPandas(
-        build_part, schema=T.StructType([T.StructField("bm", T.BinaryType())])
-    )
-    bitmap = np.zeros(n_words, dtype=np.uint64)
-    for row in parts.collect():
-        bitmap |= np.frombuffer(row["bm"], dtype=np.uint64)
-    header = np.array([m, k], dtype=np.int64).tobytes()
-    return header + bitmap.tobytes()
+def _seen_keys(seen: DataFrame) -> DataFrame:
+    """The seen side's distinct (url_hash, url) join keys: a 64-bit hash
+    collision must NOT drop a never-seen URL (~2.7 collisions are expected
+    at 10^10 URLs), so the url rides along with its hash."""
+    return seen.select(*_KEY).dropDuplicates(_KEY)
 
 
-def _probe_expr(bloom: bytes):
-    """Vectorized pandas-UDF probe over url_hash → bool maybe_seen."""
-    header = np.frombuffer(bloom[:16], dtype=np.int64)
-    m, k = int(header[0]), int(header[1])
-    bitmap = np.frombuffer(bloom[16:], dtype=np.uint64)
+def filter_unseen(candidates: DataFrame, seen: DataFrame) -> DataFrame:
+    """candidates minus seen, exact: a left-anti join on (url_hash, url).
 
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.BooleanType())
-    def probe(hashes: pd.Series) -> pd.Series:
-        h = hashes.to_numpy(np.int64)
-        pos = _positions(h, m, k)
-        words = bitmap[pos // 64]
-        bits = (words >> (pos % 64).astype(np.uint64)) & np.uint64(1)
-        return pd.Series(bits.all(axis=1))
-
-    return probe
-
-
-def _seen_keys(seen: DataFrame) -> tuple[DataFrame, list[str]]:
-    """Join-key frame for the seen side: (url_hash, url) when the full URL
-    is available — a 64-bit hash collision must NOT drop a never-seen URL
-    (at 10^10 URLs ~2.7 collisions are expected); hash-only is accepted for
-    callers that only kept hashes (explicitly weaker)."""
-    if "url" in seen.columns:
-        return (
-            seen.select("url_hash", "url").dropDuplicates(["url_hash", "url"]),
-            ["url_hash", "url"],
-        )
-    return seen.select("url_hash").distinct(), ["url_hash"]
-
-
-def filter_unseen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    bloom: bytes | None = None,
-    url_col: str = "url",
-) -> DataFrame:
-    """candidates minus seen (exact), with optional Bloom pre-gate.
-
-    The anti-join key is (url_hash, url): url_hash co-partitions (the seen
-    table is hash-bucketed by it), the url column makes the match exact
-    under 64-bit collisions. Shuffle payload stays key+url only — at scale
-    the Bloom gate means just ~fpp of candidates take this join at all.
+    Both sides carry the 8-byte url_hash, so candidates that lack it get
+    it derived from their url; the url column makes the match exact under
+    64-bit collisions. This is the crawl loop's seen test.
 
     Rejected design, measured: a broadcast-hash prefilter (split candidates
     by a broadcast semi/anti on the 8-byte hash set, exact-join only the
     positives) is ~2x SLOWER here (29 s vs 14.8 s at 16M/4M, 8 cores) —
     the union's two branches each re-execute the expensive candidate scan,
-    and a multi-million-row broadcast relation costs more than it saves.
-    The Bloom byte-gate keeps the split cheap because the probe is one
-    vectorized UDF column, not a join."""
+    and a multi-million-row broadcast relation costs more than it saves."""
     from commoncrawl_fetcher_lite_spark.functions.letbind import (
         spread_for_compute,
     )
@@ -173,16 +109,8 @@ def filter_unseen(
     if "url_hash" not in cand.columns:
         # spread before the canonicalize+hash pass (r7): no-op when the
         # caller's scan is already wide, 1-2-core fix when it is not
-        cand = with_url_hash(spread_for_compute(cand), url_col)
-    seen_kv, keys = _seen_keys(seen)
-    if bloom is not None:
-        probe = _probe_expr(bloom)
-        cand = cand.withColumn("maybe_seen", probe(F.col("url_hash")))
-        negatives = cand.where(~F.col("maybe_seen")).drop("maybe_seen")
-        positives = cand.where(F.col("maybe_seen")).drop("maybe_seen")
-        checked = positives.join(seen_kv, keys, "left_anti")
-        return negatives.unionByName(checked)
-    return cand.join(seen_kv, keys, "left_anti")
+        cand = with_url_hash(spread_for_compute(cand))
+    return cand.join(_seen_keys(seen), _KEY, "left_anti")
 
 
 # ---------------------------------------------------------- blocked Bloom
@@ -210,8 +138,8 @@ def build_bloom_blocks(
 
     Per-block parameters are sized for expected/n_blocks keys; each block's
     bitmap is built entirely inside its applyInPandas group — the driver
-    never materializes any bitmap (contrast build_bloom, which OR-reduces
-    on the driver and caps out around 10^9 keys)."""
+    never materializes any bitmap (a single driver-OR-reduced bitmap caps
+    out around 10^9 keys)."""
     m, k = bloom_params(max(1, expected // n_blocks), fpp)
     n_words = m // 64
 
@@ -255,7 +183,6 @@ def probe_bloom_blocks(
     candidates: DataFrame,
     blocks: DataFrame,
     n_blocks: int,
-    url_col: str = "url",
 ) -> DataFrame:
     """candidates + maybe_seen bool via cogrouped per-block probe.
 
@@ -271,7 +198,7 @@ def probe_bloom_blocks(
     if "url_hash" not in cand.columns:
         # spread before the canonicalize+hash pass (r7): narrow scans pin
         # it to 1-2 cores; no-op on wide production scans
-        cand = with_url_hash(spread_for_compute(cand), url_col)
+        cand = with_url_hash(spread_for_compute(cand))
     cand = cand.withColumn("_block", _block_of(F.col("url_hash"), n_blocks))
     out_schema = T.StructType(
         list(cand.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
@@ -303,14 +230,14 @@ def filter_unseen_blocked(
     seen: DataFrame,
     blocks: DataFrame,
     n_blocks: int,
-    url_col: str = "url",
 ) -> DataFrame:
     """Blocked-Bloom-gated exact unseen filter: definite negatives skip the
     exact anti-join entirely; only the ~fpp filter-positives take it."""
-    probed = probe_bloom_blocks(candidates, blocks, n_blocks, url_col)
+    probed = probe_bloom_blocks(candidates, blocks, n_blocks)
     negatives = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
     positives = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-    seen_kv, keys = _seen_keys(seen)
-    return negatives.unionByName(positives.join(seen_kv, keys, "left_anti"))
+    return negatives.unionByName(
+        positives.join(_seen_keys(seen), _KEY, "left_anti")
+    )
 
 

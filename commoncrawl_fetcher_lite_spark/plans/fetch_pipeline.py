@@ -33,7 +33,7 @@ from commoncrawl_fetcher_lite_spark.operators.budgets import (
 )
 from commoncrawl_fetcher_lite_spark.operators.selector import compile_selector
 from commoncrawl_fetcher_lite_spark.sources.cdx import (
-    expand_index_paths,
+    index_paths_for_config,
     parse_cdx,
     scan_cdx,
 )
@@ -54,7 +54,7 @@ def run_fetch(
     cfg: ExtractorConfig,
     path_resolver: Callable[[str], str] | None = None,
 ) -> FetchResult:
-    paths = expand_index_paths(list(cfg.index_paths), cfg.max_index_files)
+    paths = index_paths_for_config(cfg)
     # stats pass: one scan for the dense line numbers and the exact
     # per-file line counts the maxRecords stop needs
     scan = scan_cdx(spark, paths)

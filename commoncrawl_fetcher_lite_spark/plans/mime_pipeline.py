@@ -21,7 +21,7 @@ from commoncrawl_fetcher_lite_spark.operators.budgets import stop_at_max_records
 from commoncrawl_fetcher_lite_spark.operators.mimes import count_mimes
 from commoncrawl_fetcher_lite_spark.operators.selector import compile_selector
 from commoncrawl_fetcher_lite_spark.sources.cdx import (
-    expand_index_paths,
+    index_paths_for_config,
     parse_cdx,
     scan_cdx,
 )
@@ -29,7 +29,7 @@ from commoncrawl_fetcher_lite_spark.sources.cdx import (
 
 def run_count_mimes(spark: SparkSession, cfg: ExtractorConfig) -> DataFrame:
     """→ (mime, total, truncated, non_truncated) sorted desc by total."""
-    paths = expand_index_paths(list(cfg.index_paths), cfg.max_index_files)
+    paths = index_paths_for_config(cfg)
     has_budget = cfg.max_records < LONG_MAX
     # dense per-file line numbers cost a stats scan — only the maxRecords
     # stop needs them (and its exact per-file counts); the pure aggregation

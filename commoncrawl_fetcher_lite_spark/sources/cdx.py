@@ -132,7 +132,7 @@ def index_paths_for_config(cfg) -> list[str]:
     dir-walk discovery when none are given and indices.basePath is set
     (IndexIterator.java:144-149)."""
     paths = list(cfg.index_paths)
-    base = getattr(cfg, "index_base_path", "")
+    base = cfg.index_base_path
     if not paths and base:
         rel = discover_index_paths(base)
 

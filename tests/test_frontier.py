@@ -14,7 +14,6 @@ from commoncrawl_fetcher_lite_spark.frontier.politeness import (
 )
 from commoncrawl_fetcher_lite_spark.frontier.scheduler import bootstrap, run
 from commoncrawl_fetcher_lite_spark.frontier.urlseen import (
-    build_bloom,
     filter_unseen,
     with_url_hash,
 )
@@ -28,22 +27,6 @@ def seeds_df(spark, fixture_t1):
 @pytest.fixture(scope="module")
 def robots_df(spark, fixture_t1):
     return spark.read.parquet(f"{fixture_t1.root}/robots.parquet")
-
-
-def test_urlseen_bloom_equals_exact(spark, seeds_df):
-    seen = with_url_hash(seeds_df.limit(3000).select("url").distinct())
-    cands = seeds_df.select("url", "host").distinct()
-    exact = {
-        r["url"] for r in filter_unseen(cands, seen).select("url").collect()
-    }
-    bloom = build_bloom(seen, expected=10_000)
-    with_bloom = {
-        r["url"]
-        for r in filter_unseen(cands, seen, bloom=bloom).select("url").collect()
-    }
-    assert with_bloom == exact
-    # sanity: the filter actually removed things
-    assert len(exact) < cands.count()
 
 
 def test_schedule_quota_respected(spark, seeds_df):
@@ -161,6 +144,8 @@ def test_blocked_bloom_equals_exact(spark, seeds_df):
     exact = {
         r["url"] for r in filter_unseen(cands, seen).select("url").collect()
     }
+    # sanity: the filter actually removed things
+    assert len(exact) < cands.count()
     for n_blocks in (1, 4, 64):
         blocks = build_bloom_blocks(seen, n_blocks=n_blocks, expected=10_000)
         got = {
@@ -851,12 +836,6 @@ def test_update_backoff_caps_and_floors(spark):
     out = {r.host: r.backoff_mult for r in update_backoff(prev, results).collect()}
     assert out["x.example.com"] == 64.0  # capped
     assert out["y.example.com"] == 1.0  # floored
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        update_backoff(prev, results, fail_threshold=0.0)
-    with _pytest.raises(ValueError):
-        update_backoff(prev, results, max_backoff=0.5)
 
 
 def test_backoff_wired_into_scheduler(spark, tmp_path):

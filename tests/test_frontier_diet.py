@@ -135,11 +135,11 @@ def test_diet_plan_shuffles_skinny(spark):
     )
 
 
-def test_diet_collision_fanout_and_dedupe(spark):
+def test_diet_collision_fanout(spark):
     """ADVICE r4: a 64-bit url_hash collision between two UNSEEN
     candidates fans the late payload join out (duplicate scheduled rows
-    sharing one host_rank, quota exceeded by one). dedupe_collisions=True
-    repairs it with a batch-sized group-by keeping the smallest url."""
+    sharing one host_rank, quota exceeded by one). The diet documents this
+    trade-off and leaves it unrepaired; this pins the documented shape."""
     cand = spark.createDataFrame(
         [
             # planted collision: two distinct urls, same pre-set hash
@@ -163,12 +163,3 @@ def test_diet_collision_fanout_and_dedupe(spark):
     # and /c pushed out entirely
     assert len(fanned) == 4
     assert sorted(r["host_rank"] for r in fanned) == [1, 1, 2, 2]
-
-    fixed = schedule_frontier_compact(
-        cand, seen, quotas, n_salt=2, broadcast=True, dedupe_collisions=True
-    ).collect()
-    assert len(fixed) == 2
-    by_rank = {r["host_rank"]: r["url"] for r in fixed}
-    # i-th smallest url paired with i-th rank: each url once, quota kept
-    assert by_rank[1] == "https://h.example.com/a"
-    assert by_rank[2] == "https://h.example.com/b"

@@ -211,6 +211,48 @@ def test_discover_index_paths_dirwalk(tmp_path):
         index_paths_for_config(ExtractorConfig(index_base_path=str(base)))
 
 
+def test_index_base_path_reaches_fetch_and_count_mimes(spark, fixture_t1, tmp_path):
+    """A config with only indices.basePath set: the dry-run Fetch and
+    CountMimes read the discovered index files' records, the same as a
+    config listing those files in indices.paths."""
+    import shutil
+
+    from commoncrawl_fetcher_lite_spark.plans.mime_pipeline import (
+        run_count_mimes,
+    )
+
+    fx = fixture_t1
+    base = tmp_path / "cc"
+    (base / "indexes").mkdir(parents=True)
+    copied = []
+    for p in fx.index_paths:
+        dst = base / "indexes" / os.path.basename(p)
+        shutil.copyfile(p, dst)
+        copied.append(str(dst))
+
+    by_base = ExtractorConfig(
+        index_base_path=str(base), selector=SELECTOR, dry_run=True
+    )
+    by_paths = ExtractorConfig(
+        index_paths=tuple(copied), selector=SELECTOR, dry_run=True
+    )
+
+    got = {
+        (r["index_file_seq"], r["line_no"])
+        for r in run_fetch(spark, by_base)
+        .would_extract.select("index_file_seq", "line_no")
+        .collect()
+    }
+    ores = oracle.process_stream(_oracle_files(fx), selector=SELECTOR)
+    assert got and got == {(s, ln) for s, ln, _ in ores.extract_branch}
+
+    mimes = sorted(tuple(r) for r in run_count_mimes(spark, by_base).collect())
+    assert mimes
+    assert mimes == sorted(
+        tuple(r) for r in run_count_mimes(spark, by_paths).collect()
+    )
+
+
 def test_extract_payloads_warn_and_skip(spark, fixture_t1):
     """One missing/unreadable WARC must not fail the job: the bad record is
     skipped with a warning (FileFromCCWarcExtractor.fetchToPath catches and
