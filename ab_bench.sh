@@ -14,8 +14,10 @@
 # won (direction from BENCHMARK.json). For each end-to-end metric it also
 # gives the change median's relative delta against the parent median and
 # flags WORSE>bound when the delta is worse than that metric's `bound` in
-# BENCHMARK.json (the no-regression rule). TRACE=1 compares per-layer
-# metrics.
+# BENCHMARK.json (the no-regression rule), and UNRESOLVED when the parent
+# runs' quartile spread (q3-q1)/median is wider than that bound, unless
+# every change run beats every parent run: such a delta cannot be told
+# from run-to-run noise. TRACE=1 compares per-layer metrics.
 # Results are kept in $AB_OUT (default: a file in the temporary directory,
 # removed at exit).
 set -euo pipefail
@@ -112,5 +114,14 @@ for name in names:
         verdict = f"  {delta:+.1%}" + (
             f" WORSE>bound {bound[name]:.0%}" if worse > bound[name] else ""
         )
+        q1, _, q3 = quartiles(vals["parent"])
+        spread = (q3 - q1) / pm if pm else 0.0
+        # every change run better than every parent run
+        if better[name] == "higher":
+            separated = min(vals["change"]) > max(vals["parent"])
+        else:
+            separated = max(vals["change"]) < min(vals["parent"])
+        if spread > bound[name] and not separated:
+            verdict += f" UNRESOLVED spread {spread:.0%}"
     print(f"{name:40} {cols[0]:>28} {cols[1]:>28} {won}/{pairs}{verdict}")
 EOF

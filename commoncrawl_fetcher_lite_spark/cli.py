@@ -61,16 +61,7 @@ def main(argv: list[str]) -> int:
     # Fetch
     from commoncrawl_fetcher_lite_spark.plans.fetch_pipeline import run_fetch
 
-    resolver = None
-    if cfg.fetch.kind == "fs" and cfg.fetch.base_path:
-        import os
-
-        base = cfg.fetch.base_path
-
-        def resolver(f: str) -> str:
-            return os.path.join(base, os.path.basename(f))
-
-    res = run_fetch(spark, cfg, path_resolver=resolver)
+    res = run_fetch(spark, cfg)
     if cfg.dry_run:
         n = res.would_extract.count()
         print(f"dry run: would extract {n} records; "

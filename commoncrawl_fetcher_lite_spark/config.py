@@ -72,6 +72,10 @@ class EmitConfig:
       else              → 'fs' (FileSystemEmitter: path or 'docs',
                           onExists=skip)
 
+    The Fetch passes this config to extract_payloads, which builds the sink
+    executor-side with sources.emitters.emitter_for (an S3 client does not
+    pickle); the pathless fs config (no 'docs') builds none.
+
     on_exists='skip' is the reference default — in the engine this dedup is
     also enforced relationally (URL-seen / content-seen anti-join) before
     write; the sink-level skip stays as the idempotency backstop.

@@ -131,7 +131,7 @@ def run_fetch(
     # absent + S3/fs/explicit-resolver → uncapped; explicit values win).
     # The cap is passed into extract_payloads so its filename-hash
     # repartition does both jobs at once: bound the task count AND keep
-    # each WARC's records in one task (the per-task handle cache). The
+    # each WARC's records in one task (one fs handle per file). The
     # shuffle barrier keeps the upstream scan/parse at full width.
     from commoncrawl_fetcher_lite_spark.config import effective_fetch_cap
 
@@ -142,7 +142,7 @@ def run_fetch(
         target_path_pattern=cfg.target_path_pattern or "xx/xx/xxx",
         num_partitions=effective_fetch_cap(cfg, transport_is_http),
         task_deadline_seconds=cfg.fetch_deadline_seconds,
-        emit_dir=cfg.emit.base_path or None,
+        emit=cfg.emit,
         fetcher_factory=fetcher_factory,
     )
     # A4 run counters (CCIndexReaderCounter.java:22-25) as an observe()

@@ -53,9 +53,10 @@ def s3_emitter(client, bucket: str, prefix: str = "") -> Emitter:
     return emit
 
 
-def emitter_for(cfg, client=None) -> Emitter:
+def emitter_for(cfg, client=None) -> Emitter | None:
     """EmitConfig → emitter, mirroring newEmitter's precedence
-    (ExtractorConfig.java:249-278): s3 when a profile is set, else fs."""
+    (ExtractorConfig.java:249-278): s3 when a profile is set, else fs.
+    The pathless fs config of a job without 'docs' has no sink: None."""
     if cfg.kind == "s3":
         if client is None:
             from commoncrawl_fetcher_lite_spark.sources.fetcher import (
@@ -64,4 +65,4 @@ def emitter_for(cfg, client=None) -> Emitter:
 
             client = make_s3_client(cfg.profile, cfg.region)
         return s3_emitter(client, cfg.bucket, cfg.prefix)
-    return fs_emitter(cfg.base_path)
+    return fs_emitter(cfg.base_path) if cfg.base_path else None

@@ -41,8 +41,9 @@ class BackoffFetcher:
     attempts: int = field(default=0, init=False)  # metrics: total retries
 
     def resolve_key(self, key: str) -> str:
-        """T2: relative keys get the CC base prefix."""
-        if key.startswith(("http://", "https://", "s3://", "/")):
+        """T2: relative keys get the CC base prefix. An empty base (the s3
+        and fs transports) passes every key through as the index wrote it."""
+        if not self.url_base or key.startswith(("http://", "https://", "s3://", "/")):
             return key
         return f"{self.url_base}/{key}"
 
@@ -76,14 +77,22 @@ def _is_throttle(e: Exception) -> bool:
 
 
 def local_fs_transport(path_resolver: Callable[[str], str]):
-    """Test/fixture transport: ranged reads from local files."""
+    """The fs reader: ranged reads from local files, key -> path by
+    path_resolver. The current file stays open until the key changes, so
+    the offset-sorted records of one WARC read through one handle; the
+    handle closes when the transport is dropped (the end of its partition,
+    which builds one transport per task)."""
+    open_key, handle = None, None
 
     def transport(key: str, start: int | None, end: int | None) -> bytes:
-        with open(path_resolver(key), "rb") as f:
-            if start is None:
-                return f.read()
-            f.seek(start)
-            return f.read((end - start + 1) if end is not None else None)
+        nonlocal open_key, handle
+        if key != open_key:
+            f = open(path_resolver(key), "rb")  # raises before any state changes
+            if handle is not None:
+                handle.close()
+            open_key, handle = key, f
+        handle.seek(start or 0)
+        return handle.read(-1 if start is None or end is None else end - start + 1)
 
     return transport
 
@@ -182,14 +191,19 @@ def make_s3_client(profile: str, region: str = "us-east-1"):
     return session.client("s3")
 
 
-def transport_for(cfg, path_resolver: Callable[[str], str] | None = None):
-    """FetchConfig → transport, mirroring newFetcher's precedence
-    (ExtractorConfig.java:201-220): s3 (profile) / fs (basePath) / http."""
+def transport_for(cfg):
+    """FetchConfig -> transport, mirroring newFetcher's precedence
+    (ExtractorConfig.java:201-220): s3 (profile) / fs (basePath) / http.
+
+    fs key rule: basePath/basename(key) — the WARC files sit flat under
+    basePath, as the fixtures and perfbench write them. The reference's
+    FileSystemFetcher resolves the full key (basePath/crawl-data/...), a
+    mirror of the bucket's tree."""
     if cfg.kind == "s3":
         return s3_transport(make_s3_client(cfg.profile, cfg.region), cfg.bucket)
     if cfg.kind == "fs":
         import os
 
-        resolver = path_resolver or (lambda k: os.path.join(cfg.base_path, k))
-        return local_fs_transport(resolver)
+        base = cfg.base_path
+        return local_fs_transport(lambda k: os.path.join(base, os.path.basename(k)))
     return http_transport()

@@ -14,8 +14,9 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from commoncrawl_fetcher_lite_spark.sources.emitters import fs_emitter
 
 MIRROR_SCHEMA = T.StructType(
     [
@@ -31,25 +32,22 @@ def mirror_indices(
     spark: SparkSession,
     index_paths: list[str],
     dest_dir: str,
-    on_exists: str = "skip",
 ) -> list[dict]:
-    """Copy each index file to dest_dir, distributed, skip-if-exists.
+    """Copy each index file to dest_dir through the fs sink (skip-if-exists).
     Returns the copy manifest (src, dst, n_bytes, skipped)."""
     os.makedirs(dest_dir, exist_ok=True)
     df = spark.read.format("binaryFile").load(index_paths)
 
     def copy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        emit = fs_emitter(dest_dir)
         for pdf in batches:
             rows = []
             for path, content in zip(pdf["path"], pdf["content"]):
                 local_src = path.replace("file:", "")
-                dst = os.path.join(dest_dir, os.path.basename(local_src))
-                skipped = os.path.exists(dst) and on_exists == "skip"
-                if not skipped:
-                    tmp = dst + ".tmp"
-                    with open(tmp, "wb") as f:
-                        f.write(bytes(content))
-                    os.replace(tmp, dst)
+                name = os.path.basename(local_src)
+                dst = os.path.join(dest_dir, name)
+                skipped = os.path.exists(dst)
+                emit(name, bytes(content))
                 rows.append(
                     {
                         "src": local_src,

@@ -13,11 +13,14 @@ Reference semantics (extractor/FileFromCCWarcExtractor.java):
                        targetPathPattern; success CSV row
 
 Engine shape: a `mapInPandas` stage over the selected+budgeted record set.
-The iterator keeps one open file handle per distinct WARC file per batch and
-sorts each batch by (filename, offset), so co-partitioning the input by
-filename (one repartition — the same shuffle a cluster needs to coalesce
-HTTP range requests per compound WARC) turns the fetch into sequential
-ranged reads. All Python work is Arrow-batched; no per-row UDF.
+Every record is read by one ranged `fetch(key, start, end)` on a fetcher
+built once per partition (S5-S8: http / s3 / fs). The input is
+co-partitioned by filename (one repartition — the same shuffle a cluster
+needs to coalesce HTTP range requests per compound WARC) and each batch is
+sorted by (filename, offset), so the fetch reads each WARC forward; the fs
+transport keeps the current file open until the key changes. Payloads go
+to the job's sink (S9/S10), also built per partition. All Python work is
+Arrow-batched; no per-row UDF.
 
 Interleaved doc assembly (input_hint shape, engine-defined rule mirrored by
 tests/oracle.py):
@@ -41,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from commoncrawl_fetcher_lite_spark.config import EmitConfig
 from commoncrawl_fetcher_lite_spark.fixtures import sha1_b32
 from commoncrawl_fetcher_lite_spark.functions.paths import rewrite_target_path_py
 
@@ -143,15 +147,35 @@ def assemble_spans(url: str, mime_detected: str | None, payload: bytes,
     ]
 
 
+def _out_row(row, *, sha256=None, length=None, path=None, digest_ok=False,
+             empty_payload=False, read_error=None, spans=None) -> dict:
+    """One output row for record `row`; the defaults are a record with no
+    payload (an empty one, or a read error)."""
+    return {
+        "url": row.url,
+        "mime": row.mime,
+        "mime_detected": row.mime_detected,
+        "warc_file": row.filename,
+        "warc_offset": int(row.offset),
+        "warc_length": int(row.length),
+        "truncated": row.truncated,
+        "sha256": sha256,
+        "length": length,
+        "path": path,
+        "digest_ok": digest_ok,
+        "empty_payload": empty_payload,
+        "read_error": read_error,
+        "spans": spans,
+    }
+
+
 def extract_payloads(
     records: DataFrame,
     path_resolver: Callable[[str], str] | None = None,
     target_path_pattern: str = "xx/xx/xxx",
-    coalesce_by_file: bool = True,
     num_partitions: int | None = None,
     task_deadline_seconds: float | None = None,
-    emit_dir: str | None = None,
-    emitter: Callable[[str, bytes], None] | None = None,
+    emit: EmitConfig | None = None,
     fetcher_factory: Callable[[], object] | None = None,
 ) -> DataFrame:
     """records must carry url, mime, mime_detected, status, digest, length,
@@ -159,20 +183,20 @@ def extract_payloads(
     extraction metadata + spans; empty payloads flagged (caller filters and
     counts them — F13).
 
-    ``emit_dir``: S9 content-addressed emit sink (ExtractorConfig.java:271-278)
-    — each payload lands at emit_dir/<rewritten sha256 path>, executor-side,
-    write-to-tmp + atomic rename, skip-if-exists (idempotent across task
-    retries, exactly the reference's onExists=skip).
+    ``fetcher_factory``: () -> an object with fetch(key, start, end), e.g.
+    a BackoffFetcher over the config's transport (HTTP/S3/FS with the 503
+    backoff ladder, S5/S6/S8). Built ONCE PER PARTITION executor-side
+    (clients aren't picklable); rows of the same WARC stay co-partitioned
+    and offset-sorted so ranged reads go forward. Without one,
+    ``path_resolver`` (filename -> local path) builds the fs fetcher:
+    ``local_fs_transport(path_resolver)``, which reads each file through
+    one handle.
 
-    ``emitter``: general sink callable (rel_path, payload) — e.g.
-    emitters.s3_emitter for the S10 twin; overrides emit_dir when both set.
-
-    ``fetcher_factory``: () -> BackoffFetcher — the ranged-read transport
-    seam (HTTP/S3/FS with the 503 backoff ladder, S5/S6/S8). Constructed
-    ONCE PER PARTITION executor-side (clients aren't picklable); rows of
-    the same WARC stay co-partitioned and offset-sorted so remote ranged
-    GETs read forward. When given, path_resolver is ignored; the local
-    open/seek fast path (one handle per file) is used otherwise.
+    ``emit``: the S9/S10 content-addressed sink (ExtractorConfig.java:
+    249-278) — each payload lands at <rewritten sha256 path> under the fs
+    base path or the s3 bucket/prefix, executor-side, skip-if-exists
+    (idempotent across task retries, exactly the reference's
+    onExists=skip). None, or the pathless fs config, writes no sink.
 
     Per-record read/parse failures (missing WARC file, bad offset, corrupt
     gzip) are skipped like the reference's warn-and-continue
@@ -184,37 +208,36 @@ def extract_payloads(
         "url", "mime", "mime_detected", "digest", "length", "offset",
         "filename", "truncated",
     ]
+    # co-locate reads of the same compound WARC (ranged-read coalescing).
+    # num_partitions (T3 numThreads cap) bounds the stage's task count
+    # while STILL hashing on filename, so one file's records stay in one
+    # task and read through one handle
     df = records.select(*cols)
-    if coalesce_by_file:
-        # co-locate reads of the same compound WARC (ranged-read coalescing).
-        # num_partitions (T3 numThreads cap) bounds the stage's task count
-        # while STILL hashing on filename — a round-robin cap would scatter
-        # one file's records across tasks and defeat the per-task handle
-        # cache (reopen per Arrow batch)
-        if num_partitions is not None and num_partitions > 0:
-            df = df.repartition(num_partitions, F.col("filename"))
-        else:
-            df = df.repartition(F.col("filename"))
-    elif num_partitions is not None and num_partitions > 0:
-        df = df.repartition(num_partitions)
-
+    if num_partitions is not None and num_partitions > 0:
+        df = df.repartition(num_partitions, F.col("filename"))
+    else:
+        df = df.repartition(F.col("filename"))
     pattern = target_path_pattern
-    if emitter is None and emit_dir is not None:
-        from commoncrawl_fetcher_lite_spark.sources.emitters import fs_emitter
-
-        emitter = fs_emitter(emit_dir)
-
-    if path_resolver is None and fetcher_factory is None:
-        raise ValueError("need path_resolver or fetcher_factory")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from commoncrawl_fetcher_lite_spark.functions.progress import (
             ProgressTicker,
         )
+        from commoncrawl_fetcher_lite_spark.sources.emitters import emitter_for
+        from commoncrawl_fetcher_lite_spark.sources.fetcher import (
+            BackoffFetcher,
+            local_fs_transport,
+        )
 
         import time as _time
 
-        fetcher = fetcher_factory() if fetcher_factory is not None else None
+        if fetcher_factory is not None:
+            fetcher = fetcher_factory()
+        else:
+            fetcher = BackoffFetcher(
+                transport=local_fs_transport(path_resolver), url_base=""
+            )
+        emitter = emitter_for(emit) if emit is not None else None
         err_types = _read_error_types()
         # A5 (CCFileExtractorRecordProcessor.java:44-54): per-task progress
         # heartbeat every 100k records, via the executor's Python logger
@@ -232,49 +255,19 @@ def extract_payloads(
             ticker.add(len(pdf))
             pdf = pdf.sort_values(["filename", "offset"])
             out_rows = []
-            handle_path = None
-            handle = None
             for row in pdf.itertuples(index=False):
                 if (
                     task_deadline_seconds is not None
                     and _time.monotonic() - t_start >= task_deadline_seconds
                 ):
-                    out_rows.append(
-                        {
-                            "url": row.url,
-                            "mime": row.mime,
-                            "mime_detected": row.mime_detected,
-                            "warc_file": row.filename,
-                            "warc_offset": int(row.offset),
-                            "warc_length": int(row.length),
-                            "truncated": row.truncated,
-                            "sha256": None,
-                            "length": None,
-                            "path": None,
-                            "digest_ok": False,
-                            "empty_payload": False,
-                            "read_error": "deadline_exceeded",
-                            "spans": None,
-                        }
-                    )
+                    out_rows.append(_out_row(row, read_error="deadline_exceeded"))
                     continue
                 try:
-                    if fetcher is not None:
-                        raw = fetcher.fetch(
-                            row.filename,
-                            int(row.offset),
-                            int(row.offset) + int(row.length) - 1,
-                        )
-                    else:
-                        local = path_resolver(row.filename)
-                        if local != handle_path:
-                            if handle is not None:
-                                handle.close()
-                            handle, handle_path = None, None  # if open() throws
-                            handle = open(local, "rb")
-                            handle_path = local
-                        handle.seek(int(row.offset))
-                        raw = handle.read(int(row.length))
+                    raw = fetcher.fetch(
+                        row.filename,
+                        int(row.offset),
+                        int(row.offset) + int(row.length) - 1,
+                    )
                 except err_types as e:  # warn-and-continue, but VISIBLY:
                     # the skip becomes an output row (read_error set) so the
                     # pipeline's observe() counter sees total loss — a
@@ -286,60 +279,32 @@ def extract_payloads(
                         f"skipping unreadable record {row.filename}@{row.offset}: {e}"
                     )
                     out_rows.append(
-                        {
-                            "url": row.url,
-                            "mime": row.mime,
-                            "mime_detected": row.mime_detected,
-                            "warc_file": row.filename,
-                            "warc_offset": int(row.offset),
-                            "warc_length": int(row.length),
-                            "truncated": row.truncated,
-                            "sha256": None,
-                            "length": None,
-                            "path": None,
-                            "digest_ok": False,
-                            "empty_payload": False,
-                            "read_error": f"{type(e).__name__}: {e}",
-                            "spans": None,
-                        }
+                        _out_row(row, read_error=f"{type(e).__name__}: {e}")
                     )
                     continue
                 parsed = parse_first_warc_record(raw)
                 if parsed is None:
                     continue  # F12: silently skipped
                 _, payload = parsed
-                empty = len(payload) == 0
-                sha256 = hashlib.sha256(payload).hexdigest() if not empty else None
-                digest_ok = (not empty) and sha1_b32(payload) == row.digest
-                if emitter is not None and not empty:
-                    emitter(rewrite_target_path_py(sha256, pattern), payload)
-                spans = (
-                    assemble_spans(row.url, row.mime_detected, payload, pattern)
-                    if not empty
-                    else None
-                )
+                if not payload:
+                    out_rows.append(_out_row(row, empty_payload=True))
+                    continue
+                sha256 = hashlib.sha256(payload).hexdigest()
+                path = rewrite_target_path_py(sha256, pattern)
+                if emitter is not None:
+                    emitter(path, payload)
                 out_rows.append(
-                    {
-                        "url": row.url,
-                        "mime": row.mime,
-                        "mime_detected": row.mime_detected,
-                        "warc_file": row.filename,
-                        "warc_offset": int(row.offset),
-                        "warc_length": int(row.length),
-                        "truncated": row.truncated,
-                        "sha256": sha256,
-                        "length": None if empty else len(payload),
-                        "path": None
-                        if empty
-                        else rewrite_target_path_py(sha256, pattern),
-                        "digest_ok": digest_ok,
-                        "empty_payload": empty,
-                        "read_error": None,
-                        "spans": spans,
-                    }
+                    _out_row(
+                        row,
+                        sha256=sha256,
+                        length=len(payload),
+                        path=path,
+                        digest_ok=sha1_b32(payload) == row.digest,
+                        spans=assemble_spans(
+                            row.url, row.mime_detected, payload, pattern
+                        ),
+                    )
                 )
-            if handle is not None:
-                handle.close()
             if out_rows:
                 yield pd.DataFrame(out_rows)
 

@@ -4,8 +4,10 @@ from __future__ import annotations
 
 import glob
 import hashlib
+import importlib.util
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from commoncrawl_fetcher_lite_spark.config import EmitConfig, ExtractorConfig
@@ -44,6 +46,31 @@ def test_content_addressed_emit(spark, fixture_t1, tmp_path):
     res2.extracted.count()
     for p, m in mtimes.items():
         assert os.path.getmtime(os.path.join(emit_dir, p)) == m
+
+
+def test_s3_emit_config_reaches_the_fetch(spark, fixture_t1):
+    """An S3 `docs` config builds its emitter in the fetch tasks, so the
+    first action fails building the client instead of running and emitting
+    nothing: make_s3_client's error without boto3, boto3's for the missing
+    profile 'p' with it. Skipped where profile 'p' exists: the emitter
+    would then reach a real S3."""
+    if importlib.util.find_spec("boto3") is None:
+        expected = "boto3 not available"
+    else:
+        import boto3
+
+        if "p" in boto3.Session().available_profiles:
+            pytest.skip("an AWS profile 'p' exists: the emitter would reach S3")
+        expected = r"profile \(p\) could not be found"
+    fx = fixture_t1
+    cfg = ExtractorConfig(
+        index_paths=(fx.paths_gz,),
+        selector=SELECTOR,
+        emit=EmitConfig(kind="s3", bucket="b", profile="p"),
+    )
+    res = run_fetch(spark, cfg, path_resolver=lambda f: warc_local_path(fx.root, f))
+    with pytest.raises(Exception, match=expected):
+        res.extracted.count()
 
 
 def test_redirect_frontier_merge(spark, tmp_path):

@@ -4,12 +4,17 @@ output and per-row span-sequence equality (the north-rule invariant)."""
 
 from __future__ import annotations
 
+import dataclasses
 import gzip
 import os
 
 import pytest
 
-from commoncrawl_fetcher_lite_spark.config import ExtractorConfig, from_json_dict
+from commoncrawl_fetcher_lite_spark.config import (
+    ExtractorConfig,
+    FetchConfig,
+    from_json_dict,
+)
 from commoncrawl_fetcher_lite_spark.fixtures import warc_local_path
 from commoncrawl_fetcher_lite_spark.plans.fetch_pipeline import run_fetch
 from commoncrawl_fetcher_lite_spark.sources.cdx import (
@@ -305,34 +310,50 @@ def test_extract_payloads_systematic_bug_fails_task(spark, fixture_t1):
         extract_payloads(recs, fetcher_factory=BrokenTransport).count()
 
 
-def test_extract_via_backoff_fetcher_matches_local(spark, fixture_t1):
-    """Ranged-read extraction through the BackoffFetcher transport seam
-    (S5/S6/S8) must produce the identical row set as the local open/seek
-    fast path — proving HTTP/S3 transports plug into extraction unchanged."""
-    from commoncrawl_fetcher_lite_spark.sources.fetcher import (
-        BackoffFetcher,
-        local_fs_transport,
-    )
-    from commoncrawl_fetcher_lite_spark.sources.warc import extract_payloads
+def test_local_fs_transport_reuses_handle_per_key(tmp_path, monkeypatch):
+    """The fs reader opens a file once across consecutive reads of one key
+    and reopens only when the key changes (offset-sorted records of one
+    WARC read through one handle)."""
+    from commoncrawl_fetcher_lite_spark.sources import fetcher
 
+    for name in ("a", "b"):
+        (tmp_path / name).write_bytes(name.encode() * 10)
+    opened = []
+
+    def counting_open(path, mode="r"):
+        opened.append(os.path.basename(path))
+        return open(path, mode)
+
+    monkeypatch.setattr(fetcher, "open", counting_open, raising=False)
+    t = fetcher.local_fs_transport(lambda k: str(tmp_path / k))
+    assert [t("a", 0, 1), t("a", 4, 6), t("a", None, None)] == [
+        b"aa", b"aaa", b"a" * 10,
+    ]
+    assert opened == ["a"]
+    assert t("b", 2, 3) == b"bb" and t("a", 9, 9) == b"a"
+    assert opened == ["a", "b", "a"]
+
+
+def test_fetcher_base_path_config_fetches_without_resolver(spark, fixture_t1):
+    """A `fetcher.basePath` config needs no path_resolver: the fs transport
+    reads basePath/basename(key), the same records the resolver run reads,
+    with no read errors."""
     fx = fixture_t1
-    recs = read_cdx_records(spark, fx.index_paths).where(
-        "status = 200 AND filename IS NOT NULL"
+    cfg = ExtractorConfig(index_paths=(fx.paths_gz,), selector=SELECTOR)
+
+    def docs(res):
+        return {
+            (r["url"], r["sha256"],
+             tuple((s["kind"], s["text"], s["media_ref"]) for s in r["spans"]))
+            for r in res.extracted.collect()
+        }
+
+    want = docs(
+        run_fetch(spark, cfg, path_resolver=lambda f: warc_local_path(fx.root, f))
     )
-    root = fx.root
-
-    def factory():
-        return BackoffFetcher(
-            transport=local_fs_transport(lambda k: warc_local_path(root, k)),
-            url_base="",
-        )
-
-    via_fetcher = {
-        (r["url"], r["sha256"], tuple((s["kind"], s["text"], s["media_ref"]) for s in (r["spans"] or [])))
-        for r in extract_payloads(recs, fetcher_factory=factory).collect()
-    }
-    via_local = {
-        (r["url"], r["sha256"], tuple((s["kind"], s["text"], s["media_ref"]) for s in (r["spans"] or [])))
-        for r in extract_payloads(recs, lambda f: warc_local_path(root, f)).collect()
-    }
-    assert via_fetcher == via_local and via_fetcher
+    fs_cfg = dataclasses.replace(
+        cfg, fetch=FetchConfig(kind="fs", base_path=os.path.join(fx.root, "warcs"))
+    )
+    via_config = run_fetch(spark, fs_cfg)
+    assert want and docs(via_config) == want
+    assert via_config.metrics["observation"].get["read_errors"] == 0
