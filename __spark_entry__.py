@@ -2421,7 +2421,7 @@ def oracle_sql() -> dict[str, str]:
                         ELSE round(least(greatest(
                             -ln((n_intervals - n_changes + 0.5)
                                 / (n_intervals + 0.5))
-                            / greatest(adt, 1e-6), 0.0), 10.0), 6)
+                            / greatest(adt, 1e-6), 0.0), 10.0), 6) + 0.0
                    END AS change_rate
             FROM agg
         """,
@@ -2721,10 +2721,10 @@ def oracle_sql() -> dict[str, str]:
                 FROM documents),
             c AS (
                 SELECT doc_id, lang, n_tokens,
-                       sum(n_tokens) OVER (PARTITION BY lang
+                       CAST(sum(n_tokens) OVER (PARTITION BY lang
                            ORDER BY k, doc_id
                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           - n_tokens AS cum_tokens_before
+                           AS BIGINT) - n_tokens AS cum_tokens_before
                 FROM t)
             SELECT doc_id, lang, n_tokens, cum_tokens_before
             FROM c
@@ -3885,7 +3885,8 @@ def oracle_sql() -> dict[str, str]:
             agg AS (
                 SELECT host, any_value(idx) AS idx,
                        count(*) AS n_fetched,
-                       sum(CASE WHEN success THEN 0 ELSE 1 END) AS n_failed
+                       CAST(sum(CASE WHEN success THEN 0 ELSE 1 END)
+                            AS BIGINT) AS n_failed
                 FROM res GROUP BY host),
             m AS (
                 SELECT host, n_fetched, n_failed,

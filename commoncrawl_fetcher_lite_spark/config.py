@@ -70,7 +70,7 @@ class EmitConfig:
       profile non-blank → 's3' (S3Emitter: bucket REQUIRED, region default
                           us-east-1, optional prefix, empty file extension)
       else              → 'fs' (FileSystemEmitter: path or 'docs',
-                          onExists=skip)
+                          onExists 'skip' (default) or 'overwrite')
 
     The Fetch passes this config to extract_payloads, which builds the sink
     executor-side with sources.emitters.emitter_for (an S3 client does not
@@ -79,6 +79,8 @@ class EmitConfig:
     on_exists='skip' is the reference default — in the engine this dedup is
     also enforced relationally (URL-seen / content-seen anti-join) before
     write; the sink-level skip stays as the idempotency backstop.
+    'overwrite' replaces an existing fs target; any other value is a
+    ValueError. S3 keeps the reference's fixed skip.
     """
 
     kind: str = "fs"
@@ -98,6 +100,11 @@ class EmitConfig:
         present-but-pathless docs dict keeps that default."""
         if d is None:
             return EmitConfig()
+        on_exists = d.get("onExists", "skip")
+        if on_exists not in ("skip", "overwrite"):
+            raise ValueError(
+                f"docs.onExists must be 'skip' or 'overwrite': {on_exists!r}"
+            )
         if d.get("profile"):
             bucket = d.get("bucket", "")
             if not bucket:
@@ -114,7 +121,7 @@ class EmitConfig:
         return EmitConfig(
             kind="fs",
             base_path=d.get("path") or DEFAULT_FS_DOCS_PATH,
-            on_exists=d.get("onExists", "skip"),
+            on_exists=on_exists,
         )
 
 

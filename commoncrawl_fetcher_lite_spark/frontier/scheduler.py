@@ -25,9 +25,12 @@ hosts touched this round, and host_backoff upserts ONLY the hosts tripped
 this round (healthy/untouched hosts halve by LAZY decay at read —
 politeness.effective_backoff — and recovered rows are pruned at
 compaction, the round-6 fix that removed the last O(all-known-hosts)
-commit). The SnapshotStore resolves reads as a merged view and compacts
-every K snapshots; at 10^10 seen URLs this turns ~1 TB of parquet I/O per
-iteration into megabytes.
+commit). The batch is written once, as the `batch` table: urlseen's delta
+and the frontier's delete segment reference that same directory, so a
+non-compacting iteration writes at most five directories (batch, fetched,
+frontier adds, host_state, host_backoff), not seven. The SnapshotStore resolves
+reads as a merged view and compacts every K snapshots; at 10^10 seen URLs
+this turns ~1 TB of parquet I/O per iteration into megabytes.
 
 The reference has no analog (restart = refetch the world); this is the
 net-new north-rule machinery. Politeness/priority semantics live in

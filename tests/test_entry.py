@@ -9,6 +9,7 @@ import os
 import sys
 
 import duckdb
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -44,6 +45,18 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def _kind(col: pd.Series) -> str:
+    if pd.api.types.is_integer_dtype(col):
+        return "int"
+    if pd.api.types.is_float_dtype(col):
+        return "float"
+    return "other"
+
+
+def _neg_zeros(col: pd.Series) -> int:
+    return int(((col == 0) & np.signbit(col)).sum())
+
+
 @pytest.mark.parametrize("name", sorted(entrymod.queries().keys()))
 def test_query_vs_oracle(spark, duck, name):
     q = entrymod.queries()[name]
@@ -58,6 +71,17 @@ def test_query_vs_oracle(spark, duck, name):
     assert sorted(got.columns) == sorted(want.columns), (
         f"{name}: cols {sorted(got.columns)} vs {sorted(want.columns)}"
     )
+    # dtype kind and signed zero: both survive the value compare below
+    # (int 3 == float 3.0; -0.0 == 0.0) yet change the result hash
+    for c in got.columns:
+        assert _kind(got[c]) == _kind(want[c]), (
+            f"{name}: column {c} dtype {got[c].dtype} vs {want[c].dtype}"
+        )
+        if _kind(got[c]) == "float":
+            assert _neg_zeros(got[c]) == _neg_zeros(want[c]), (
+                f"{name}: column {c} has {_neg_zeros(got[c])} -0.0 values "
+                f"vs {_neg_zeros(want[c])}"
+            )
     g, w = _normalize(got), _normalize(want)
     for c in g.columns:
         gv, wv = g[c].tolist(), w[c].tolist()

@@ -413,6 +413,80 @@ def test_incremental_snapshot_commits(spark, seeds_df, robots_df, tmp_path):
     hs = man["snapshots"]["3"]["tables"]["host_state"]
     assert hs["mode"] == "upsert" and len(hs["segments"]) == 3
 
+    # the batch is written once: urlseen's delta and the frontier's delete
+    # segment reference the batch table's dir, and neither chain has a
+    # dir of its own in that snapshot
+    import os
+
+    for snap in ("1", "2", "3"):
+        t = man["snapshots"][snap]["tables"]
+        assert (
+            t["urlseen"]["segments"][-1]["path"]
+            == t["frontier"]["delete_segments"][-1]["path"]
+            == t["batch"]["path"]
+        )
+        snap_dir = os.path.join(store.root, f"snap={snap}")
+        assert not os.path.exists(os.path.join(snap_dir, "urlseen"))
+        assert not os.path.exists(os.path.join(snap_dir, "frontier", "delete"))
+
+
+def test_shared_batch_dir_lives_until_both_chains_compact(
+    spark, seeds_df, robots_df, tmp_path
+):
+    """urlseen's append chain and the frontier's delete chain share the
+    batch table's dir: expire_snapshots keeps a `snap=N/batch` dir while
+    either chain still references it and sweeps it once both chains have
+    compacted past it. Redirect adds make the frontier fold one iteration
+    before urlseen, so a dir outlives its snapshot on urlseen's reference
+    alone. compact_every=3, not 2: at 2 both chains fold on their second
+    delta, and no batch dir ever outlives its own snapshot."""
+    import os
+
+    from commoncrawl_fetcher_lite_spark.frontier.scheduler import run_iteration
+
+    cfg = FrontierConfig(n_salt=4, default_max_per_batch=100)
+    seeds = seeds_df.limit(1200)
+
+    def fetch(batch):
+        return batch.withColumn("redirect", F.concat("url", F.lit("?moved")))
+
+    def chain_paths(entry):
+        return {
+            os.path.normpath(s["path"])
+            for s in entry.get("segments", []) + entry.get("delete_segments", [])
+        }
+
+    root = str(tmp_path / "a")
+    store = SnapshotStore(root, spark, compact_every=3)
+    bootstrap(store, seeds, robots_df)
+    batch_dirs = []
+    kept_by_urlseen_only = swept = 0
+    for _ in range(5):
+        res = run_iteration(store, cfg, batch_seconds=60.0, fetch_fn=fetch)
+        store.expire_snapshots(keep_last=1)
+        t = store.manifest()["snapshots"][str(res.snapshot)]["tables"]
+        seen_refs, frontier_refs = chain_paths(t["urlseen"]), chain_paths(
+            t["frontier"]
+        )
+        for d in batch_dirs:  # batch dirs of expired snapshots
+            live = d in seen_refs or d in frontier_refs
+            assert os.path.isdir(d) == live, d
+            kept_by_urlseen_only += live and d not in frontier_refs
+            swept += not live
+        batch_dirs.append(os.path.normpath(t["batch"]["path"]))
+    assert kept_by_urlseen_only and swept
+
+    never = SnapshotStore(str(tmp_path / "b"), spark, compact_every=10**9)
+    bootstrap(never, seeds, robots_df)
+    for _ in range(5):
+        run_iteration(never, cfg, batch_seconds=60.0, fetch_fn=fetch)
+    from collections import Counter
+
+    for table in ("urlseen", "frontier"):
+        a = Counter(tuple(r) for r in store.read(table).collect())
+        b = Counter(tuple(r) for r in never.read(table).collect())
+        assert a == b, f"{table} diverged"
+
 
 def test_snapshot_compaction_equivalence(spark, seeds_df, robots_df, tmp_path):
     """Compaction (fold delta chain to a base dir every K segments) must be
@@ -634,15 +708,16 @@ def test_expire_snapshots_gc(spark, seeds_df, robots_df, tmp_path):
     assert more and more[0].snapshot == results[-1].snapshot + 1
 
 
-def test_byte_budget_compaction_trigger(spark, tmp_path):
+def test_byte_budget_compaction_trigger(spark, tmp_path, monkeypatch):
     """VERDICT r3 #6: compaction must also fire on accumulated delta BYTES,
     not only segment count — with huge batches the count gate lets ~8
-    batch-sized segments pile up in the read path. compact_bytes=1 folds on
+    batch-sized segments pile up in the read path. COMPACT_BYTES=1 folds on
     the first non-trivial delta; resolve metrics surface before that."""
+    from commoncrawl_fetcher_lite_spark.frontier import checkpoint
+
     root = str(tmp_path / "bb")
-    store = SnapshotStore(
-        root, spark, compact_every=10**9, compact_bytes=1
-    )
+    monkeypatch.setattr(checkpoint, "COMPACT_BYTES", 1)
+    store = SnapshotStore(root, spark, compact_every=10**9)
     d1 = spark.range(50).selectExpr("id as url_hash", "cast(id as string) as url")
     d2 = spark.range(50, 90).selectExpr(
         "id as url_hash", "cast(id as string) as url"
@@ -661,9 +736,8 @@ def test_byte_budget_compaction_trigger(spark, tmp_path):
     assert got == set(range(90))
 
     # count trigger still works independently of bytes
-    store2 = SnapshotStore(
-        str(tmp_path / "cc"), spark, compact_every=1, compact_bytes=1 << 40
-    )
+    monkeypatch.setattr(checkpoint, "COMPACT_BYTES", 1 << 40)
+    store2 = SnapshotStore(str(tmp_path / "cc"), spark, compact_every=1)
     store2.commit(appends={"t": d1})
     store2.commit(appends={"t": d2})
     assert store2.manifest()["snapshots"]["1"]["tables"]["t"]["mode"] == "base"
@@ -678,7 +752,7 @@ def test_expire_snapshots_orphan_gc(spark, tmp_path):
     import os
 
     root = str(tmp_path / "og")
-    store = SnapshotStore(root, spark, compact_every=2, compact_bytes=1 << 40)
+    store = SnapshotStore(root, spark, compact_every=2)
     d = lambda a, b: spark.range(a, b).selectExpr(  # noqa: E731
         "id as url_hash", "cast(id as string) as url"
     )

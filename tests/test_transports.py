@@ -18,7 +18,11 @@ from commoncrawl_fetcher_lite_spark.config import (
     FetchConfig,
     from_json_dict,
 )
-from commoncrawl_fetcher_lite_spark.sources.emitters import fs_emitter, s3_emitter
+from commoncrawl_fetcher_lite_spark.sources.emitters import (
+    emitter_for,
+    fs_emitter,
+    s3_emitter,
+)
 from commoncrawl_fetcher_lite_spark.sources.fetcher import (
     BackoffFetcher,
     ThrottleException,
@@ -241,6 +245,18 @@ def test_fs_emitter_skip_if_exists(tmp_path):
     assert p.read_bytes() == b"one"
 
 
+def test_emitter_for_honours_on_exists_overwrite(tmp_path):
+    """`"onExists": "overwrite"` replaces an existing fs target instead of
+    keeping the stale payload."""
+    emit = emitter_for(
+        EmitConfig(kind="fs", base_path=str(tmp_path), on_exists="overwrite")
+    )
+    emit("ab/cd/x", b"one")
+    emit("ab/cd/x", b"two")
+    assert (tmp_path / "ab" / "cd" / "x").read_bytes() == b"two"
+    assert [p.name for p in (tmp_path / "ab" / "cd").iterdir()] == ["x"]
+
+
 def test_s3_emitter_prefix_and_skip():
     c = _FakeS3Client()
     emit = s3_emitter(c, bucket="my-bucket", prefix="some-docs")
@@ -273,3 +289,11 @@ def test_config_legacy_emitter_keys_mapped():
         }
     )
     assert cfg2.emit.base_path == "/modern"
+    # only the two modes the sinks implement parse
+    with pytest.raises(ValueError, match="onExists"):
+        from_json_dict(
+            {
+                "indices": {"paths": ["x.gz"]},
+                "emitter": {"basePath": "/legacy", "onExists": "exception"},
+            }
+        )
