@@ -70,17 +70,18 @@ class EmitConfig:
       profile non-blank → 's3' (S3Emitter: bucket REQUIRED, region default
                           us-east-1, optional prefix, empty file extension)
       else              → 'fs' (FileSystemEmitter: path or 'docs',
-                          onExists 'skip' (default) or 'overwrite')
+                          onExists=skip)
 
     The Fetch passes this config to extract_payloads, which builds the sink
     executor-side with sources.emitters.emitter_for (an S3 client does not
     pickle); the pathless fs config (no 'docs') builds none.
 
-    on_exists='skip' is the reference default — in the engine this dedup is
-    also enforced relationally (URL-seen / content-seen anti-join) before
-    write; the sink-level skip stays as the idempotency backstop.
-    'overwrite' replaces an existing fs target; any other value is a
-    ValueError. S3 keeps the reference's fixed skip.
+    Both sinks skip an existing target, as the reference fixes them
+    (ExtractorConfig.java:271-278); an 'onExists' other than 'skip' is a
+    ValueError rather than a mode the sinks would silently ignore. In the
+    engine this dedup is also enforced relationally (URL-seen /
+    content-seen anti-join) before write; the sink-level skip stays as the
+    idempotency backstop.
     """
 
     kind: str = "fs"
@@ -89,7 +90,6 @@ class EmitConfig:
     region: str = CC_REGION
     bucket: str = ""
     prefix: str = ""
-    on_exists: str = "skip"
 
     @staticmethod
     def from_dict(d: dict[str, Any] | None) -> "EmitConfig":
@@ -100,10 +100,9 @@ class EmitConfig:
         present-but-pathless docs dict keeps that default."""
         if d is None:
             return EmitConfig()
-        on_exists = d.get("onExists", "skip")
-        if on_exists not in ("skip", "overwrite"):
+        if d.get("onExists", "skip") != "skip":
             raise ValueError(
-                f"docs.onExists must be 'skip' or 'overwrite': {on_exists!r}"
+                f"docs.onExists must be 'skip': {d['onExists']!r}"
             )
         if d.get("profile"):
             bucket = d.get("bucket", "")
@@ -121,7 +120,6 @@ class EmitConfig:
         return EmitConfig(
             kind="fs",
             base_path=d.get("path") or DEFAULT_FS_DOCS_PATH,
-            on_exists=on_exists,
         )
 
 
@@ -185,9 +183,9 @@ class FrontierConfig:
 def _normalize_emit_dict(cfg: dict[str, Any]) -> dict[str, Any] | None:
     """Resolve the emit sink dict: modern 'docs' (reference key,
     ExtractorConfig.java:249) wins; the legacy 'emitter' fallback is
-    TRANSLATED to the modern keys (basePath → path; onExists carried) so
-    old configs keep their target dir and overwrite mode instead of
-    silently emitting to the default 'docs' dir."""
+    TRANSLATED to the modern keys (basePath → path; onExists carried, so
+    EmitConfig.from_dict checks it) so old configs keep their target dir
+    instead of silently emitting to the default 'docs' dir."""
     if cfg.get("docs") is not None:
         return cfg["docs"]
     legacy = cfg.get("emitter")

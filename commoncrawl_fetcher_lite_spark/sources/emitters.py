@@ -2,9 +2,8 @@
 reference's FileSystemEmitter / S3Emitter wiring (ExtractorConfig.java:
 249-278). An emitter is a callable (rel_path, payload) -> None, executed
 executor-side inside the extraction partition function; all are idempotent
-under task retries: skip-if-exists is what onExists=skip means in the
-reference (ExtractorConfig.java:276), and an fs overwrite rewrites the same
-content-addressed bytes.
+under task retries (skip-if-exists), which is also what onExists=skip means
+in the reference (ExtractorConfig.java:276).
 """
 
 from __future__ import annotations
@@ -15,13 +14,12 @@ from typing import Callable
 Emitter = Callable[[str, bytes], None]
 
 
-def fs_emitter(base_path: str, overwrite: bool = False) -> Emitter:
-    """FileSystemEmitter twin: write-to-tmp + atomic rename; an existing
-    target is kept (onExists=skip) or replaced (onExists=overwrite)."""
+def fs_emitter(base_path: str) -> Emitter:
+    """FileSystemEmitter twin: write-to-tmp + atomic rename, skip-if-exists."""
 
     def emit(rel_path: str, payload: bytes) -> None:
         dst = os.path.join(base_path, rel_path)
-        if not overwrite and os.path.exists(dst):
+        if os.path.exists(dst):
             return  # onExists=skip
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         tmp = f"{dst}.tmp.{os.getpid()}"
@@ -57,10 +55,8 @@ def s3_emitter(client, bucket: str, prefix: str = "") -> Emitter:
 
 def emitter_for(cfg, client=None) -> Emitter | None:
     """EmitConfig → emitter, mirroring newEmitter's precedence
-    (ExtractorConfig.java:249-278): s3 when a profile is set (always
-    skip-if-exists, as the reference fixes it), else fs with the config's
-    onExists mode. The pathless fs config of a job without 'docs' has no
-    sink: None."""
+    (ExtractorConfig.java:249-278): s3 when a profile is set, else fs.
+    The pathless fs config of a job without 'docs' has no sink: None."""
     if cfg.kind == "s3":
         if client is None:
             from commoncrawl_fetcher_lite_spark.sources.fetcher import (
@@ -69,6 +65,4 @@ def emitter_for(cfg, client=None) -> Emitter | None:
 
             client = make_s3_client(cfg.profile, cfg.region)
         return s3_emitter(client, cfg.bucket, cfg.prefix)
-    if not cfg.base_path:
-        return None
-    return fs_emitter(cfg.base_path, overwrite=cfg.on_exists == "overwrite")
+    return fs_emitter(cfg.base_path) if cfg.base_path else None

@@ -196,8 +196,7 @@ def extract_payloads(
     249-278) — each payload lands at <rewritten sha256 path> under the fs
     base path or the s3 bucket/prefix, executor-side, skip-if-exists
     (idempotent across task retries, exactly the reference's
-    onExists=skip; an fs config may set onExists=overwrite). None, or the
-    pathless fs config, writes no sink.
+    onExists=skip). None, or the pathless fs config, writes no sink.
 
     Per-record read/parse failures (missing WARC file, bad offset, corrupt
     gzip) are skipped like the reference's warn-and-continue

@@ -18,11 +18,7 @@ from commoncrawl_fetcher_lite_spark.config import (
     FetchConfig,
     from_json_dict,
 )
-from commoncrawl_fetcher_lite_spark.sources.emitters import (
-    emitter_for,
-    fs_emitter,
-    s3_emitter,
-)
+from commoncrawl_fetcher_lite_spark.sources.emitters import fs_emitter, s3_emitter
 from commoncrawl_fetcher_lite_spark.sources.fetcher import (
     BackoffFetcher,
     ThrottleException,
@@ -245,16 +241,17 @@ def test_fs_emitter_skip_if_exists(tmp_path):
     assert p.read_bytes() == b"one"
 
 
-def test_emitter_for_honours_on_exists_overwrite(tmp_path):
-    """`"onExists": "overwrite"` replaces an existing fs target instead of
-    keeping the stale payload."""
-    emit = emitter_for(
-        EmitConfig(kind="fs", base_path=str(tmp_path), on_exists="overwrite")
-    )
-    emit("ab/cd/x", b"one")
-    emit("ab/cd/x", b"two")
-    assert (tmp_path / "ab" / "cd" / "x").read_bytes() == b"two"
-    assert [p.name for p in (tmp_path / "ab" / "cd").iterdir()] == ["x"]
+def test_on_exists_overwrite_rejected_at_parse():
+    """Both sinks always skip an existing target, so `"onExists":
+    "overwrite"` must fail at parse time, for fs and s3 alike, instead of
+    silently keeping the stale payload."""
+    for docs in (
+        {"path": "/docs", "onExists": "overwrite"},
+        {"profile": "p", "bucket": "b", "onExists": "overwrite"},
+    ):
+        with pytest.raises(ValueError, match="onExists"):
+            EmitConfig.from_dict(docs)
+    assert EmitConfig.from_dict({"path": "/docs", "onExists": "skip"}).kind == "fs"
 
 
 def test_s3_emitter_prefix_and_skip():
@@ -269,17 +266,17 @@ def test_s3_emitter_prefix_and_skip():
 
 def test_config_legacy_emitter_keys_mapped():
     """Legacy {'emitter': {'basePath': ..., 'onExists': ...}} must keep its
-    target dir and overwrite mode (round-2 bug: from_dict only read
-    'path'/'profile', so legacy configs silently emitted to 'docs')."""
+    target dir (round-2 bug: from_dict only read 'path'/'profile', so
+    legacy configs silently emitted to 'docs'), and its onExists is
+    checked like the modern key's."""
     cfg = from_json_dict(
         {
             "indices": {"paths": ["x.gz"]},
-            "emitter": {"kind": "fs", "basePath": "/legacy/docs", "onExists": "overwrite"},
+            "emitter": {"kind": "fs", "basePath": "/legacy/docs", "onExists": "skip"},
         }
     )
     assert cfg.emit.kind == "fs"
     assert cfg.emit.base_path == "/legacy/docs"
-    assert cfg.emit.on_exists == "overwrite"
     # modern 'docs' still wins when both present
     cfg2 = from_json_dict(
         {
@@ -289,11 +286,11 @@ def test_config_legacy_emitter_keys_mapped():
         }
     )
     assert cfg2.emit.base_path == "/modern"
-    # only the two modes the sinks implement parse
-    with pytest.raises(ValueError, match="onExists"):
-        from_json_dict(
-            {
-                "indices": {"paths": ["x.gz"]},
-                "emitter": {"basePath": "/legacy", "onExists": "exception"},
-            }
-        )
+    # the sinks implement only skip: any other mode, fs or s3, is rejected
+    for emitter in (
+        {"basePath": "/legacy", "onExists": "overwrite"},
+        {"basePath": "/legacy", "onExists": "exception"},
+        {"profile": "p", "bucket": "b", "onExists": "overwrite"},
+    ):
+        with pytest.raises(ValueError, match="onExists"):
+            from_json_dict({"indices": {"paths": ["x.gz"]}, "emitter": emitter})
