@@ -128,13 +128,9 @@ class ExtractorConfig:
     """Top-level job config (reference ExtractorConfig.java:49-66)."""
 
     index_paths: tuple[str, ...] = ()
-    # indices.basePath / indices.profile (IndexIterator.java:66-78): where
-    # the index files themselves are fetched from (fs dir-walk vs s3)
+    # indices.basePath (IndexIterator.java:66-78): the directory the
+    # index files are discovered in when no paths are listed
     index_base_path: str = ""
-    index_profile: str = ""
-    # 'indexFetcher' (ExtractorConfig.java:164-169): separate transport for
-    # index files; defaults to the HTTP fetcher like the reference
-    index_fetch: FetchConfig = None  # type: ignore[assignment]
     # numThreads (ExtractorConfig.java:50, reference default 2): the engine
     # analog is the fetch STAGE's task count. -1 = absent from the config;
     # resolution (effective_fetch_cap, ADVICE r4): absent + HTTP transport
@@ -218,15 +214,18 @@ def from_json_dict(cfg: dict[str, Any]) -> ExtractorConfig:
     """Parse a reference-style config JSON dict (README.md:97-126 shape;
     fetcher/docs resolution per ExtractorConfig.java:157-278 — see the
     reference's own three test resources configs/basic-{http,local,s3}.json
-    exercised by FetcherConfigTest.java:36-62)."""
+    exercised by FetcherConfigTest.java:36-62).
+
+    'indices.profile' and 'indexFetcher' (ExtractorConfig.java:164-169)
+    are accepted and not used: the engine reads index files through
+    Spark's own filesystem layer (sources.cdx.scan_cdx), whichever
+    store they live in."""
     indices = cfg.get("indices", {})
     fetch = FetchConfig.from_dict(cfg.get("fetcher"))
     emit = EmitConfig.from_dict(_normalize_emit_dict(cfg))
     return ExtractorConfig(
         index_paths=tuple(indices.get("paths", ())),
         index_base_path=indices.get("basePath", ""),
-        index_profile=indices.get("profile", ""),
-        index_fetch=FetchConfig.from_dict(cfg.get("indexFetcher")),
         num_threads=int(cfg.get("numThreads", -1)),  # absent = sentinel -1
         selector=cfg.get("recordSelector"),
         max_records=int(cfg.get("maxRecords", LONG_MAX)),

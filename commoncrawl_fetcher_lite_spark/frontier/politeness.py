@@ -314,13 +314,13 @@ def schedule_batch(
     # exchange blocked exactly that rewrite (Final-only mode, full-size
     # shuffle); physical partitioning/salting semantics are unchanged.
 
-    # quota_cap (r7): a PROVEN upper bound on every host's quota (callers
-    # with a store-backed quota frame compute max(quota) — one bounded-row
-    # aggregate). Conjoining the literal bound with the exact per-host
-    # filter lets Catalyst infer WindowGroupLimit: each rank filter then
-    # keeps only the top-cap rows per group BEFORE/DURING the sort instead
-    # of fully sorting every candidate row. The exact quota filter still
-    # applies, so output is unchanged.
+    # quota_cap (r7): a PROVEN upper bound on every host's quota
+    # (run_iteration derives it in plain Python from the refill's burst,
+    # rate and batch length — no Spark job). Conjoining the literal bound
+    # with the exact per-host filter lets Catalyst infer WindowGroupLimit:
+    # each rank filter then keeps only the top-cap rows per group
+    # BEFORE/DURING the sort instead of fully sorting every candidate row.
+    # The exact quota filter still applies, so output is unchanged.
     def _rank_filter(rn: Column) -> Column:
         exact = rn <= F.col("quota")
         if quota_cap is not None:

@@ -40,6 +40,7 @@ composition + commit protocol.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 from typing import Callable
 
@@ -227,13 +228,20 @@ def run_iteration(
             )
         )
 
-    # literal quota cap (r7): max over the (checkpointed, one-row-per-host)
-    # refill frame — a bounded single-row aggregate, never row data. The
-    # backoff division above only LOWERS quotas, so the refill max stays an
-    # upper bound; passing it as a literal lets the politeness windows plan
-    # WindowGroupLimit (top-cap per group) instead of full per-group sorts.
-    cap_row = refilled.agg(F.max("quota")).first()
-    quota_cap = int(cap_row[0]) if cap_row and cap_row[0] is not None else None
+    # literal quota cap (r7), computed without a Spark job: refill_tokens'
+    # quota is min(max_per_batch, floor(min(burst + rate*dt, tokens +
+    # rate*dt))) and a crawl-delay only lowers the rate, so this bound —
+    # the same double arithmetic — holds for every host; the backoff
+    # division above only LOWERS quotas. As a literal it lets the
+    # politeness windows plan WindowGroupLimit (top-cap per group) instead
+    # of full per-group sorts.
+    quota_cap = min(
+        int(cfg.default_max_per_batch),
+        math.floor(
+            float(cfg.default_burst)
+            + float(cfg.default_tokens_per_sec) * float(batch_seconds)
+        ),
+    )
 
     # materialize the scheduling plan ONCE: batch feeds the fetch, both
     # state updates, and the commit write — without this the anti-join +

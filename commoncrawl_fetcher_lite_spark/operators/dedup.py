@@ -3,18 +3,24 @@
 No reference analog (the reference's only dedup is the emitter's
 onExists=skip, ExtractorConfig.java:276); these are the net-new corpus ops.
 
-All hot paths are Catalyst expressions (shingling, minhash, banding are
-pure `F.transform`/`F.array_min`/`F.xxhash64` over arrays — JVM-side,
-codegen'd); Python appears only in SimHash bit-packing (Arrow-batched
-numpy).
+Shingling, banding and verification are Catalyst expressions (pure
+`F.transform`/`F.zip_with`/`F.xxhash64` over arrays — JVM-side). Python
+appears only as Arrow-batched numpy: the minhash permutation mins and the
+SimHash bit-packing.
+
+Near-dup detection is one candidate step and one verify step, each with
+one implementation: _bucket_pairs (the banded self-join of
+minhash_lsh_candidates, incremental_neardup and
+similarity.lsh_neardup_pairs) and _jaccard_pairs (the exact verify of
+verify_jaccard and both of incremental_neardup's pair sets).
 
 Scale notes per operator:
   * exact_dedup: one hash-groupBy shuffle on a 16-byte key (md5) — the
     canonical 100 TB dedup; AQE handles skew (identical docs cluster).
-  * minhash_lsh: candidate generation is explode(bands) + self-join on
-    (band_id, band_hash) — shuffle keys are 16 bytes, join fan-out bounded
-    by bucket sizes; exact-verify only on candidates. This is the standard
-    shingle→minhash→band→bucket-join pipeline.
+  * minhash_lsh_candidates ∘ verify_jaccard: explode(bands) + self-join
+    on (band_id, band_hash) — shuffle keys are 16 bytes, join fan-out
+    bounded by bucket sizes; exact verify only on candidates. This is the
+    standard shingle→minhash→band→bucket-join pipeline.
   * ngram_jaccard_pairs: EXACT all-pairs — O(n²), for oracle checks and
     small candidate sets only; minhash_lsh is the scale path.
   * simhash: near-dup by Hamming distance with band-bucketing on
@@ -28,7 +34,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -257,19 +263,61 @@ def minhash_lsh_candidates(
     # so long sessions don't accumulate CacheManager entries that only an
     # explicit unpersist (impossible on a lazily returned frame) would free.
     buckets = buckets.localCheckpoint(eager=True)
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+    return _bucket_pairs(buckets, ["band_id", "band_hash"])
+
+
+def _bucket_pairs(buckets: DataFrame, keys: list[str]) -> DataFrame:
+    """Distinct (id_a, id_b) pairs, id_a < id_b, of the rows of an
+    (id, *keys) frame that agree on every key — the candidate step of a
+    banded LSH self-join. `buckets` must already be materialized: each
+    join side re-reads it."""
+    a, b = buckets.alias("a"), buckets.alias("b")
+    cond = None
+    for k in keys:
+        eq = F.col(f"a.{k}") == F.col(f"b.{k}")
+        cond = eq if cond is None else cond & eq
+    return (
+        a.join(b, cond & (F.col("a.id") < F.col("b.id")))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    return pairs
+
+
+def _jaccard_pairs(
+    pairs: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact Jaccard of each (id_a, id_b, …) pair, id_a's shingles taken
+    from sh_a and id_b's from sh_b (both (id, sh) frames) → the pairs'
+    columns plus an UNROUNDED jaccard, kept where ≥ threshold.
+
+    Formula (r7): |A∩B| / (|A| + |B| − |A∩B|) with the distinct counts
+    |A|,|B| computed ONCE PER DOC before the pair join — identical value
+    to size(intersect)/size(union) (inclusion–exclusion; intersect and
+    union both return distinct elements whatever the input multiplicity),
+    but the per-PAIR array work halves (no array_union pass) — measured
+    −26% on the sf1.0 verify stage. The jaccard value is emitted through
+    inline(array(struct(…))) so the ≥threshold filter consumes a generated
+    attribute instead of re-inlining the intersect expression (generator
+    outputs block predicate pushdown — the letbind.py trick)."""
+    from commoncrawl_fetcher_lite_spark.functions.letbind import let
+
+    def side(sh: DataFrame, s: str) -> DataFrame:
+        return sh.select(
+            F.col("id").alias(f"id_{s}"),
+            F.col("sh").alias(f"sh_{s}"),
+            F.size(F.array_distinct("sh")).alias(f"_n{s}"),
+        )
+
+    jac = let(
+        F.size(F.array_intersect("sh_a", "sh_b")),
+        lambda i: i / (F.col("_na") + F.col("_nb") - i),
+    )
+    return (
+        pairs.join(side(sh_a, "a"), "id_a")
+        .join(side(sh_b, "b"), "id_b")
+        .select(*pairs.columns, F.inline(F.array(F.struct(jac.alias("jaccard")))))
+        .where(F.col("jaccard") >= threshold)
+    )
 
 
 def verify_jaccard(
@@ -281,18 +329,10 @@ def verify_jaccard(
     threshold: float = 0.5,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact Jaccard verification of candidate pairs (JVM set ops).
-    `shingles`: precomputed shingle_frame to reuse (else recomputed).
-
-    Formula (r7): |A∩B| / (|A| + |B| − |A∩B|) with the distinct counts
-    |A|,|B| computed ONCE PER DOC before the pair join — identical value
-    to size(intersect)/size(union) (inclusion–exclusion; intersect and
-    union both return distinct elements whatever the input multiplicity),
-    but the per-PAIR array work halves (no array_union pass) — measured
-    −26% on the sf1.0 verify stage. The jaccard value is emitted through
-    inline(array(struct(…))) so the ≥threshold filter consumes a generated
-    attribute instead of re-inlining the intersect expression (generator
-    outputs block predicate pushdown — the letbind.py trick)."""
+    """Exact Jaccard verification of candidate pairs (JVM set ops; the
+    formula and plan shape are _jaccard_pairs'). `shingles`: precomputed
+    shingle_frame to reuse (else recomputed). Output: (id_a, id_b,
+    jaccard[round 4])."""
     sh = (
         shingles
         if shingles is not None
@@ -301,38 +341,9 @@ def verify_jaccard(
             word_shingles(text_col, n, distinct=False).alias("sh"),
         )
     )
-    shn = sh.select(
-        "id", "sh", F.size(F.array_distinct("sh")).alias("_n")
+    return _jaccard_pairs(pairs, sh, sh, threshold).select(
+        "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
     )
-    joined = pairs.join(
-        shn.select(
-            F.col("id").alias("id_a"),
-            F.col("sh").alias("sh_a"),
-            F.col("_n").alias("_na"),
-        ),
-        "id_a",
-    ).join(
-        shn.select(
-            F.col("id").alias("id_b"),
-            F.col("sh").alias("sh_b"),
-            F.col("_n").alias("_nb"),
-        ),
-        "id_b",
-    )
-    from commoncrawl_fetcher_lite_spark.functions.letbind import let
-
-    jac = let(
-        F.size(F.array_intersect("sh_a", "sh_b")),
-        lambda i: i / (F.col("_na") + F.col("_nb") - i),
-    )
-    out = (
-        joined.select(
-            "id_a", "id_b", F.inline(F.array(F.struct(jac.alias("jaccard"))))
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-    )
-    return out
 
 
 def incremental_neardup(
@@ -383,30 +394,14 @@ def incremental_neardup(
     buckets = lsh_bucket_frame(
         batch, text_col, id_col, n, num_perm, bands, shingles=sh_batch
     ).localCheckpoint(eager=True)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand_internal = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") > F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id"), F.col("b.id").alias("cand"))
-        .distinct()
+    # every verified pair reports its batch doc as id_b and the candidate
+    # as id_a: an internal pair's later doc is the duplicate
+    verified = _jaccard_pairs(
+        _bucket_pairs(buckets, ["band_id", "band_hash"]),
+        sh_batch,
+        sh_batch,
+        threshold,
     )
-    # candidate-side shingles carry their DISTINCT count (r7): the verify
-    # formula below is |A∩B|/(|A|+|B|−|A∩B|), value-identical to
-    # intersect/union (see verify_jaccard) at half the per-pair array work
-    sh_cand_sides = [
-        cand_internal.join(
-            sh_batch.select(
-                F.col("id").alias("cand"),
-                F.col("sh").alias("sh_cand"),
-                F.size(F.array_distinct("sh")).alias("_nc"),
-            ),
-            "cand",
-        )
-    ]
     if state_buckets is not None:
         from commoncrawl_fetcher_lite_spark.functions.joins import (
             maybe_broadcast,
@@ -419,14 +414,14 @@ def incremental_neardup(
         # scan) not O(state shuffle). Giant batches stay stats-gated to
         # a shuffle join (the checkpointed frame reports row-based
         # stats, so the gate is accurate).
-        s = state_buckets.alias("s")
+        a, s = buckets.alias("a"), state_buckets.alias("s")
         cand_state = (
             maybe_broadcast(a).join(
                 s,
                 (F.col("a.band_id") == F.col("s.band_id"))
                 & (F.col("a.band_hash") == F.col("s.band_hash")),
             )
-            .select(F.col("a.id").alias("id"), F.col("s.id").alias("cand"))
+            .select(F.col("s.id").alias("id_a"), F.col("a.id").alias("id_b"))
             .distinct()
         )
         if corpus_docs is None:
@@ -435,49 +430,30 @@ def incremental_neardup(
                 "against a non-empty state (candidate shingle fetch)"
             )
         # shingle ONLY the matched corpus docs: semi-join first, so the
-        # 100 TB corpus contributes point reads, not a scan
+        # 100 TB corpus contributes point reads, not a scan. The corpus
+        # and batch shingle frames stay separate: a re-crawled doc can
+        # carry the same id in both.
         matched = corpus_docs.join(
-            cand_state.select(F.col("cand").alias(id_col)).distinct(),
+            cand_state.select(F.col("id_a").alias(id_col)).distinct(),
             id_col,
             "left_semi",
         )
-        sh_state = shingle_frame(matched, text_col, id_col, n).select(
-            F.col("id").alias("cand"),
-            F.col("sh").alias("sh_cand"),
-            F.size(F.array_distinct("sh")).alias("_nc"),
+        verified = verified.unionByName(
+            _jaccard_pairs(
+                cand_state,
+                shingle_frame(matched, text_col, id_col, n),
+                sh_batch,
+                threshold,
+            )
         )
-        sh_cand_sides.append(cand_state.join(sh_state, "cand"))
-    pairs = sh_cand_sides[0]
-    for extra in sh_cand_sides[1:]:
-        pairs = pairs.unionByName(extra)
-    from commoncrawl_fetcher_lite_spark.functions.letbind import let
-
-    jac = let(
-        F.size(F.array_intersect("sh_new", "sh_cand")),
-        lambda i: i / (F.col("_nn") + F.col("_nc") - i),
-    )
-    verified = (
-        pairs.join(
-            sh_batch.select(
-                "id",
-                F.col("sh").alias("sh_new"),
-                F.size(F.array_distinct("sh")).alias("_nn"),
-            ),
-            "id",
-        )
-        .select(
-            "id", "cand", F.inline(F.array(F.struct(jac.alias("jaccard"))))
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    # canonical partner = MIN cand id; one struct-min agg carries its
-    # jaccard along (struct ordering is field-lexicographic, cand first)
+    # canonical partner = MIN candidate id; one struct-min agg carries its
+    # jaccard along (struct ordering is field-lexicographic, id_a first)
     dups = (
-        verified.groupBy("id")
-        .agg(F.min(F.struct(F.col("cand"), F.col("jaccard"))).alias("_m"))
+        verified.groupBy("id_b")
+        .agg(F.min(F.struct(F.col("id_a"), F.col("jaccard"))).alias("_m"))
         .select(
-            F.col("id").alias("doc_id"),
-            F.col("_m.cand").alias("dup_of"),
+            F.col("id_b").alias("doc_id"),
+            F.col("_m.id_a").alias("dup_of"),
             F.round(F.col("_m.jaccard"), 4).alias("jaccard"),
         )
     )
@@ -896,21 +872,18 @@ def embedding_neardup_pairs(
 ) -> DataFrame:
     """Exact cosine near-dup pairs (O(n²) baseline; the LSH-bucketed scale
     path lives in similarity.py). Double precision, explicit formula."""
+    from commoncrawl_fetcher_lite_spark.operators.similarity import _dot, _norm
+
     v = emb.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    norm = F.sqrt(
-        F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
-    )
-    v = v.withColumn("n", norm)
+    ).withColumn("n", _norm("v"))
     a = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na"))
     b = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", F.round(dot / (F.col("na") * F.col("nb")), 6))
+        .withColumn(
+            "cos_sim", F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 6)
+        )
         .where(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
@@ -995,8 +968,13 @@ def dedup_clusters(
                     F.col("new_label"), F.coalesce("p_label", "new_label")
                 ).alias("new_label"),
             )
-        stepped = stepped.localCheckpoint(eager=True)
-        changed = stepped.where(F.col("new_label") < F.col("label")).count()
+        # the round's change count rides on its checkpoint job (a fresh
+        # Observation per round) instead of a separate count() job
+        obs = Observation()
+        stepped = stepped.observe(
+            obs, F.count_if(F.col("new_label") < F.col("label")).alias("n")
+        ).localCheckpoint(eager=True)
+        changed = obs.get["n"]
         labels = stepped.select("node", F.col("new_label").alias("label"))
         if changed == 0:
             break

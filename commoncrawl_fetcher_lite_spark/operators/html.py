@@ -10,11 +10,8 @@ gates downstream.
 
 Honest scope: this is a boilerplate-light extractor (tag/script/style/
 comment strip + entity decode + whitespace collapse), the regex-grade
-treatment matching trafilatura's fallback path — not a DOM parser. A
-DOM-grade extractor (readability/trafilatura) would slot in through the
-same batched-scorer seam as operators/text.py's model scorers; the
-Catalyst path is the default because it needs no library and keeps the
-scan JVM-side.
+treatment matching trafilatura's fallback path — not a DOM parser. The
+Catalyst path needs no library and keeps the scan JVM-side.
 
 Regex compatibility: every pattern used here is valid and equivalent in
 Java regex (Spark) and RE2 (DuckDB) — (?is) flags, non-greedy .*?, \\b —

@@ -1,18 +1,21 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and near-dup detection over embedding columns.
 
-Two paths:
-  * brute_force_topk — exact cosine top-k per query; O(|Q|·|N|) cross join.
-    Correctness baseline; fine when |Q| is small or as the final re-rank.
-  * lsh_topk — random-hyperplane LSH (SimHash for vectors): bucket by
-    sign-bit signature prefixes, search only same-bucket candidates, exact
-    re-rank inside buckets. The scale path: candidate generation is a
-    bucket-key equi-join (shuffle on small int keys), probes multiple
-    signature rotations to raise recall.
+Seven operators:
+  * brute_force_topk — exact cosine top-k per query; O(|Q|·|N|) cross
+    join. Correctness baseline; fine when |Q| is small.
+  * lsh_topk — random-hyperplane LSH (SimHash for vectors): same-bucket
+    candidates over several signature rotations, exact re-rank.
+  * lsh_neardup_pairs — cosine near-dup pairs over the same buckets (the
+    scale path for dedup.embedding_neardup_pairs).
+  * ivf_topk / ivfpq_topk — IVF-flat and IVF-PQ ANN over coarse cells.
+  * semdedup — SemDeDup: near-dup components within coarse cells.
+  * mean_pool_embeddings — chunk vectors → one mean vector per document.
 
-All vector math is double-precision Catalyst expressions (zip_with +
-aggregate) — no Python in the scoring loop. The hyperplanes are a
-deterministic broadcast literal derived from a seed (no Date/random at plan
-time).
+Candidate generation is an equi-join on small int keys; the IVF cell
+assignment and probe share one Arrow-batched kernel (_cell_udfs). Vector
+math in the scoring loop is double-precision Catalyst (zip_with +
+aggregate, _dot/_norm). The hyperplanes are a deterministic literal
+derived from a seed (no Date/random at plan time).
 """
 
 from __future__ import annotations
@@ -230,35 +233,25 @@ def lsh_neardup_pairs(
     equi-joins fetch the vectors for the exact re-rank. The skinny
     signature frame is persisted so the self-join's two sides don't each
     recompute the signature matmul."""
+    from commoncrawl_fetcher_lite_spark.operators.dedup import _bucket_pairs
+
     v = emb.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
     buckets = _bucket_frame_fn(n_planes, n_rotations, dim, seed)
     sigs = buckets(v, "v", ["id"]).select("id", "rot", "bucket").localCheckpoint()
-    a = sigs.select(F.col("id").alias("id_a"), "rot", "bucket")
-    b = sigs.select(F.col("id").alias("id_b"), "rot", "bucket")
-    cand = (
-        a.join(b, ["rot", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    norm = F.sqrt(
-        F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
-    )
-    vn = v.withColumn("n", norm)
-    pair_vecs = cand.join(
+    vn = v.withColumn("n", _norm("v"))
+    pair_vecs = _bucket_pairs(sigs, ["rot", "bucket"]).join(
         vn.select(F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na")),
         "id_a",
     ).join(
         vn.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb")),
         "id_b",
     )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
     return (
-        pair_vecs.withColumn("cos_sim", F.round(dot / (F.col("na") * F.col("nb")), 6))
+        pair_vecs.withColumn(
+            "cos_sim", F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 6)
+        )
         .where(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
@@ -373,6 +366,44 @@ def _coarse_centroids(
     return C, cids
 
 
+def _cell_udfs(C, cids, n_probe: int):
+    """(assign_cell, probe_cells) Arrow UDFs over the coarse centroid
+    matrix C with cell ids cids (_coarse_centroids): assign_cell → the
+    nearest cell's id, probe_cells → the ids of the n_probe nearest cells.
+    One matmul per Arrow batch, no per-row Python.
+
+    Cell similarities are rounded to 6 decimals BEFORE argmax/argsort on
+    both the engine and oracle sides — BLAS matmul may reorder/FMA the
+    sum, and an unrounded last-ulp near-tie could flip a cell assignment
+    between the two engines."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+    from pyspark.sql.functions import pandas_udf
+
+    cn = np.maximum(np.sqrt((C * C).sum(axis=1)), 1e-12)
+
+    def _cell_sims(vecs):
+        V = np.stack(vecs.to_numpy()).astype(np.float64)
+        # dot first, then divide by the norm product — matches the oracle's
+        # list_dot_product(v,c)/(|v|*|c|) op order
+        S = V @ C.T
+        vn = np.sqrt((V * V).sum(axis=1))
+        return np.round(S / np.outer(vn, cn), 6)
+
+    @pandas_udf(T.LongType())
+    def assign_cell(vecs):
+        # nearest centroid; ties -> lowest centroid id (cids is sorted)
+        return pd.Series(cids[np.argmax(_cell_sims(vecs), axis=1)])
+
+    @pandas_udf(T.ArrayType(T.LongType()))
+    def probe_cells(vecs):
+        order = np.argsort(-_cell_sims(vecs), axis=1, kind="stable")[:, :n_probe]
+        return pd.Series(list(cids[order]))
+
+    return assign_cell, probe_cells
+
+
 def _cell_pairs(
     cells: DataFrame,
     tau: float,
@@ -468,11 +499,6 @@ def semdedup(
     summation-order ulps must not flip a borderline pair between engine
     and oracle); cell assignment rounds the same way (ivf_topk's rule).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from commoncrawl_fetcher_lite_spark.functions.letbind import spread_for_compute
     from commoncrawl_fetcher_lite_spark.operators.dedup import dedup_clusters
 
@@ -480,15 +506,7 @@ def semdedup(
         corpus, corpus_id, corpus_vec, n_cells, quantizer,
         kmeans_sample_n=kmeans_sample_n, kmeans_seed=kmeans_seed,
     )
-    cn = np.maximum(np.sqrt((C * C).sum(axis=1)), 1e-12)
-
-    @pandas_udf(T.LongType())
-    def assign_cell(vecs):
-        V = np.stack(vecs.to_numpy()).astype(np.float64)
-        S = V @ C.T
-        vn = np.sqrt((V * V).sum(axis=1))
-        S = np.round(S / np.outer(vn, cn), 6)
-        return pd.Series(cids[np.argmax(S, axis=1)])
+    assign_cell, _ = _cell_udfs(C, cids, 1)
 
     cells = (
         spread_for_compute(corpus)
@@ -544,43 +562,15 @@ def ivf_topk(
     equi-join on the int cell id (candidates per query ~ n_probe/n_cells
     of the corpus), and the re-rank is Catalyst zip_with/aggregate.
 
-    Cell similarities are rounded to 6 decimals BEFORE argmax/argsort on
-    both the engine and oracle sides — BLAS matmul may reorder/FMA the
-    sum, and an unrounded last-ulp near-tie could flip a cell assignment
-    between the two engines."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
+    Cell similarities are rounded to 6 decimals before argmax/argsort
+    (_cell_udfs)."""
     from commoncrawl_fetcher_lite_spark.functions.letbind import spread_for_compute
 
     C, cids = _coarse_centroids(
         corpus, corpus_id, corpus_vec, n_cells, quantizer,
         kmeans_sample_n=kmeans_sample_n, kmeans_seed=kmeans_seed,
     )
-    cn = np.maximum(np.sqrt((C * C).sum(axis=1)), 1e-12)
-
-    def _cell_sims(vecs: pd.Series) -> np.ndarray:
-        V = np.stack(vecs.to_numpy()).astype(np.float64)
-        # dot first, then divide by the norm product — matches the oracle's
-        # list_dot_product(v,c)/(|v|*|c|) op order; the 6-dp round absorbs
-        # BLAS summation-order ulps before any tie-sensitive argmax/argsort
-        S = V @ C.T
-        vn = np.sqrt((V * V).sum(axis=1))
-        return np.round(S / np.outer(vn, cn), 6)
-
-    @pandas_udf(T.LongType())
-    def assign_cell(vecs):
-        S = _cell_sims(vecs)
-        # nearest centroid; ties -> lowest centroid id (cids is sorted)
-        return pd.Series(cids[np.argmax(S, axis=1)])
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def probe_cells(vecs):
-        S = _cell_sims(vecs)
-        order = np.argsort(-S, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series(list(cids[order]))
+    assign_cell, probe_cells = _cell_udfs(C, cids, n_probe)
 
     # cell assignment needs the vectors; the candidate join does NOT — the
     # (cell) equi-join and pair dedup move only id+int rows, vectors are
@@ -651,7 +641,7 @@ def ivfpq_topk(
     from commoncrawl_fetcher_lite_spark.functions.letbind import spread_for_compute
 
     C, cids = _coarse_centroids(corpus, corpus_id, corpus_vec, n_cells, "lowid")
-    cn = np.maximum(np.sqrt((C * C).sum(axis=1)), 1e-12)
+    assign_cell, probe_cells = _cell_udfs(C, cids, n_probe)
     dim = C.shape[1]
     if dim % m != 0:
         raise ValueError(f"ivfpq_topk: dim {dim} not divisible by m={m}")
@@ -666,21 +656,6 @@ def ivfpq_topk(
         raise ValueError("ivfpq_topk: corpus too small for a codebook")
     CB = np.array([list(r[corpus_vec]) for r in cb_rows], dtype=np.float64)
     CB = CB.reshape(len(cb_rows), m, sub).transpose(1, 0, 2)  # (m, n_codes, sub)
-
-    def _cell_sims(vecs):
-        V = np.stack(vecs.to_numpy()).astype(np.float64)
-        S = V @ C.T
-        vn = np.sqrt((V * V).sum(axis=1))
-        return np.round(S / np.outer(vn, cn), 6)
-
-    @pandas_udf(T.LongType())
-    def assign_cell(vecs):
-        return pd.Series(cids[np.argmax(_cell_sims(vecs), axis=1)])
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def probe_cells(vecs):
-        order = np.argsort(-_cell_sims(vecs), axis=1, kind="stable")[:, :n_probe]
-        return pd.Series(list(cids[order]))
 
     def _sub_dists(V):
         """(batch, m, n_codes) rounded squared L2 per subspace."""

@@ -5,17 +5,6 @@ gates (gopher_quality, gopher_gate, repetition_signals). Their n-gram
 counts need chains of higher-order functions, which Spark cannot compile
 and interprets row by row; they run as Arrow-batched Python kernels
 instead (measured, see the Gopher section).
-
-Model-scorer seam (VERDICT r4 #4): production pipelines key corpus
-decisions off fastText/KenLM-class model scores, not marker heuristics.
-No such library exists in this sandbox, so ``lang_id`` and
-``quality_features`` expose the swap-in point instead: pass ``scorer=``
-a batched pandas function ``pd.DataFrame[id, text] ->
-pd.DataFrame[id, <output cols>]`` and the operator routes the SAME
-projected/spread frame through Arrow-batched ``mapInPandas`` — the
-deployment-day change is one function argument, with partitioning, batch
-shape, and output schema already settled. Default (scorer=None) stays
-the pure-Catalyst heuristic.
 """
 
 from __future__ import annotations
@@ -23,7 +12,7 @@ from __future__ import annotations
 import functools
 import re
 from collections import Counter
-from typing import Callable, Iterator
+from typing import Callable
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
@@ -101,68 +90,16 @@ def bpe_ish_token_count(text_col: str | Column) -> Column:
     return F.size(pieces) + extras
 
 
-# scorer output columns beyond the id, per operator (the mapInPandas
-# return schema is id_col:long-or-string + these; ids pass through)
-LANG_SCORER_FIELDS = [
-    T.StructField("pred_lang", T.StringType()),
-    T.StructField("lang_score", T.DoubleType()),
-]
-QUALITY_SCORER_FIELDS = [
-    T.StructField("n_chars_q", T.IntegerType()),
-    T.StructField("n_words", T.IntegerType()),
-    T.StructField("mean_word_len", T.DoubleType()),
-    T.StructField("stopword_ratio", T.DoubleType()),
-    T.StructField("punct_ratio", T.DoubleType()),
-    T.StructField("quality_score", T.DoubleType()),
-]
-
-
-def _apply_scorer(
-    docs: DataFrame,
-    scorer: Callable,
-    out_fields: list[T.StructField],
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Route (id, text) through an Arrow-batched model scorer.
-
-    The scorer sees pd.DataFrame batches with columns [id_col, 'text']
-    and returns [id_col, *out_fields] — the mapInPandas shape a real
-    fastText/KenLM/transformer scorer needs (load the model once per
-    batch iterator, score vectorized). spread_for_compute stages the
-    frame wide first: model inference is the CPU-heavy stage, same as
-    shingling (and the helper never narrows a wide scan)."""
-    from commoncrawl_fetcher_lite_spark.functions.letbind import spread_for_compute
-
-    id_field = next(f for f in docs.schema.fields if f.name == id_col)
-    schema = T.StructType([T.StructField(id_col, id_field.dataType), *out_fields])
-    sel = spread_for_compute(
-        docs.select(F.col(id_col), F.col(text_col).alias("text"))
-    )
-
-    def run(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            yield scorer(pdf)
-
-    return sel.mapInPandas(run, schema=schema)
-
-
 def quality_features(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    scorer: Callable | None = None,
 ) -> DataFrame:
     """Length / punctuation / stopword features + a composite score.
 
     Built as one let-bound struct emitted through F.inline so the token
-    array is computed exactly once per row (see functions/letbind.py).
-    ``scorer`` (module docstring) swaps in a batched model; output
-    columns must match QUALITY_SCORER_FIELDS."""
+    array is computed exactly once per row (see functions/letbind.py)."""
     from commoncrawl_fetcher_lite_spark.functions.letbind import let
-
-    if scorer is not None:
-        return _apply_scorer(docs, scorer, QUALITY_SCORER_FIELDS, text_col, id_col)
 
     t = F.col(text_col)
 
@@ -204,12 +141,10 @@ def lang_id(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    scorer: Callable | None = None,
 ) -> DataFrame:
     """Marker-word language heuristic: per language, ratio of tokens in its
     marker set; predict argmax (ties by fixed language order). Deterministic
-    and scan-side. ``scorer`` (module docstring) swaps in a batched model
-    (fastText-class); output columns must match LANG_SCORER_FIELDS.
+    and scan-side.
 
     Shape note (r7): the former 5 HOF filter passes over a let-bound token
     array were INTERPRETED (higher-order functions are CodegenFallback) and
@@ -220,9 +155,6 @@ def lang_id(
     the single shuffle carries O(docs) skinny rows — not O(tokens). (An
     earlier regexp_count single-string variant measured 6x slower than even
     the HOF form — Java lookbehind alternation; noted so nobody retries it.)"""
-    if scorer is not None:
-        return _apply_scorer(docs, scorer, LANG_SCORER_FIELDS, text_col, id_col)
-
     from commoncrawl_fetcher_lite_spark.functions.letbind import (
         spread_for_compute,
     )
@@ -383,8 +315,7 @@ def unigram_logprob(
     token distribution unlike the corpus (gibberish, foreign text,
     boilerplate symbol soup) — the KenLM-shaped quality signal
     (CCNet/Wenzek et al. 2020 rank by LM perplexity; this is its
-    order-0 version, with the model-scorer seam available when a real
-    LM can be shipped).
+    order-0 version).
 
     Output: (doc_id, n_tokens, unigram_nll).
 

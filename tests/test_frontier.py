@@ -1140,23 +1140,32 @@ def test_failed_commit_write_leaves_previous_snapshot(
 
 
 def test_every_frontier_config_field_is_read():
-    """No dead knobs: every FrontierConfig field is read as `.<name>`
-    somewhere in the package outside config.py."""
+    """No dead knobs: every FrontierConfig and ExtractorConfig field is
+    read as `.<name>` somewhere in the package outside config.py — or,
+    for ExtractorConfig, in effective_fetch_cap, the one reader that
+    lives in config.py."""
     import dataclasses
+    import inspect
     import pathlib
     import re
 
     import commoncrawl_fetcher_lite_spark as pkg
+    from commoncrawl_fetcher_lite_spark import config
 
     src = "\n".join(
         p.read_text()
         for p in pathlib.Path(pkg.__file__).parent.rglob("*.py")
         if p.name != "config.py"
     )
+    readers = src + inspect.getsource(config.effective_fetch_cap)
     unread = [
         f.name
         for f in dataclasses.fields(FrontierConfig)
         if not re.search(rf"\.{f.name}\b", src)
+    ] + [
+        f.name
+        for f in dataclasses.fields(config.ExtractorConfig)
+        if not re.search(rf"\.{f.name}\b", readers)
     ]
     assert unread == []
 

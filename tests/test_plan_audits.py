@@ -454,3 +454,57 @@ def test_fetch_reads_the_index_twice(spark, fixture_t1):
     read = sum(s.inputRecords() for s in stages() if s.stageId() > before)
     assert res.would_extract.count() == 0
     assert read == 2 * raw_lines
+
+
+def test_dedup_clusters_runs_no_count_job(spark, monkeypatch):
+    """Each dedup_clusters round reads its change count from an
+    Observation on the round's checkpoint job, not from a count() job of
+    its own. A 12-node path needs at least 3 rounds."""
+    import pyspark.sql.classic.dataframe as classic
+
+    from commoncrawl_fetcher_lite_spark.operators.dedup import dedup_clusters
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(11)], "id_a long, id_b long"
+    )
+
+    def no_count(self):
+        raise AssertionError("dedup_clusters ran a count() job")
+
+    monkeypatch.setattr(classic.DataFrame, "count", no_count)
+    labels = {
+        r["doc_id"]: r["cluster_id"] for r in dedup_clusters(pairs).collect()
+    }
+    assert labels == {i: 0 for i in range(12)}
+
+
+def test_run_iteration_quota_cap_runs_no_job(
+    spark, fixture_t1, monkeypatch, tmp_path
+):
+    """run_iteration derives the literal quota cap from its
+    FrontierConfig and batch length, not from a first() over the
+    refilled token frame."""
+    import pyspark.sql.classic.dataframe as classic
+
+    from commoncrawl_fetcher_lite_spark.config import FrontierConfig
+    from commoncrawl_fetcher_lite_spark.frontier.checkpoint import SnapshotStore
+    from commoncrawl_fetcher_lite_spark.frontier.scheduler import (
+        bootstrap,
+        run_iteration,
+    )
+
+    store = SnapshotStore(str(tmp_path / "snap"), spark)
+    bootstrap(
+        store,
+        spark.read.parquet(f"{fixture_t1.root}/seeds.parquet").limit(500),
+        spark.read.parquet(f"{fixture_t1.root}/robots.parquet"),
+    )
+
+    def no_first(self):
+        raise AssertionError("run_iteration ran a first() job")
+
+    monkeypatch.setattr(classic.DataFrame, "first", no_first)
+    res = run_iteration(
+        store, FrontierConfig(n_salt=4, default_burst=0), batch_seconds=2.0
+    )
+    assert res.n_scheduled > 0

@@ -296,65 +296,17 @@ def test_extract_features_video_real(spark):
         _decode_real("f1", "video", fragmented, 16)
 
 
-def test_model_scorer_seam(spark):
-    """VERDICT r4 #4: lang_id/quality_features accept a batched model
-    scorer (mapInPandas shape) — the one-argument swap-in a production
-    fastText/KenLM-class deployment needs. The fake 'model' here checks
-    the batch contract: pandas input with [id_col, text], pandas output
-    matching the declared scorer fields, ids passed through."""
-    import pandas as pd
-
-    from commoncrawl_fetcher_lite_spark.operators.text import (
-        lang_id,
-        quality_features,
-    )
+def test_lang_id_plan_has_no_python_eval(spark):
+    """lang_id is pure Catalyst: its plan holds no Arrow/pandas Python
+    evaluation."""
+    from commoncrawl_fetcher_lite_spark.operators.text import lang_id
 
     docs = spark.createDataFrame(
         [(i, f"document number {i} with some words") for i in range(40)],
         "doc_id long, text string",
     )
-
-    def fake_lang_model(pdf: pd.DataFrame) -> pd.DataFrame:
-        assert list(pdf.columns) == ["doc_id", "text"]
-        # 'model': deterministic function of the text
-        return pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "pred_lang": pdf["text"].str.len().map(
-                    lambda n: "en" if n % 2 == 0 else "xx"
-                ),
-                "lang_score": pdf["text"].str.len() / 100.0,
-            }
-        )
-
-    out = lang_id(docs, scorer=fake_lang_model)
-    assert out.columns == ["doc_id", "pred_lang", "lang_score"]
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert len(rows) == 40
-    for i in range(40):
-        n = len(f"document number {i} with some words")
-        assert rows[i]["pred_lang"] == ("en" if n % 2 == 0 else "xx")
-        assert abs(rows[i]["lang_score"] - n / 100.0) < 1e-9
-
-    def fake_quality_model(pdf: pd.DataFrame) -> pd.DataFrame:
-        nw = pdf["text"].str.split().str.len()
-        return pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_chars_q": pdf["text"].str.len().astype("int32"),
-                "n_words": nw.astype("int32"),
-                "mean_word_len": pdf["text"].str.len() / nw,
-                "stopword_ratio": 0.0,
-                "punct_ratio": 0.0,
-                "quality_score": 0.5,
-            }
-        )
-
-    q = quality_features(docs, scorer=fake_quality_model)
-    assert q.columns[0] == "doc_id" and "quality_score" in q.columns
-    assert q.count() == 40
-    # default path (scorer=None) unchanged: pure Catalyst, no Python eval
-    plan = lang_id(docs)._sc._jvm.PythonSQLUtils.explainString(
-        lang_id(docs)._jdf.queryExecution(), "formatted"
+    out = lang_id(docs)
+    plan = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "formatted"
     )
     assert "ArrowEvalPython" not in plan and "mapInPandas" not in plan.lower()

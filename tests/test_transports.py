@@ -97,7 +97,6 @@ def test_config_matrix_s3():
     assert cfg.emit.kind == "s3"
     assert cfg.emit.bucket == "my-bucket"
     assert cfg.emit.prefix == "some-docs"
-    assert cfg.index_profile == "my-profile"
 
 
 def test_config_s3_docs_requires_bucket():
