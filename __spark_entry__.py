@@ -1488,7 +1488,7 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction: documents salted with a deterministic email, IPv4,
     and phone number, then scrubbed by the Catalyst regexp passes
-    (operators/html.py scrub_pii) — output keeps the redaction count."""
+    (operators/html.py scrub_documents) — output keeps the redaction count."""
     from commoncrawl_fetcher_lite_spark.operators.html import scrub_documents
 
     docs = _t(spark, sf_dir, "documents")

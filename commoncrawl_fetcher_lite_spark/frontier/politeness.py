@@ -13,9 +13,7 @@ README.md:169-172). Here politeness is PER-HOST and deterministic:
     the host_state table committed with the previous snapshot, and
     debit_tokens subtracts what was actually scheduled; the scheduler
     commits the new state with each snapshot. host_quota remains as the
-    stateless single-batch rule (same iteration-1 numbers). The streaming
-    twin (state store instead of snapshot table) is
-    streaming/host_state.stateful_host_quota.
+    stateless single-batch rule (same iteration-1 numbers).
   * priority: rank within host by (priority + recrawl_score) desc, then
     url for determinism; row_number <= quota emits.
   * skew: ranking windows partition by host — a hot host (Zipf rank 1 ≈ 20%

@@ -316,9 +316,10 @@ def run_iteration(
     if store.exists("host_rank"):
         carry.append("host_rank")  # the centrality prior persists too
 
-    # backoff state update: only when the fetch reports per-row success
-    # (fixture fetchers that return the batch unchanged leave the state
-    # untouched — no silent decay on iterations that never fetched).
+    # backoff state update: only when the fetch reports per-row success.
+    # A fetch without it (fixture fetchers that return the batch
+    # unchanged) writes no delta and the table carries forward as is;
+    # its rows still decay lazily by snapshot number at the next read.
     # backoff_delta emits rows ONLY for hosts tripped this batch (a
     # healthy host's halving is the lazy decay's halving — no row
     # needed), and the prune predicate drops recovered rows whenever the
@@ -330,6 +331,8 @@ def run_iteration(
             prev_backoff, fetched.select("host", "success"),
             new_snap=cur_snap + 1,
         )
+    elif prev_backoff is not None:
+        carry.append("host_backoff")
 
     # counts come from the lineage scan commit performs anyway — no extra
     # executions of the seen/frontier plans just to fill metrics

@@ -15,8 +15,6 @@ similarity.lsh_neardup_pairs) and _jaccard_pairs (the exact verify of
 verify_jaccard and both of incremental_neardup's pair sets).
 
 Scale notes per operator:
-  * exact_dedup: one hash-groupBy shuffle on a 16-byte key (md5) — the
-    canonical 100 TB dedup; AQE handles skew (identical docs cluster).
   * minhash_lsh_candidates ∘ verify_jaccard: explode(bands) + self-join
     on (band_id, band_hash) — shuffle keys are 16 bytes, join fan-out
     bounded by bucket sizes; exact verify only on candidates. This is the
@@ -96,22 +94,6 @@ def word_shingles(
             else gram_chain(toks, n),
             empty,
         ),
-    )
-
-
-# ------------------------------------------------------------ exact dedup
-
-
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Hash-groupBy exact dedup: one row per distinct content hash with the
-    kept (min) id and duplicate count."""
-    return (
-        docs.withColumn("content_hash", F.md5(F.col(text_col)))
-        .groupBy("content_hash")
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count(F.lit(1)).alias("n_dups"),
-        )
     )
 
 
@@ -407,13 +389,20 @@ def incremental_neardup(
             maybe_broadcast,
         )
 
+        if corpus_docs is None:
+            raise ValueError(
+                "incremental_neardup: corpus_docs required to verify "
+                "against a non-empty state (candidate shingle fetch)"
+            )
         # the batch bucket frame is the SMALL side of the state join by
         # construction (a day's crawl vs the whole corpus) — when stats
         # prove it under the broadcast threshold, the state side streams
         # map-side with ZERO state shuffle, making the probe O(state
         # scan) not O(state shuffle). Giant batches stay stats-gated to
         # a shuffle join (the checkpointed frame reports row-based
-        # stats, so the gate is accurate).
+        # stats, so the gate is accurate). The pairs feed both the
+        # matched-corpus semi-join and the verify: checkpointed, so the
+        # state is probed once (O(matched candidates) rows kept).
         a, s = buckets.alias("a"), state_buckets.alias("s")
         cand_state = (
             maybe_broadcast(a).join(
@@ -423,12 +412,8 @@ def incremental_neardup(
             )
             .select(F.col("s.id").alias("id_a"), F.col("a.id").alias("id_b"))
             .distinct()
+            .localCheckpoint(eager=True)
         )
-        if corpus_docs is None:
-            raise ValueError(
-                "incremental_neardup: corpus_docs required to verify "
-                "against a non-empty state (candidate shingle fetch)"
-            )
         # shingle ONLY the matched corpus docs: semi-join first, so the
         # 100 TB corpus contributes point reads, not a scan. The corpus
         # and batch shingle frames stay separate: a re-crawled doc can

@@ -102,23 +102,16 @@ _RE_IPV4 = r"\b(?:\d{1,3}\.){3}\d{1,3}\b"
 _RE_PHONE = r"\+?\b\d(?:[ .\-]?\d){8,14}\b"
 
 
-def scrub_pii(text: Column | str) -> Column:
-    """Replace emails, IPv4 addresses, and international-format phone
-    numbers with bracketed placeholder tokens. Email runs first so its
-    digits cannot be half-eaten by the phone pass; IP before phone so
-    dotted quads do not match the dotted-phone shape."""
-    c = F.col(text) if isinstance(text, str) else text
-    c = F.regexp_replace(c, _RE_EMAIL, "[EMAIL]")
-    c = F.regexp_replace(c, _RE_IPV4, "[IP]")
-    c = F.regexp_replace(c, _RE_PHONE, "[PHONE]")
-    return c
-
-
 def scrub_documents(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, scrubbed text, n_redactions) — redaction count lets a
     pipeline route PII-dense documents to review instead of training.
+
+    Emails, IPv4 addresses and international-format phone numbers become
+    bracketed placeholder tokens. Email runs first so its digits cannot
+    be half-eaten by the phone pass; IP before phone so dotted quads do
+    not match the dotted-phone shape.
 
     n_redactions counts PATTERN MATCHES at each replacement stage (on
     that stage's input, so each count sees exactly the text its replace
@@ -315,40 +308,3 @@ def boilerplate_blocks(
     )
     return out.withColumn("verdict", verdict)
 
-
-def extract_main_text(
-    docs: DataFrame,
-    html_col: str = "html",
-    id_col: str = "doc_id",
-    keep: tuple[str, ...] = ("good",),
-    **kwargs,
-) -> DataFrame:
-    """Reassemble each document from its kept blocks, in block order:
-    (doc_id, main_text, n_blocks_kept). One groupBy(doc_id) over the
-    map-only block frame — collect the (block_no, text) pairs, sort the
-    bounded per-doc array, join. Documents whose every block is
-    boilerplate still appear (main_text '')."""
-    blocks = boilerplate_blocks(docs, html_col, id_col, **kwargs)
-    kept = F.when(F.col("verdict").isin(*keep), 1).otherwise(0)
-    return (
-        blocks.withColumn("_keep", kept)
-        .groupBy("doc_id")
-        .agg(
-            F.sum("_keep").cast("int").alias("n_blocks_kept"),
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("_keep") == 1,
-                        F.struct(F.col("block_no"), F.col("text")),
-                    )
-                )
-            ).alias("_kept"),
-        )
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ", F.transform(F.col("_kept"), lambda s: s["text"])
-            ).alias("main_text"),
-            "n_blocks_kept",
-        )
-    )

@@ -1,53 +1,16 @@
-"""Multimodal column operators: opaque binary media + typed metadata.
+"""Multimodal column operator: opaque binary media + typed metadata.
 
 Media spans (the `media_ref`/binary payloads the extraction pipeline emits)
-are treated as opaque `binary` columns with typed metadata. The Spark-side
-plumbing — schema, partitioning, Arrow batch shape, UDF signatures — is
-real and tested. The decode layer is real wherever pure Python reaches:
-images via import-gated Pillow, WAV fully (stdlib), MP3/ID3 headers, mp4
-box structure (dims, stts frame count, mvhd duration) and webm EBML
-headers (dims, duration). Only genuine CODEC work — audio resample, video
-frame decode — is STUBBED behind `decode_stub=True` (deterministic fake)
-or raises NotImplementedError, because no codec libraries exist in this
-container; on a real cluster you drop Pillow/torchaudio/av calls into the
-marked spots without touching the plumbing.
-
-Scale design: media bytes stay in executor-side Arrow batches end to end
-(mapInPandas), repartitioned by media size bucket so one giant video can't
-skew a task; metadata extraction is a separate cheap column pass.
+are treated as opaque `binary` columns. `classify_media` is the cheap
+metadata pass over them — size, sha256 and a magic-byte kind — in pure
+Catalyst, so the payload bytes never leave the JVM.
 """
 
 from __future__ import annotations
 
-import hashlib
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("sha256", T.StringType()),
-        T.StructField("kind", T.StringType()),  # image|audio|video|other
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("duration_s", T.DoubleType()),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
-    ]
-)
 
 def classify_media(df: DataFrame, bytes_col: str = "payload", id_col: str = "media_id") -> DataFrame:
     """Cheap metadata pass: size, sha256, magic-byte kind. Pure Catalyst
@@ -70,427 +33,4 @@ def classify_media(df: DataFrame, bytes_col: str = "payload", id_col: str = "med
         F.length(b).cast("long").alias("n_bytes"),
         F.lower(F.sha2(b, 256)).alias("sha256"),
         kind.alias("kind"),
-    )
-
-
-def repartition_by_size(
-    df: DataFrame,
-    bytes_col: str = "payload",
-    n_buckets: int = 8,
-    n_salt: int = 64,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Skew guard: SPREAD huge payloads across tasks.
-
-    Partitioning by the size bucket alone would do the opposite — hash-route
-    every largest payload to the same task. Salting on a cheap content hash
-    (first 64 bytes + length, deterministic) spreads equal-size payloads
-    over n_salt tasks while keeping wildly different sizes from sharing a
-    task's memory budget. The partition count is EXPLICIT (defaults to the
-    session's shuffle partitions): an unnumbered repartition lets AQE
-    byte-coalesce, which is row-size-blind and would re-concentrate the
-    few-but-huge payload partitions this guard exists to spread."""
-    bucket = F.least(
-        F.lit(n_buckets - 1), (F.log2(F.length(bytes_col) + 1)).cast("int")
-    )
-    salt = F.pmod(
-        F.xxhash64(F.substring(F.col(bytes_col), 1, 64), F.length(bytes_col)),
-        F.lit(n_salt),
-    )
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    return df.repartition(num_partitions, bucket, salt)
-
-
-def extract_features(
-    df: DataFrame,
-    bytes_col: str = "payload",
-    id_col: str = "media_id",
-    kind_col: str = "kind",
-    decode_stub: bool = True,
-    feature_dim: int = 16,
-) -> DataFrame:
-    """Decode / feature-extract via mapInPandas over Arrow batches.
-
-    decode_stub=True → deterministic fake features (sha256-seeded floats)
-    with fake dimensions, exercising the full batch path. decode_stub=False
-    → import-gated real decode (same pattern as fetcher.make_s3_client):
-    Pillow for images when installed, else NotImplementedError at the
-    decode spot — clusters with codec libs get real features without
-    touching the plumbing."""
-    sel = df.select(
-        F.col(id_col).alias("media_id"),
-        F.col(kind_col).alias("kind"),
-        F.col(bytes_col).alias("payload"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if not decode_stub:
-                    rows.append(
-                        _decode_real(mid, kind, bytes(payload or b""), feature_dim)
-                    )
-                    continue
-                # -- deterministic fake decode (replace with real codecs) --
-                h = hashlib.sha256(bytes(payload or b"")).digest()
-                feat = [
-                    round((h[i % 32] / 255.0) * 2 - 1, 6) for i in range(feature_dim)
-                ]
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "kind": kind,
-                        "width": 16 + h[0] % 64 if kind == "image" else None,
-                        "height": 16 + h[1] % 64 if kind == "image" else None,
-                        "n_frames": 1 + h[2] % 30 if kind == "video" else None,
-                        "sample_rate": 8000 * (1 + h[3] % 6)
-                        if kind == "audio"
-                        else None,
-                        "duration_s": round(h[4] / 8.0, 3)
-                        if kind == "audio"
-                        else None,
-                        "feature": feat,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return sel.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def _load_pillow():
-    """Import-gated Pillow (separate function so tests can monkeypatch)."""
-    try:
-        from PIL import Image  # noqa: PLC0415
-
-        return Image
-    except ImportError:
-        return None
-
-
-def _parse_mp3_header(payload: bytes) -> tuple[int, float | None] | None:
-    """Pure-Python MP3 metadata (mutagen-style): skip an ID3v2 tag
-    (syncsafe size), find the first MPEG frame sync, decode sample rate +
-    (for MPEG1 Layer III constant-bitrate) an estimated duration. Returns
-    (sample_rate, duration_s|None), or None when no frame parses."""
-    off = 0
-    if payload[:3] == b"ID3" and len(payload) >= 10:
-        off = 10 + (
-            ((payload[6] & 0x7F) << 21)
-            | ((payload[7] & 0x7F) << 14)
-            | ((payload[8] & 0x7F) << 7)
-            | (payload[9] & 0x7F)
-        )
-    sr_table = {3: (44100, 48000, 32000), 2: (22050, 24000, 16000), 0: (11025, 12000, 8000)}
-    br_v1l3 = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-    i = off
-    while i + 4 <= len(payload):
-        if payload[i] == 0xFF and (payload[i + 1] & 0xE0) == 0xE0:
-            b1, b2 = payload[i + 1], payload[i + 2]
-            version = (b1 >> 3) & 0x3
-            layer = (b1 >> 1) & 0x3
-            br_idx = (b2 >> 4) & 0xF
-            sr_idx = (b2 >> 2) & 0x3
-            if version in sr_table and layer != 0 and sr_idx != 3 and br_idx not in (0, 15):
-                sr = sr_table[version][sr_idx]
-                dur = None
-                if version == 3 and layer == 1:  # MPEG1 Layer III CBR
-                    dur = (len(payload) - i) * 8.0 / (br_v1l3[br_idx] * 1000)
-                return sr, dur
-        i += 1
-    return None
-
-
-def _decode_wav(payload: bytes, feature_dim: int) -> tuple[int, float, list]:
-    """Genuine PCM WAV decode via the stdlib wave module: sample rate,
-    duration, and a feature of per-window RMS energies (mono-mixed,
-    peak-normalized to [-1, 1]) — a real, codec-free audio fingerprint."""
-    import io
-    import wave
-
-    import numpy as np
-
-    with wave.open(io.BytesIO(payload)) as w:
-        nch, sw, sr = w.getnchannels(), w.getsampwidth(), w.getframerate()
-        nframes = w.getnframes()
-        pcm = w.readframes(nframes)
-    dtype = {1: np.int8, 2: np.int16, 4: np.int32}.get(sw)
-    if dtype is None:
-        raise ValueError(f"unsupported WAV sample width {sw}")
-    x = np.frombuffer(pcm, dtype=dtype).astype(np.float64)
-    if nch > 1 and len(x):
-        x = x[: len(x) - len(x) % nch].reshape(-1, nch).mean(axis=1)
-    peak = float(np.max(np.abs(x))) if len(x) else 0.0
-    peak = peak or 1.0
-    feat = []
-    for seg in np.array_split(x, feature_dim):
-        rms = float(np.sqrt((seg * seg).mean())) if len(seg) else 0.0
-        feat.append(round(rms / peak * 2 - 1, 6))
-    return sr, nframes / float(sr or 1), feat
-
-
-def _iter_mp4_boxes(buf: bytes, start: int, end: int):
-    """Yield (type, payload_start, payload_end) for ISO-BMFF boxes in
-    buf[start:end]; handles 64-bit (size==1) and to-end (size==0) boxes."""
-    off = start
-    while off + 8 <= end:
-        size = int.from_bytes(buf[off : off + 4], "big")
-        btype = bytes(buf[off + 4 : off + 8])
-        hdr = 8
-        if size == 1:
-            if off + 16 > end:
-                return
-            size = int.from_bytes(buf[off + 8 : off + 16], "big")
-            hdr = 16
-        elif size == 0:
-            size = end - off
-        if size < hdr or off + size > end:
-            return
-        yield btype, off + hdr, off + size
-        off += size
-
-
-def _parse_mp4(payload: bytes):
-    """ISO-BMFF structural parse (no codec work): moov/mvhd → duration,
-    first video trak's tkhd → (width, height), its stbl/stts → frame
-    count. Returns (width, height, n_frames, duration_s) or None when no
-    moov is present (streaming-fragmented or truncated file)."""
-    buf = payload
-    timescale = duration = None
-    width = height = n_frames = None
-
-    def find_stts(s: int, e: int):
-        for t, cs, ce in _iter_mp4_boxes(buf, s, e):
-            if t == b"stts":
-                n = int.from_bytes(buf[cs + 4 : cs + 8], "big")
-                total = 0
-                for i in range(n):
-                    o = cs + 8 + i * 8
-                    if o + 8 > ce:
-                        break
-                    total += int.from_bytes(buf[o : o + 4], "big")
-                return total
-            if t in (b"mdia", b"minf", b"stbl"):
-                got = find_stts(cs, ce)
-                if got is not None:
-                    return got
-        return None
-
-    saw_moov = False
-    for t, s, e in _iter_mp4_boxes(buf, 0, len(buf)):
-        if t != b"moov":
-            continue
-        saw_moov = True
-        for ct, cs, ce in _iter_mp4_boxes(buf, s, e):
-            if ct == b"mvhd" and ce - cs >= 20:
-                v = buf[cs]
-                if v == 1:
-                    timescale = int.from_bytes(buf[cs + 20 : cs + 24], "big")
-                    duration = int.from_bytes(buf[cs + 24 : cs + 32], "big")
-                else:
-                    timescale = int.from_bytes(buf[cs + 12 : cs + 16], "big")
-                    duration = int.from_bytes(buf[cs + 16 : cs + 20], "big")
-            elif ct == b"trak" and width is None:
-                dims = frames = None
-                for tt, ts_, te in _iter_mp4_boxes(buf, cs, ce):
-                    if tt == b"tkhd":
-                        v = buf[ts_]
-                        woff = ts_ + (88 if v == 1 else 76)
-                        if woff + 8 <= te:
-                            w = int.from_bytes(buf[woff : woff + 4], "big") >> 16
-                            h = (
-                                int.from_bytes(buf[woff + 4 : woff + 8], "big")
-                                >> 16
-                            )
-                            if w and h:
-                                dims = (w, h)
-                    elif tt == b"mdia":
-                        frames = find_stts(ts_, te)
-                if dims is not None:  # the video track (audio tkhd dims are 0)
-                    width, height = dims
-                    n_frames = frames
-    if not saw_moov:
-        return None
-    dur_s = (
-        duration / timescale if duration is not None and timescale else None
-    )
-    return width, height, n_frames, dur_s
-
-
-def _ebml_vint(buf: bytes, off: int, strip: bool):
-    """Matroska variable-length int at buf[off]; returns (value, next_off)
-    or None. IDs keep the length-marker bit (strip=False), sizes drop it."""
-    if off >= len(buf):
-        return None
-    b0 = buf[off]
-    ln = next((i for i in range(1, 9) if b0 & (0x80 >> (i - 1))), None)
-    if ln is None or off + ln > len(buf):
-        return None
-    val = (b0 & ((0x80 >> (ln - 1)) - 1)) if strip else b0
-    for i in range(1, ln):
-        val = (val << 8) | buf[off + i]
-    return val, off + ln
-
-
-def _parse_webm(payload: bytes):
-    """Matroska/WebM EBML structural parse: Segment→Info gives
-    TimecodeScale+Duration, Tracks→TrackEntry→Video gives pixel dims.
-    Returns (width, height, duration_s) or None if no Segment parses.
-    Frame counting needs a Cluster walk — out of header-parse scope."""
-    import struct as _struct
-
-    CONTAINERS = {0x18538067, 0x1549A966, 0x1654AE6B, 0xAE, 0xE0}
-    scale = None
-    dur_units = None
-    width = height = None
-    found = False
-
-    def walk(s: int, e: int) -> None:
-        nonlocal scale, dur_units, width, height, found
-        off = s
-        while off < e:
-            rid = _ebml_vint(payload, off, strip=False)
-            if rid is None:
-                return
-            eid, off2 = rid
-            rsz = _ebml_vint(payload, off2, strip=True)
-            if rsz is None:
-                return
-            sz, body = rsz
-            end = min(e, body + sz)
-            if eid in CONTAINERS:
-                if eid == 0x18538067:
-                    found = True
-                walk(body, end)
-            elif eid == 0x2AD7B1:
-                scale = int.from_bytes(payload[body:end], "big")
-            elif eid == 0x4489 and end - body in (4, 8):
-                fmt = ">f" if end - body == 4 else ">d"
-                dur_units = _struct.unpack(fmt, payload[body:end])[0]
-            elif eid == 0xB0:
-                width = int.from_bytes(payload[body:end], "big")
-            elif eid == 0xBA:
-                height = int.from_bytes(payload[body:end], "big")
-            off = end
-
-    walk(0, len(payload))
-    if not found:
-        return None
-    dur_s = (
-        dur_units * (scale or 1_000_000) / 1e9 if dur_units is not None else None
-    )
-    return width, height, dur_s
-
-
-def _decode_real(mid: str, kind: str, payload: bytes, feature_dim: int) -> dict:
-    """Real decode for the kinds we have a library for; NotImplementedError
-    otherwise. Image path: Pillow open → (width, height) + a grayscale
-    thumbnail flattened to `feature_dim` floats in [-1, 1] — the standard
-    cheap visual fingerprint; swap in a real embedding model on clusters
-    that carry one. Audio path is pure-Python: WAV decodes fully (stdlib
-    wave + numpy RMS windows); MP3/ID3 parses real header metadata
-    (sample rate, CBR duration) with feature=None — the mutagen contract.
-    Video parses real container structure pure-Python (mp4 box walk →
-    dims/frames/duration; webm EBML → dims/duration) with feature=None;
-    FRAME decode genuinely needs av/ffmpeg and still raises."""
-    if kind == "audio":
-        if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-            sr, dur, feat = _decode_wav(payload, feature_dim)
-            return {
-                "media_id": mid,
-                "kind": kind,
-                "width": None,
-                "height": None,
-                "n_frames": None,
-                "sample_rate": sr,
-                "duration_s": round(dur, 6),
-                "feature": feat,
-            }
-        mp3 = _parse_mp3_header(payload)
-        if mp3 is not None:
-            sr, dur = mp3
-            return {
-                "media_id": mid,
-                "kind": kind,
-                "width": None,
-                "height": None,
-                "n_frames": None,
-                "sample_rate": sr,
-                "duration_s": round(dur, 6) if dur is not None else None,
-                "feature": None,  # waveform decode needs codec libs
-            }
-        raise NotImplementedError(
-            "audio container not recognized — only WAV/MP3 headers decode "
-            "without codec libs"
-        )
-    if kind == "image":
-        Image = _load_pillow()
-        if Image is None:
-            raise NotImplementedError(
-                "real image decode needs Pillow — not installed on this node"
-            )
-        import io
-        import math
-
-        img = Image.open(io.BytesIO(payload))
-        width, height = img.size
-        side = max(1, int(math.isqrt(feature_dim)))
-        thumb = img.convert("L").resize((side, side))
-        px = list(thumb.getdata())
-        feat = [round(p / 255.0 * 2 - 1, 6) for p in px]
-        feat = (feat + [0.0] * feature_dim)[:feature_dim]
-        return {
-            "media_id": mid,
-            "kind": kind,
-            "width": width,
-            "height": height,
-            "n_frames": None,
-            "sample_rate": None,
-            "duration_s": None,
-            "feature": feat,
-        }
-    if kind == "video":
-        if len(payload) >= 8 and payload[4:8] == b"ftyp":
-            parsed = _parse_mp4(bytes(payload))
-            if parsed is not None:
-                w, h, nf, dur = parsed
-                return {
-                    "media_id": mid,
-                    "kind": kind,
-                    "width": w,
-                    "height": h,
-                    "n_frames": nf,
-                    "sample_rate": None,
-                    "duration_s": round(dur, 6) if dur is not None else None,
-                    "feature": None,  # frame decode needs av/ffmpeg
-                }
-            raise NotImplementedError(
-                "mp4 has no moov box (fragmented/truncated) — full demux "
-                "needs av/ffmpeg"
-            )
-        if payload[:4] == b"\x1a\x45\xdf\xa3":
-            parsed = _parse_webm(bytes(payload))
-            if parsed is not None:
-                w, h, dur = parsed
-                return {
-                    "media_id": mid,
-                    "kind": kind,
-                    "width": w,
-                    "height": h,
-                    "n_frames": None,
-                    "sample_rate": None,
-                    "duration_s": round(dur, 6) if dur is not None else None,
-                    "feature": None,
-                }
-        raise NotImplementedError(
-            "video container not recognized — only mp4/webm headers parse "
-            "without av/ffmpeg"
-        )
-    raise NotImplementedError(
-        f"real decode for kind={kind!r} needs av/ffmpeg — not installed"
     )

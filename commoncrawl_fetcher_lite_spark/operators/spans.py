@@ -1,14 +1,13 @@
 """Operators over the north-rule interleaved document shape —
 (doc_id: string, spans: array<struct<kind:string, text:string,
 media_ref:string, offset:int>>) — the exact `input_hint` table the
-engine's fetch pipeline lands (schema.py:SPAN_SCHEMA, assembled by
-sources/warc.py span extraction; per-row span-sequence equality against
+engine's fetch pipeline lands (assembled by sources/warc.py span
+extraction; per-row span-sequence equality against
 the reference is the core parity invariant, tests/test_pipeline_parity).
 
 Everything here is pure Catalyst array/struct HOFs (transform / filter /
-array_sort / aggregate) — the spans column never explodes unless the
-operator's OUTPUT is span-grained (media_manifest), so doc-grained
-consumers stay inside one map-only scan stage at 100 TB.
+array_sort / aggregate) — the spans column never explodes, so
+doc-grained consumers stay inside one map-only scan stage at 100 TB.
 
 Reference parity: the reference emits spans implicitly in document order
 (FileFromCCWarcExtractor.java:101-152 — first-WARC-record payload, then
@@ -18,7 +17,7 @@ the reference never needed because it stopped at files on disk.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -52,9 +51,12 @@ def spans_text(spans: Column | str = "spans", sep: str = "") -> Column:
 
 
 def span_stats_expr(spans: Column | str = "spans") -> Column:
-    """The span_stats struct as a let-bound Column — compose it into a
-    wider projection (stats + reassembled text + manifest in ONE map
-    stage) instead of deriving separate doc-grained frames and paying a
+    """Per-document span shape as a let-bound struct Column: (n_spans,
+    n_text, n_media, text_chars, order_ok). `order_ok` asserts the
+    reference's span-order invariant — offsets are exactly the contiguous
+    run 0..n-1 (any gap, duplicate, or negative offset fails). Compose it
+    into a wider projection (stats + reassembled text in ONE map stage)
+    instead of deriving separate doc-grained frames and paying a
     self-join to glue them back (the plan q_span_assembly shipped with
     before round 6 polish)."""
     from commoncrawl_fetcher_lite_spark.functions.letbind import let
@@ -93,34 +95,3 @@ def span_stats_expr(spans: Column | str = "spans") -> Column:
 
     return let(c, _stats)
 
-
-def span_stats(
-    docs: DataFrame, spans_col: str = "spans", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document span shape: (id, n_spans, n_text, n_media,
-    text_chars, order_ok). `order_ok` asserts the reference's span-order
-    invariant — offsets are exactly the contiguous run 0..n-1 (any
-    gap, duplicate, or negative offset fails). One map-only projection."""
-    return docs.select(
-        F.col(id_col), F.inline(F.array(span_stats_expr(spans_col)))
-    )
-
-
-def media_manifest(
-    docs: DataFrame, spans_col: str = "spans", id_col: str = "doc_id"
-) -> DataFrame:
-    """One row per media span in document order: (id, offset, media_ref)
-    — the sidecar a media-fetch/decode stage (operators/multimodal.py)
-    or a CDN warm-up job consumes. Explodes ONLY the media spans (the
-    filter runs inside the scan before the explode fans out), so a
-    text-heavy corpus pays rows ≈ media count, not span count."""
-    return docs.select(
-        F.col(id_col),
-        F.explode(
-            F.filter(F.col(spans_col), lambda s: s["kind"] == "media")
-        ).alias("_m"),
-    ).select(
-        id_col,
-        F.col("_m.offset").alias("offset"),
-        F.col("_m.media_ref").alias("media_ref"),
-    )

@@ -1,5 +1,5 @@
-"""Text analysis operators: language-ID heuristic, quality scoring, token
-counting, document fingerprinting. Pure Catalyst expressions, so they run
+"""Text analysis operators: language-ID heuristic, token counting,
+document fingerprinting. Pure Catalyst expressions, so they run
 inside whole-stage codegen over 100 TB text scans — except the Gopher
 gates (gopher_quality, gopher_gate, repetition_signals). Their n-gram
 counts need chains of higher-order functions, which Spark cannot compile
@@ -88,53 +88,6 @@ def bpe_ish_token_count(text_col: str | Column) -> Column:
         lambda acc, p: acc + F.greatest(F.ceil(F.length(p) / 6).cast("int") - 1, F.lit(0)),
     )
     return F.size(pieces) + extras
-
-
-def quality_features(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Length / punctuation / stopword features + a composite score.
-
-    Built as one let-bound struct emitted through F.inline so the token
-    array is computed exactly once per row (see functions/letbind.py)."""
-    from commoncrawl_fetcher_lite_spark.functions.letbind import let
-
-    t = F.col(text_col)
-
-    def _features(toks):
-        n_words = F.size(toks)
-        n_stop = F.size(F.filter(toks, lambda w: w.isin(STOPWORDS)))
-        n_punct = F.length(F.regexp_replace(t, r"[^\p{Punct}]", ""))
-        mean_word_len = F.aggregate(
-            toks, F.lit(0), lambda acc, w: acc + F.length(w)
-        ) / n_words
-        stop_ratio = n_stop.cast("double") / n_words
-        punct_ratio = n_punct.cast("double") / F.length(t)
-        score = F.when(n_words < 5, 0.0).otherwise(
-            F.least(F.lit(1.0), n_words / F.lit(100.0)) * 0.4
-            + F.least(F.lit(1.0), stop_ratio * 5) * 0.4
-            + (1 - F.least(F.lit(1.0), punct_ratio * 10)) * 0.2
-        )
-        return F.struct(
-            F.length(t).alias("n_chars_q"),
-            n_words.alias("n_words"),
-            F.round(mean_word_len, 4).alias("mean_word_len"),
-            F.round(stop_ratio, 4).alias("stopword_ratio"),
-            F.round(punct_ratio, 4).alias("punct_ratio"),
-            F.round(score, 4).alias("quality_score"),
-        )
-
-    from commoncrawl_fetcher_lite_spark.functions.letbind import (
-        spread_for_compute,
-    )
-
-    # spread before the per-row feature pass (r7): a small-file scan
-    # arrives as 1-2 partitions and would run this map stage on 1-2 cores
-    return spread_for_compute(docs).select(
-        id_col, F.inline(F.array(let(tokens(text_col), _features)))
-    )
 
 
 def lang_id(

@@ -40,29 +40,40 @@ from typing import Iterable
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from commoncrawl_fetcher_lite_spark.schema import CDX_JSON_SCHEMA
+# Wire-format JSON schema: the reference binds CDX JSON into a 12-field
+# POJO with all-nullable fields (CCIndexRecord.java:47-58) and the CC
+# index JSON stores every value as a string, so we parse once at ingest
+# against this string-typed schema and cast in the projection. Keys are
+# the CC kebab-case names (CCIndexRecord.java:38 kebab binding). `offset`
+# is cast to bigint where the reference uses Integer (CCIndexRecord.java:53)
+# — documented divergence: int would overflow >2 GiB compound WARCs.
+CDX_JSON_SCHEMA = T.StructType(
+    [
+        T.StructField(k, T.StringType())
+        for k in (
+            "url",
+            "mime",
+            "mime-detected",
+            "status",
+            "digest",
+            "length",
+            "offset",
+            "filename",
+            "charset",
+            "languages",
+            "truncated",
+            "redirect",
+        )
+    ]
+)
 
 # Known CC index JSON keys — the CCIndexRecord POJO binding surface.
 # Strict Jackson (default ObjectMapper, CCIndexRecord.java:45) fails on any
 # other key; we reproduce that with a key-set check.
-KNOWN_JSON_KEYS = frozenset(
-    [
-        "url",
-        "mime",
-        "mime-detected",
-        "status",
-        "digest",
-        "length",
-        "offset",
-        "filename",
-        "charset",
-        "languages",
-        "truncated",
-        "redirect",
-    ]
-)
+KNOWN_JSON_KEYS = frozenset(CDX_JSON_SCHEMA.fieldNames())
 
 INDEX_PATH_RE = r"indexes/cdx-\d{5}\.gz$"  # IndexIterator.java:142
 
@@ -312,8 +323,3 @@ def parse_cdx(lines: DataFrame, with_repair: bool = True) -> DataFrame:
         "line_no",
     )
 
-
-def read_cdx_records(
-    spark: SparkSession, index_paths: list[str], with_repair: bool = True
-) -> DataFrame:
-    return parse_cdx(read_cdx_lines(spark, index_paths), with_repair)

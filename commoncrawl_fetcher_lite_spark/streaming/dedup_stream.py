@@ -1,8 +1,8 @@
 """Streaming exact-dedup ledger: content-digest counts as a stateful
 Structured-Streaming aggregation.
 
-The batch engine dedups with one hash-groupBy (`operators/dedup.py:
-exact_dedup`); continuous ingest wants the same ledger maintained as
+Batch exact dedup is one hash-groupBy on md5(text) (the `dedup_exact`
+query); continuous ingest wants the same ledger maintained as
 documents ARRIVE — each micro-batch folds its digests into streaming
 aggregation state, so the running (digest, n_docs) table is always the
 answer batch would give over everything ingested so far. That
@@ -49,7 +49,7 @@ def streaming_digest_counts(
     docs_stream: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """Stateful (digest, n_docs) aggregation over a document stream —
-    the streaming twin of exact_dedup's hash-groupBy."""
+    the streaming twin of the batch md5(text) hash-groupBy."""
     return (
         docs_stream.select(F.md5(F.col(text_col)).alias("digest"))
         .groupBy("digest")

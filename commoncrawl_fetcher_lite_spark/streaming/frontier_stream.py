@@ -1,71 +1,17 @@
-"""Structured-Streaming front door for the frontier.
+"""Structured-Streaming monitoring for the frontier.
 
 The reference is strictly batch (bounded queues, no watermarks/state —
 CCFileExtractor.java:74-114), and the engine's core loop is iterative batch
-over snapshots (SURVEY §2.12). Streaming is the continuous-ingest sugar on
-top: new seed files land in a directory (or arrive on any streaming
-source), and each micro-batch runs the SAME batch scheduling plan via
-foreachBatch — so streaming and batch share one code path and one
-correctness story. Trigger.AvailableNow drains everything pending then
-stops, which is exactly the frontier-iteration semantic.
-
-Also provides a watermarked fetch-metrics aggregation (per-host scheduled
-counts over event-time windows) as the late-data-tolerant monitoring
-stream.
+over snapshots (SURVEY §2.12). This module holds the watermarked
+fetch-metrics aggregation (per-host scheduled counts over event-time
+windows) as the late-data-tolerant monitoring stream; the stream it reads
+comes from `dedup_stream.stream_documents`, the one file-source reader.
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from commoncrawl_fetcher_lite_spark.schema import SEEDS_SCHEMA
-
-
-def stream_seeds(
-    spark: SparkSession,
-    seeds_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-source stream of seed parquet files."""
-    reader = spark.readStream.schema(SEEDS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(seeds_dir)
-
-
-def run_frontier_stream(
-    spark: SparkSession,
-    seeds_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    process_batch: Callable[[DataFrame, int], DataFrame],
-    available_now: bool = True,
-):
-    """foreachBatch bridge: every micro-batch of newly-arrived seeds runs
-    the caller's batch plan (typically urlseen filter + schedule_batch) and
-    appends results to `out_dir`. Exactly-once via the streaming checkpoint
-    + idempotent parquet append per batchId."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        out = process_batch(batch_df, batch_id)
-        (
-            out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
-    writer = (
-        stream_seeds(spark, seeds_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    return q
 
 
 def host_rate_metrics(

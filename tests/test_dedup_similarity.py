@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from commoncrawl_fetcher_lite_spark.operators.dedup import (
     embedding_neardup_pairs,
-    exact_dedup,
     minhash_lsh_candidates,
     ngram_jaccard_pairs,
     simhash_neardup_pairs,
@@ -45,15 +44,6 @@ def neardup_docs(spark):
         rows.append((doc_id, " ".join(v2)))  # 2-edit near-dup
         doc_id += 1
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_dedup(spark):
-    df = spark.createDataFrame(
-        [(1, "same text"), (2, "same text"), (3, "other")],
-        "doc_id long, text string",
-    )
-    out = {r["keep_id"]: r["n_dups"] for r in exact_dedup(df).collect()}
-    assert out == {1: 2, 3: 1}
 
 
 def test_ngram_jaccard_exact(spark, neardup_docs):

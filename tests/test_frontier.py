@@ -1025,6 +1025,53 @@ def test_backoff_lazy_decay_and_prune(spark, tmp_path):
     assert res3.n_scheduled == 8
 
 
+def test_backoff_carried_over_fetch_without_success(spark, tmp_path):
+    """An iteration whose fetch reports no `success` column writes no
+    backoff delta and carries the table forward, so a backed-off host
+    stays throttled (lazy decay by snapshot number still applies)."""
+    from commoncrawl_fetcher_lite_spark.config import FrontierConfig
+    from commoncrawl_fetcher_lite_spark.frontier import scheduler
+    from commoncrawl_fetcher_lite_spark.frontier.checkpoint import SnapshotStore
+
+    rows = [
+        (f"https://bad.example.com/p{i}", "bad.example.com", 1.0, None, 0.0)
+        for i in range(40)
+    ]
+    seeds = spark.createDataFrame(
+        rows,
+        "url string, host string, priority double, "
+        "discovered_ts timestamp, recrawl_score double",
+    )
+    store = SnapshotStore(str(tmp_path / "snap"), spark)
+    scheduler.bootstrap(store, seeds)
+    report = {"success": True}
+
+    def fetch(batch):
+        if report["success"]:
+            return batch.select("url", "host", F.lit(False).alias("success"))
+        return batch.select("url", "host")
+
+    # full quota is 8 every iteration: the 8/s refill over a 1 s batch
+    # always restores the burst of 8
+    cfg = FrontierConfig(
+        default_burst=8, default_max_per_batch=8, default_tokens_per_sec=8.0
+    )
+    runs = [scheduler.run_iteration(store, cfg, batch_seconds=1.0, fetch_fn=fetch)
+            for _ in range(2)]  # all fail: mult 2 at snap 1, 4 at snap 2
+    assert [r.n_scheduled for r in runs] == [8, 4]
+
+    report["success"] = False
+    res3 = scheduler.run_iteration(store, cfg, batch_seconds=1.0, fetch_fn=fetch)
+    assert res3.n_scheduled == 2  # 8 // 4
+    assert store.exists("host_backoff")
+    assert [(r.backoff_mult, r.snap_set)
+            for r in store.read("host_backoff").collect()] == [(4.0, 2)]
+
+    # snap 3 reads max(1, 4 / 2^(3-2)) = 2: still throttled, not full rate
+    res4 = scheduler.run_iteration(store, cfg, batch_seconds=1.0, fetch_fn=fetch)
+    assert res4.n_scheduled == 4
+
+
 def _per_host_seeds(spark, per_host, hosts=6):
     rows = [
         (f"https://h{h}.example.com/p{i:03d}", f"h{h}.example.com",

@@ -311,32 +311,6 @@ def test_boilerplate_blocks_verdicts(spark):
     assert good["stop_density"] >= 0.25 and good["link_density"] == 0.0
 
 
-def test_extract_main_text_keeps_prose_in_order(spark):
-    from commoncrawl_fetcher_lite_spark.operators.html import (
-        extract_main_text,
-    )
-
-    html = (
-        "<p>The first of the good parts is right here in the text.</p>"
-        '<div><a href="/">pure nav link block</a></div>'
-        "<p>And the second of the good parts follows it to the end.</p>"
-    )
-    df = spark.createDataFrame(
-        [(7, html), (8, '<div><a href="/">only nav on this page</a></div>')],
-        "doc_id long, html string",
-    )
-    got = {
-        r["doc_id"]: (r["main_text"], r["n_blocks_kept"])
-        for r in extract_main_text(df).collect()
-    }
-    assert got[7] == (
-        "The first of the good parts is right here in the text. "
-        "And the second of the good parts follows it to the end.",
-        2,
-    )
-    assert got[8] == ("", 0)  # all-boilerplate docs still appear
-
-
 def test_boilerplate_blocks_map_only(spark):
     """The block classifier is scan-side: zero Exchange in its plan."""
     from commoncrawl_fetcher_lite_spark.operators.html import (

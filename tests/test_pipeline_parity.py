@@ -19,7 +19,8 @@ from commoncrawl_fetcher_lite_spark.fixtures import warc_local_path
 from commoncrawl_fetcher_lite_spark.plans.fetch_pipeline import run_fetch
 from commoncrawl_fetcher_lite_spark.sources.cdx import (
     expand_index_paths,
-    read_cdx_records,
+    parse_cdx,
+    read_cdx_lines,
 )
 from tests import oracle
 
@@ -50,7 +51,7 @@ def test_expand_index_paths(fixture_t1):
 def test_parse_parity(spark, fixture_t1):
     """Engine parse (P1-P3) row set == oracle parse over the same lines."""
     fx = fixture_t1
-    recs = read_cdx_records(spark, fx.index_paths)
+    recs = parse_cdx(read_cdx_lines(spark, fx.index_paths))
     got = {
         (r["index_file_seq"], r["line_no"]): (r["url"], r["mime_detected"], r["status"])
         for r in recs.collect()
@@ -265,7 +266,7 @@ def test_extract_payloads_warn_and_skip(spark, fixture_t1):
     from commoncrawl_fetcher_lite_spark.sources.warc import extract_payloads
 
     fx = fixture_t1
-    recs = read_cdx_records(spark, fx.index_paths).where(
+    recs = parse_cdx(read_cdx_lines(spark, fx.index_paths)).where(
         "status = 200 AND filename IS NOT NULL"
     )
     n_all = extract_payloads(
@@ -298,7 +299,7 @@ def test_extract_payloads_systematic_bug_fails_task(spark, fixture_t1):
     from commoncrawl_fetcher_lite_spark.sources.warc import extract_payloads
 
     fx = fixture_t1
-    recs = read_cdx_records(spark, fx.index_paths).where(
+    recs = parse_cdx(read_cdx_lines(spark, fx.index_paths)).where(
         "status = 200 AND filename IS NOT NULL"
     )
 

@@ -1,4 +1,4 @@
-"""CountMimes pipeline parity, index mirror, streaming frontier, CLI."""
+"""CountMimes pipeline parity, index mirror, streaming host metrics, CLI."""
 
 from __future__ import annotations
 
@@ -7,9 +7,6 @@ import json
 import os
 import subprocess
 import sys
-import time
-
-from pyspark.sql import functions as F
 
 from commoncrawl_fetcher_lite_spark.config import ExtractorConfig
 from commoncrawl_fetcher_lite_spark.plans.mime_pipeline import (
@@ -76,61 +73,27 @@ def test_mirror_indices(spark, fixture_t1, tmp_path):
     assert all(m["skipped"] for m in manifest2)
 
 
-def test_streaming_frontier(spark, fixture_t1, tmp_path):
-    """availableNow micro-batch drains pending seed files through the batch
-    scheduling plan; restart picks up only NEW files (checkpointed)."""
-    from commoncrawl_fetcher_lite_spark.frontier.politeness import schedule_batch
-    from commoncrawl_fetcher_lite_spark.streaming.frontier_stream import (
-        run_frontier_stream,
-    )
-
-    seeds = spark.read.parquet(f"{fixture_t1.root}/seeds.parquet").limit(500)
-    seeds_dir = str(tmp_path / "seeds_in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    seeds.coalesce(1).write.mode("overwrite").parquet(seeds_dir)
-
-    def process(batch_df, batch_id):
-        quotas = batch_df.sparkSession.createDataFrame([], "host string, quota int")
-        return schedule_batch(
-            batch_df.dropDuplicates(["url"]), quotas, default_quota=50, n_salt=4
-        ).select("url", "host", "host_rank")
-
-    q = run_frontier_stream(spark, seeds_dir, out_dir, ckpt, process)
-    q.awaitTermination(120)
-    first = spark.read.parquet(out_dir)
-    n1 = first.count()
-    assert n1 > 0
-    assert set(first.columns) == {"url", "host", "host_rank", "batch_id"}
-
-    # drop a second seed file; re-run: only the new file is processed
-    seeds2 = seeds.withColumn("url", F.concat(F.col("url"), F.lit("?v=2")))
-    seeds2.coalesce(1).write.mode("append").parquet(seeds_dir)
-    q2 = run_frontier_stream(spark, seeds_dir, out_dir, ckpt, process)
-    q2.awaitTermination(120)
-    out = spark.read.parquet(out_dir)
-    assert out.count() > n1
-    assert out.where(~F.col("url").contains("?v=2")).count() == n1
-
-
 def test_streaming_host_rate_metrics(spark, tmp_path):
+    from commoncrawl_fetcher_lite_spark.streaming.dedup_stream import (
+        stream_documents,
+    )
     from commoncrawl_fetcher_lite_spark.streaming.frontier_stream import (
         host_rate_metrics,
-        stream_seeds,
     )
 
     from datetime import datetime
 
     seeds_dir = str(tmp_path / "s")
-    spark.createDataFrame(
+    seeds = spark.createDataFrame(
         [
             ("u1", "h1", 1.0, datetime(2024, 1, 1, 0, 0, 10), 0.0),
             ("u2", "h1", 1.0, datetime(2024, 1, 1, 0, 0, 20), 0.0),
             ("u3", "h2", 1.0, datetime(2024, 1, 1, 0, 5, 0), 0.0),
         ],
         "url string, host string, priority double, discovered_ts timestamp, recrawl_score double",
-    ).coalesce(1).write.parquet(seeds_dir)
-    agg = host_rate_metrics(stream_seeds(spark, seeds_dir))
+    )
+    seeds.coalesce(1).write.parquet(seeds_dir)
+    agg = host_rate_metrics(stream_documents(spark, seeds_dir, seeds.schema))
     q = (
         agg.writeStream.format("memory")
         .queryName("rates")

@@ -416,6 +416,65 @@ def test_incremental_neardup_corpus_side_is_semi_gated(spark):
     assert "band_hash" in plan  # candidate join keyed on the band pair
 
 
+
+def test_incremental_neardup_scans_state_once(spark, tmp_path):
+    """The batch-vs-state candidate pairs feed both the matched-corpus
+    semi-join and the verify; they are materialized once, so a parquet
+    state table is scanned once in all — counted over the SQL executions
+    incremental_neardup runs and the formatted plan of its dup output.
+    The scan that runs is a hash equi-join probe on the band pair."""
+    import re
+
+    from commoncrawl_fetcher_lite_spark.operators.dedup import (
+        incremental_neardup,
+        lsh_bucket_frame,
+    )
+
+    docs = spark.range(40).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ",
+            *[F.concat(F.lit(f"w{i}x"), (F.col("id") % 7).cast("string"))
+              for i in range(12)],
+        ).alias("text"),
+    )
+    corpus = docs.where("doc_id % 2 = 0")
+    batch = docs.where("doc_id % 2 = 1")
+    path = str(tmp_path / "state")
+    lsh_bucket_frame(corpus, bands=8, num_perm=32).write.parquet(path)
+    state_scan = re.compile(
+        r"^\(\d+\) Scan parquet.*\n(?:.*\n){0,3}"
+        r"Location: InMemoryFileIndex \[file:" + re.escape(path) + r"\]",
+        re.M,
+    )
+
+    sc = spark.sparkContext
+    status = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        seq = status.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    dups, _ = incremental_neardup(
+        batch, spark.read.parquet(path), corpus, bands=8, num_perm=32,
+        threshold=0.5,
+    )
+    ran = [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() > before
+    ]
+    probes = [p for p in ran if state_scan.search(p)]
+    assert sum(len(state_scan.findall(p)) for p in ran + [_plan(dups)]) == 1
+    assert all(
+        "band_hash" in p and "NestedLoop" not in p and "Cartesian" not in p
+        for p in probes
+    )
+    assert dups.count() == 20  # each odd doc duplicates an even one
+
+
 def test_fetch_reads_the_index_twice(spark, fixture_t1):
     """run_fetch with a maxRecords budget reads every index gzip twice in
     all: once for the per-file stats, once for the parse. Measured as the

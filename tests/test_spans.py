@@ -6,9 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from commoncrawl_fetcher_lite_spark.operators.spans import (
-    media_manifest,
     sorted_spans,
-    span_stats,
+    span_stats_expr,
     spans_text,
 )
 
@@ -55,17 +54,17 @@ def test_spans_text_reassembles_in_offset_order(spark):
 
 
 def test_span_stats_shape_and_order_invariant(spark):
-    got = {r.doc_id: r for r in span_stats(_docs(spark)).collect()}
+    got = {
+        r.doc_id: r
+        for r in _docs(spark)
+        .select("doc_id", F.inline(F.array(span_stats_expr("spans"))))
+        .collect()
+    }
     assert (got["a"].n_spans, got["a"].n_text, got["a"].n_media) == (3, 2, 1)
     assert got["a"].text_chars == 11
     assert got["a"].order_ok  # 0,1,2 contiguous (sorted first)
     assert not got["d"].order_ok  # 0,2 has a gap
     assert got["e"].n_spans == 0 and got["e"].order_ok  # vacuous
-
-
-def test_media_manifest_media_only_rows(spark):
-    rows = sorted(map(tuple, media_manifest(_docs(spark)).collect()))
-    assert rows == [("a", 1, "img://a/1"), ("c", 0, "img://c/1")]
 
 
 def test_sorted_spans_is_stable_by_offset(spark):
